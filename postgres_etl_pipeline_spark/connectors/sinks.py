@@ -215,7 +215,8 @@ def _swap_into_place(
         raise IOError(
             f"rename {tmp_path} -> {target_path} failed; merged data at {tmp_path}"
         )
-    return spark.read.parquet(target_path)
+    # the schema just written: no footer-inference job on the read-back
+    return spark.read.schema(df.schema).parquet(target_path)
 
 
 def upsert_parquet(

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schemas import TXN_SCHEMA
+from .session import local_frame
 
 SKUS = ("SKU-APPLE", "SKU-MILK", "SKU-BREAD", "SKU-COFFEE", "SKU-RICE")
 PRICES_CENTS = (199, 299, 399, 599, 899)
@@ -132,7 +133,7 @@ def transactions_df(
         | {"unit_price_cents": txn.get("unit_price_cents", txn.get("unit_price"))}
         for txn in payload["transactions"]
     ]
-    return spark.createDataFrame(rows, TXN_SCHEMA).withColumn(
+    return local_frame(spark, rows, TXN_SCHEMA).withColumn(
         "run_id", F.lit(run_id)
     )
 
@@ -198,13 +199,17 @@ DIM_PRODUCTS_ROWS = [
 
 
 def dim_store(spark: SparkSession) -> DataFrame:
-    df = spark.createDataFrame(
-        DIM_STORES_ROWS, ["store_id", "store_name", "region", "opened_date"]
+    df = local_frame(
+        spark,
+        DIM_STORES_ROWS,
+        "store_id string, store_name string, region string, opened_date string",
     )
     return df.withColumn("opened_date", F.to_date("opened_date"))
 
 
 def dim_product(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        DIM_PRODUCTS_ROWS, ["sku", "category", "product_name", "is_perishable"]
+    return local_frame(
+        spark,
+        DIM_PRODUCTS_ROWS,
+        "sku string, category string, product_name string, is_perishable boolean",
     )

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .text import fingerprint, normalize_ws, tokens
 
 # Fixed affine-permutation constants for MinHash (deterministic across runs
@@ -1498,8 +1499,8 @@ def multipass_snm_pairs(
     distinct before verification means a pair found by BOTH passes is
     verified once, not twice.
     """
-    empty = df.sparkSession.createDataFrame(
-        [], "doc_a long, doc_b long, jaccard double"
+    empty = local_frame(
+        df.sparkSession, [], "doc_a long, doc_b long, jaccard double"
     )
     cand = None
     for key in keys:

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import arrow_schema, local_frame
+
 # Deterministic hyperplanes for sign-LSH, generated once from a fixed seed
 # (numpy default_rng(7), 8 planes × 64 dims) and frozen as literals so Spark
 # and any oracle share them. Values rounded to 6 dp — plenty for sign tests.
@@ -73,64 +75,22 @@ def _check_codebook_scale(codebook, scale: int, caller: str) -> None:
         )
 
 
-def _tiny_df(spark, data, schema) -> DataFrame:
-    """A driver-local DataFrame backed by a SINGLE-slice RDD.
-
-    ``spark.createDataFrame(data, schema)`` slices local data into
-    ``defaultParallelism`` Python partitions (32 on local[32]); a
-    ``.coalesce(1)`` before a sidecar write then evaluates all 32 in ONE
-    task, each paying a serial Python-worker round-trip — measured 6.5 s
-    for a 1-row write vs 0.4 s with one slice (guide §4: the boundary
-    cost is per-partition, not per-row). Sidecars are a handful of rows,
-    so one slice is also the right output layout (one file, no coalesce
-    needed)."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(data, numSlices=1), schema
-    )
-
-
 # ---------------------------------------------------------------------------
-# Driver-side sidecar I/O (round 14, verdict r13 items 2/4). The index
-# sidecars (_centroids, _meta, _codebook) are BOUNDED driver metadata — a
-# few KB that every maintenance op and search reads, and that builds/swaps
-# write from driver-local lists. Round 13 cut their cost from 32 Python
-# slices to one (_tiny_df), but each read/write was still a Spark JOB:
-# ~0.2-0.4 s of scheduling floor per op at local[32], multiplied by the
-# 6-11 ops a lifecycle entry runs. Guide §5: the driver should do no DATA
-# work — but bounded metadata is exactly what it should handle. These
-# helpers move the bytes through the Hadoop FileSystem API (the same
-# handle every rename/lease op here already uses, so any scheme Spark can
-# reach — file://, hdfs://, s3a:// — works identically) and parse/emit
-# parquet with pyarrow on the driver: no job, ~20-50 ms. The files are
-# ordinary parquet: Spark-written sidecars (older layouts, tests) read
-# fine, and Spark reads what pyarrow wrote (verified both ways).
+# Driver-side sidecar I/O. The index sidecars (_centroids, _meta,
+# _codebook) are BOUNDED driver metadata — a few KB that every maintenance
+# op and search reads, and that builds/swaps write from driver-local lists.
+# A Spark read or write of them costs a job each (~0.2-0.4 s of scheduling
+# floor), multiplied by the 6-11 ops a lifecycle entry runs. Guide §5: the
+# driver should do no DATA work — but bounded metadata is exactly what it
+# should handle. These helpers move the bytes through the Hadoop FileSystem
+# API (the same handle every rename/lease op here already uses, so any
+# scheme Spark can reach — file://, hdfs://, s3a:// — works identically)
+# and parse/emit parquet with pyarrow on the driver: no job, ~20-50 ms. The
+# files are ordinary parquet: Spark-written sidecars (older layouts, tests)
+# read fine, and Spark reads what pyarrow wrote (verified both ways). Their
+# Arrow types come from the sidecar DDL through the same Spark mapping
+# local frames use (:func:`session.arrow_schema`).
 # ---------------------------------------------------------------------------
-
-_SIDECAR_ARROW_TYPES: dict[str, "object"] = {}
-
-
-def _sidecar_arrow_schema(ddl: str):
-    """The pyarrow schema for one of this module's sidecar DDL strings.
-    Deliberately supports ONLY the types the sidecars use (int, long,
-    double, array<double>, array<long>) — anything else is a programming
-    error, not a case to guess at."""
-    import pyarrow as pa
-
-    if not _SIDECAR_ARROW_TYPES:
-        _SIDECAR_ARROW_TYPES.update(
-            {
-                "int": pa.int32(),
-                "long": pa.int64(),
-                "double": pa.float64(),
-                "array<double>": pa.list_(pa.float64()),
-                "array<long>": pa.list_(pa.int64()),
-            }
-        )
-    fields = []
-    for part in ddl.split(","):
-        name, _, typ = part.strip().partition(" ")
-        fields.append(pa.field(name, _SIDECAR_ARROW_TYPES[typ.strip()]))
-    return pa.schema(fields)
 
 
 def _fs_read_bytes(spark, fs, jpath, pos=None, length=None) -> bytes:
@@ -165,7 +125,7 @@ def _read_tiny_sidecar(spark, path: str, ddl: str):
     p = hp(path)
     if not fs.exists(p):
         raise FileNotFoundError(path)
-    schema = _sidecar_arrow_schema(ddl)
+    schema = arrow_schema(ddl)
     names = []
     if fs.getFileStatus(p).isDirectory():
         for st in fs.listStatus(p):
@@ -204,13 +164,13 @@ def _write_tiny_sidecar(spark, path: str, rows: list, ddl: str) -> None:
     directory (plus ``_SUCCESS``, like a Spark commit) straight through
     the Hadoop FS handle — no Spark job. Byte layout readers see is
     ordinary snappy parquet; row order is preserved exactly as
-    ``_tiny_df(...).write.parquet`` preserved it."""
+    a Spark write of the same rows preserved it."""
     import io
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    schema = _sidecar_arrow_schema(ddl)
+    schema = arrow_schema(ddl)
     cols = [
         pa.array([r[i] for r in rows], type=schema.field(i).type)
         for i in range(len(schema))
@@ -337,7 +297,7 @@ def brute_force_topk(
     q_rows = queries.select(id_col, vec_col).collect()
     empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
     if not q_rows:
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     qids = np.array([r[0] for r in q_rows], dtype=np.int64)
     qmat = np.array([r[1] for r in q_rows], dtype=np.float64)
     qnorm = np.sqrt((qmat * qmat).sum(axis=1))
@@ -819,7 +779,7 @@ def ivf_topk(
         for cid in np.argsort(d)[:n_probe]:
             probes.append((int(r[0]), int(cid), [float(x) for x in qv]))
     spark = corpus.sparkSession
-    probe_df = _tiny_df(
+    probe_df = local_frame(
         spark, probes, "query_id long, cid int, qv array<double>"
     )
     scored = (
@@ -1018,7 +978,7 @@ def semdedup_scaled(
     )
     n_total = v.count()
     if n_total == 0:
-        return df.sparkSession.createDataFrame([], "vec_id long, cid int")
+        return local_frame(df.sparkSession, [], "vec_id long, cid int")
     k = min(
         max(2, math.ceil(n_total / max(1, target_cluster_size))), n_total
     )
@@ -1108,7 +1068,7 @@ def semdedup_scaled_invariants(
     )
     n_corpus = v.count()
     if n_corpus == 0:
-        return _tiny_df(
+        return local_frame(
             spark, [(name, True, 0) for name in SEMDEDUP_INVARIANTS], schema
         )
     k = min(
@@ -1176,7 +1136,7 @@ def semdedup_scaled_invariants(
         "every_cluster_keeps_min_id": min_ok,
         "no_kept_pair_reaches_threshold": pair_ok,
     }
-    return _tiny_df(
+    return local_frame(
         spark,
         [(name, bool(holds[name]), int(n_corpus)) for name in SEMDEDUP_INVARIANTS],
         schema,
@@ -1258,14 +1218,14 @@ def sq8_topk(
     empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
     scales = sq8_scales(corpus, vec_col)
     if not scales:
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     q_rows = queries.select(
         F.col(id_col).alias("query_id"),
         as_double_vec(vec_col).alias("qv"),
         sq8_codes(as_double_vec(vec_col), scales).alias("qc"),
     ).collect()
     if not q_rows:
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
     qcodes = np.array([r["qc"] for r in q_rows], dtype=np.int64)
     bc = spark.sparkContext.broadcast((qids, qcodes))
@@ -1301,7 +1261,7 @@ def sq8_topk(
         .filter(F.col("crank") <= k * rerank)
         .select("query_id", "neighbor_id")
     )
-    qdf = _tiny_df(
+    qdf = local_frame(
         spark,
         [(int(r["query_id"]), list(r["qv"])) for r in q_rows],
         "query_id long, qv array<double>",
@@ -1464,7 +1424,7 @@ def pq_topk(
     else:
         book = pq_anchor_codebook(corpus, codebook_size, id_col, vec_col, scale)
         if not book:
-            return spark.createDataFrame([], empty_schema)
+            return local_frame(spark, [], empty_schema)
         A = np.array(book, dtype=np.int64)  # (C, D)
         C, D = A.shape
         if D % m:
@@ -1477,7 +1437,7 @@ def pq_topk(
         fixed_point_codes(as_double_vec(vec_col), scale).alias("qq"),
     ).collect()
     if not q_rows:
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     if m * d != len(q_rows[0]["qq"]):
         # provided-codebook dim mismatch would otherwise surface as an
         # opaque numpy reshape error inside mapInPandas (advice r07)
@@ -1536,7 +1496,7 @@ def pq_topk(
         .filter(F.col("crank") <= k * rerank)
         .select("query_id", "neighbor_id")
     )
-    qdf = _tiny_df(
+    qdf = local_frame(
         spark,
         [(int(r["query_id"]), list(r["qv"])) for r in q_rows],
         "query_id long, qv array<double>",
@@ -1730,7 +1690,7 @@ def ivfpq_topk(
     else:
         book = pq_anchor_codebook(corpus, codebook_size, id_col, vec_col, scale)
         if not book:
-            return spark.createDataFrame([], empty_schema)
+            return local_frame(spark, [], empty_schema)
         A = np.array(book, dtype=np.int64)
         if A.shape[1] % m:
             raise ValueError(f"m={m} must divide vector dims={A.shape[1]}")
@@ -1742,7 +1702,7 @@ def ivfpq_topk(
         fixed_point_codes(as_double_vec(vec_col), scale).alias("qq"),
     ).collect()
     if not q_rows:
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     if m * d != len(q_rows[0]["qq"]):
         raise ValueError(
             f"codebook subvector width d={d} gives m*d={m * d}, but "
@@ -1793,7 +1753,7 @@ def ivfpq_topk(
                 }
             )
 
-    probed = _tiny_df(
+    probed = local_frame(
         spark, [(int(x),) for x in probed_cids], "cid int"
     )
     coded = (
@@ -1817,7 +1777,7 @@ def ivfpq_topk(
         .filter(F.col("crank") <= k * rerank)
         .select("query_id", "neighbor_id")
     )
-    qdf = _tiny_df(
+    qdf = local_frame(
         spark,
         [(int(r["query_id"]), list(r["qv"])) for r in q_rows],
         "query_id long, qv array<double>",
@@ -2455,14 +2415,14 @@ def ivf_index_topk(
     empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
     q_rows = queries.select(id_col, vec_col).collect()
     if not q_rows or not len(cents):
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     probes = []
     for r in q_rows:
         qv = np.array(r[1], dtype=np.float64)
         d = ((cents - qv) ** 2).sum(axis=1)
         for cid in np.argsort(d)[: int(n_probe)]:
             probes.append((int(r[0]), int(cid), [float(x) for x in qv]))
-    probe_df = _tiny_df(
+    probe_df = local_frame(
         spark, probes, "query_id long, cid int, qv array<double>"
     )
     probed_cids = sorted({p[1] for p in probes})
@@ -2572,7 +2532,7 @@ def filtered_topk(
     q_rows = queries.select(id_col, vec_col, filter_col).collect()
     q_rows = [r for r in q_rows if r[2] is not None]
     if not q_rows:
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     qids = np.array([r[0] for r in q_rows], dtype=np.int64)
     qmat = np.array([r[1] for r in q_rows], dtype=np.float64)
     qnorm = np.sqrt((qmat * qmat).sum(axis=1))
@@ -2731,7 +2691,7 @@ def _rerank_exact_cosine(cands, corpus, q_rows, k, id_col, vec_col):
     JVM-side against the broadcast query matrix, and rank on the 4-dp +
     neighbor-id total order."""
     spark = corpus.sparkSession
-    qdf = _tiny_df(
+    qdf = local_frame(
         spark,
         [(int(r["query_id"]), [float(x) for x in r["qv"]]) for r in q_rows],
         "query_id long, qv array<double>",
@@ -2870,7 +2830,7 @@ def ivfpq_residual_topk(
         # SQL-expressible derivation (pq_anchor_codebook one stage in)
         book = pq_anchor_codebook(corpus, codebook_size, id_col, vec_col, scale)
         if not book:
-            return spark.createDataFrame([], empty_schema)
+            return local_frame(spark, [], empty_schema)
         A = np.array(book, dtype=np.int64)  # (C, D) raw lattice codes
         if A.shape[1] % m:
             raise ValueError(f"m={m} must divide vector dims={A.shape[1]}")
@@ -2892,7 +2852,7 @@ def ivfpq_residual_topk(
         fixed_point_codes(as_double_vec(vec_col), scale).alias("qq"),
     ).collect()
     if not q_rows:
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
     Qq = np.array([r["qq"] for r in q_rows], dtype=np.int64)  # (Q, D)
     n_cents = len(Cc)
@@ -4353,7 +4313,7 @@ def _filtered_ivf_topk_driver(
     q_rows = queries.select(id_col, vec_col, filter_col).collect()
     q_rows = [r for r in q_rows if r[2] is not None]
     if not q_rows or not len(cents):
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     n_cents = len(cents)
     n_probe = max(1, min(int(n_probe), n_cents))
     # per-query nearest-first list order (bounded driver metadata)
@@ -4373,7 +4333,7 @@ def _filtered_ivf_topk_driver(
         else None
     )
     starts = _probe_jump_starts(stats_rows, order, qmeta, k, n_probe, n_cents)
-    acc = _tiny_df(
+    acc = local_frame(
         spark, [], "query_id long, neighbor_id long, cos_sim double"
     )
     filled = {qid: 0 for qid in qmeta}
@@ -4398,7 +4358,7 @@ def _filtered_ivf_topk_driver(
             break
         rounds += 1
         _filtered_ivf_topk_driver.last_rounds = rounds  # test observable
-        probe_df = _tiny_df(
+        probe_df = local_frame(
             spark,
             probes,
             f"query_id long, cid int, qv array<double>, "
@@ -4457,7 +4417,7 @@ def _filtered_ivf_topk_distributed(
     cents = read_ivf_centroids(spark, path)
     empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
     if not len(cents):
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     n_cents = len(cents)
     n_probe = max(1, min(int(n_probe), n_cents))
     qdf = (
@@ -4470,7 +4430,7 @@ def _filtered_ivf_topk_distributed(
         .localCheckpoint(eager=True)
     )
     if qdf.isEmpty():
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     bc = spark.sparkContext.broadcast(np.asarray(cents, dtype=np.float64))
 
     def probe_order(batches):
@@ -4511,7 +4471,7 @@ def _filtered_ivf_topk_distributed(
     state = _attach_probe_jump(
         spark, path, state, porder, qdf, filter_col, k, n_probe, n_cents
     ).localCheckpoint(eager=True)
-    acc = _tiny_df(
+    acc = local_frame(
         spark, [], "query_id long, neighbor_id long, cos_sim double"
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -5186,7 +5146,7 @@ def ivfpq_index_topk(
         fixed_point_codes(as_double_vec(vec_col), scale).alias("qq"),
     ).collect()
     if not q_rows or not len(Cc):
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     m, d = As.shape[1], As.shape[2]
     qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
     Qq = np.array([r["qq"] for r in q_rows], dtype=np.int64)
@@ -5342,7 +5302,7 @@ def _filtered_ivfpq_topk_driver(
     ).collect()
     q_rows = [r for r in q_rows if r["qval"] is not None]
     if not q_rows or not len(Cc):
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     m, d = As.shape[1], As.shape[2]
     n_cents = len(Cc)
     n_probe = max(1, min(int(n_probe), n_cents))
@@ -5382,7 +5342,7 @@ def _filtered_ivfpq_topk_driver(
             starts[qi] = max(start, n_probe)
     filled = np.zeros(nq, dtype=np.int64)
     probed_upto = np.zeros(nq, dtype=np.int64)
-    acc = _tiny_df(spark, [], "query_id long, neighbor_id long, adc long")
+    acc = local_frame(spark, [], "query_id long, neighbor_id long, adc long")
     cand_w = Window.partitionBy("query_id").orderBy(
         F.col("adc").asc(), F.col("neighbor_id")
     )
@@ -5508,7 +5468,7 @@ def _filtered_ivfpq_topk_distributed(
     Cc, As, stored_scale = read_ivfpq_sidecars(spark, path)
     scale = _resolve_index_scale(stored_scale, scale, "filtered_ivfpq_topk")
     if not len(Cc):
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     m, d = As.shape[1], As.shape[2]
     n_cents = len(Cc)
     n_probe = max(1, min(int(n_probe), n_cents))
@@ -5524,7 +5484,7 @@ def _filtered_ivfpq_topk_distributed(
         .localCheckpoint(eager=True)
     )
     if qdf.isEmpty():
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     bc = spark.sparkContext.broadcast((Cc, np.asarray(As, dtype=np.int64)))
 
     def probe_order(batches):
@@ -5560,7 +5520,7 @@ def _filtered_ivfpq_topk_distributed(
     state = _attach_probe_jump(
         spark, path, state, porder, qdf, filter_col, pool, n_probe, n_cents
     ).localCheckpoint(eager=True)
-    acc = _tiny_df(spark, [], "query_id long, neighbor_id long, adc long")
+    acc = local_frame(spark, [], "query_id long, neighbor_id long, adc long")
     cand_w = Window.partitionBy("query_id").orderBy(
         F.col("adc").asc(), F.col("neighbor_id")
     )

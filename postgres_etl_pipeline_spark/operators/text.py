@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # Tiny deterministic stopword lists for the language-ID heuristic.
 # Heuristic quality is secondary; determinism and scale are the point.
 STOPWORDS = {
@@ -758,7 +760,8 @@ def pack_sequences(
     if not totals:
         # empty corpus: zero spans (an argless map literal is untyped —
         # and there is nothing to pack anyway)
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [],
             "seq_id long, doc_id long, doc_start_tok long, "
             "seq_off long, n_tok long",

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from .. import checks as C
 from ..operators.relational import daily_sales_mart
 from ..schemas import RETAIL_TRANSACTIONS_SRC_SCHEMA
+from ..session import local_frame
 
 SEED_ROWS = [
     # retail_seed_dag.py:105-113 — 3 clean rows
@@ -36,6 +37,11 @@ LATE_ROWS = [
     ("t-2001", 2, "899", 1, "2024-01-03 08:15:00"),
     ("t-2002", 3, "1599", 2, "2024-01-03 10:40:00"),
 ]
+# the seed rows' types; transaction_ts is parsed after the load
+_SEED_DDL = (
+    "transaction_id string, store_id long, amount_cents string, quantity long,"
+    " transaction_ts string"
+)
 
 
 @dataclass
@@ -54,10 +60,9 @@ def seed_source(spark: SparkSession, scenario: str = "ok") -> DataFrame:
         rows.append(BAD_ROW)
     if scenario == "upstream_missing":
         rows = []
-    df = spark.createDataFrame(
-        [(r[0], r[1], r[2], r[3], r[4]) for r in rows],
-        ["transaction_id", "store_id", "amount_cents", "quantity", "transaction_ts"],
-    ) if rows else spark.createDataFrame([], RETAIL_TRANSACTIONS_SRC_SCHEMA)
+    df = local_frame(
+        spark, rows, _SEED_DDL if rows else RETAIL_TRANSACTIONS_SRC_SCHEMA
+    )
     df = df.withColumn("transaction_ts", F.to_timestamp("transaction_ts"))
     if scenario == "schema_drift":
         df = df.withColumnRenamed("quantity", "qty")  # retail_seed_dag.py:60-67
@@ -65,10 +70,7 @@ def seed_source(spark: SparkSession, scenario: str = "ok") -> DataFrame:
 
 
 def late_rows(spark: SparkSession) -> DataFrame:
-    df = spark.createDataFrame(
-        LATE_ROWS + [],
-        ["transaction_id", "store_id", "amount_cents", "quantity", "transaction_ts"],
-    )
+    df = local_frame(spark, LATE_ROWS, _SEED_DDL)
     return df.withColumn("transaction_ts", F.to_timestamp("transaction_ts"))
 
 

@@ -85,32 +85,6 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def frozen(spark: SparkSession, rows: list, schema) -> DataFrame:
-    """Driver-collected result rows as a SINGLE-slice local DataFrame.
-
-    The scratch-lifecycle entries collect their search output before the
-    scratch dir is removed and return ``createDataFrame(rows, schema)``;
-    the default form slices local data into ``defaultParallelism``
-    Python partitions, so every downstream action pays one Python-worker
-    round-trip PER SLICE (32 on local[32]) just to re-emit a few hundred
-    rows (guide §4: the boundary cost is per-partition). One slice keeps
-    row order and values identical and evaluates in one round-trip.
-
-    Delegates to :func:`operators.similarity._tiny_df` — ONE shared
-    single-slice idiom (ADVICE r13 #3), so the rationale and any future
-    fix live in one place. Local-mode note (ADVICE r13 #4): rewrapping
-    collected rows converts naive datetimes in the *executor* Python
-    worker with that process's local timezone, which
-    ``spark.sql.session.timeZone`` does not govern; driver and executor
-    share a host (and a TZ) in local mode, and the scratch-lifecycle
-    results this wraps carry no timestamp columns today — normalize to
-    tz-aware UTC before rewrapping if one ever does.
-    """
-    from .operators.similarity import _tiny_df
-
-    return _tiny_df(spark, rows, schema)
-
-
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the ``events`` table, whose ``ts`` is TIMESTAMP(NANOS) parquet.
 

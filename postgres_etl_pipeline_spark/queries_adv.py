@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from .operators.relational import asof_join, dsum, range_self_join_pairs
 from .queries import read_events, register, t
+from .session import local_frame
 
 _FMT = "%Y-%m-%d %H:%M:%S"
 
@@ -374,8 +375,8 @@ def customer_balance_quartiles(spark, sf_dir):
         c, "c_acctbal", ["c_custkey"], coarse=F.floor(F.col("c_acctbal"))
     )
     if rf.n_total == 0:
-        return spark.createDataFrame(
-            [], "quartile int, n long, min_bal double, max_bal double"
+        return local_frame(
+            spark, [], "quartile int, n long, min_bal double, max_bal double"
         )
     q = rf.df.withColumn("quartile", ntile_expr(F.col("_rank"), rf.n_total, 4))
     return q.groupBy("quartile").agg(

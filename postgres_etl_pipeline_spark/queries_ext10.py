@@ -30,8 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .queries import frozen, register, spread, t
+from .queries import register, spread, t
 from .queries_ext9 import _cosine_topk_oracle
+from .session import local_frame
 
 # survivors: the whole embeddings table minus the tombstoned tenth;
 # queries: vec_id < 20 (deleted ids still QUERY — deletion removes a
@@ -100,7 +101,7 @@ def ivf_root_drain_lifecycle(spark, sf_dir):
         )
         if not len(cents):
             # empty corpus: nothing published; the search answer is empty
-            return spark.createDataFrame([], empty_schema)
+            return local_frame(spark, [], empty_schema)
         S.append_to_ivf_index(drain1, root)  # root-aware: resolves to v1
         vpath = S.rebuild_ivf_index_versioned(
             spark, root, force=True,
@@ -117,7 +118,7 @@ def ivf_root_drain_lifecycle(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # tokenization canon shared with queries_ext._TOKS (collapse whitespace →
@@ -222,7 +223,7 @@ def ivf_maintenance_tick_topk(spark, sf_dir):
             n_centroids=8, kmeans_max_iter=1, kmeans_init="random",
         )
         if not len(cents):
-            return spark.createDataFrame([], empty_schema)
+            return local_frame(spark, [], empty_schema)
         for m in (1, 2, 3):
             S.append_to_ivf_index(emb.filter(F.col("vec_id") % 4 == m), root)
         rep = S.maintain_index(
@@ -243,4 +244,4 @@ def ivf_maintenance_tick_topk(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)

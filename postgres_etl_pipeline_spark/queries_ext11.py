@@ -28,8 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .queries import frozen, register, spread, t
+from .queries import register, spread, t
 from .queries_ext9 import _cosine_topk_oracle
+from .session import local_frame
 
 _BPE_PATT = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]+"
 
@@ -164,7 +165,7 @@ def ivfpq_maintenance_tick_search(spark, sf_dir):
     empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
     n_corpus = emb.count()
     if n_corpus == 0:
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     scratch = tempfile.mkdtemp(prefix="ivfpq_tick_")
     try:
         root = scratch + "/idx"
@@ -196,4 +197,4 @@ def ivfpq_maintenance_tick_search(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)

@@ -14,8 +14,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .queries import frozen, register, spread, t
+from .queries import register, spread, t
 from .queries_ext5 import _containment_oracle, _PQ_ORACLE
+from .session import local_frame
 
 # ---------------------------------------------------------------------------
 # Containment mining, prefix-filtered — the sub-linear twin of
@@ -213,7 +214,7 @@ def ivf_partitioned_topk(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -20,7 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .queries import frozen, register, spread, t
+from .queries import register, spread, t
+from .session import local_frame
 
 # ---------------------------------------------------------------------------
 # Residual-encoded IVF-PQ (IVFADC) — verdict r08 item 1
@@ -268,7 +269,7 @@ def ivf_append_topk(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -335,7 +336,7 @@ def filtered_ivf_topk(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -420,8 +421,8 @@ def ivfpq_index_search(spark, sf_dir):
     try:
         path = scratch + "/index"
         if emb.limit(1).count() == 0:  # empty corpus: nothing to encode
-            return spark.createDataFrame(
-                [], "query_id long, neighbor_id long, cos_sim double, rank int"
+            return local_frame(
+                spark, [], "query_id long, neighbor_id long, cos_sim double, rank int"
             )
         S.write_ivfpq_index(emb, path, n_centroids=8, coarse="anchor")
         out = S.ivfpq_index_topk(
@@ -432,7 +433,7 @@ def ivfpq_index_search(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 @register(
@@ -470,8 +471,8 @@ def filtered_ivfpq_search(spark, sf_dir):
     scratch = tempfile.mkdtemp(prefix="filtered_ivfadc_")
     try:
         if emb.limit(1).count() == 0:
-            return spark.createDataFrame(
-                [], "query_id long, neighbor_id long, cos_sim double, rank int"
+            return local_frame(
+                spark, [], "query_id long, neighbor_id long, cos_sim double, rank int"
             )
         path = scratch + "/index"
         S.write_ivfpq_index(
@@ -486,4 +487,4 @@ def filtered_ivfpq_search(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)

@@ -14,8 +14,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .queries import frozen, register, spread, t
+from .queries import register, spread, t
 from .queries_ext7 import _IVFPQ_RESIDUAL_ORACLE, _ivfpq_residual_oracle_sql
+from .session import local_frame
 
 _EMPTY_TOPK = "query_id long, neighbor_id long, cos_sim double, rank int"
 
@@ -91,7 +92,7 @@ def ivf_delete_topk(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 @register(
@@ -123,7 +124,7 @@ def ivfpq_delete_search(spark, sf_dir):
     scratch = tempfile.mkdtemp(prefix="ivfpq_delete_")
     try:
         if emb.limit(1).count() == 0:
-            return spark.createDataFrame([], _EMPTY_TOPK)
+            return local_frame(spark, [], _EMPTY_TOPK)
         path = scratch + "/index"
         S.write_ivfpq_index(emb, path, n_centroids=8, coarse="anchor")
         S.delete_from_ivfpq_index(
@@ -137,7 +138,7 @@ def ivfpq_delete_search(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -182,7 +183,7 @@ def ivfpq_drift_retrain(spark, sf_dir):
     scratch = tempfile.mkdtemp(prefix="ivfpq_retrain_")
     try:
         if emb.limit(1).count() == 0:
-            return spark.createDataFrame([], _EMPTY_TOPK)
+            return local_frame(spark, [], _EMPTY_TOPK)
         path = scratch + "/index"
         build_df = emb.filter(F.col("vec_id") % 5 != 4)
         append_df = emb.filter(F.col("vec_id") % 5 == 4)
@@ -206,7 +207,7 @@ def ivfpq_drift_retrain(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -416,7 +417,7 @@ def ivfpq_append_resplit_search(spark, sf_dir):
     scratch = tempfile.mkdtemp(prefix="ivfpq_resplit_")
     try:
         if emb.limit(1).count() == 0:
-            return spark.createDataFrame([], _EMPTY_TOPK)
+            return local_frame(spark, [], _EMPTY_TOPK)
         path = scratch + "/index"
         build_df = emb.filter(F.col("vec_id") % 5 != 4)
         append_df = emb.filter(F.col("vec_id") % 5 == 4)
@@ -440,7 +441,7 @@ def ivfpq_append_resplit_search(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -506,4 +507,4 @@ def ivf_compacted_topk(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)

@@ -20,8 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .queries import frozen, register, spread, t
+from .queries import register, spread, t
 from .queries_ext7 import _IVFPQ_RESIDUAL_ORACLE
+from .session import local_frame
 
 
 def _cosine_topk_oracle() -> str:
@@ -67,8 +68,8 @@ def ivf_versioned_rebuild_topk(spark, sf_dir):
         if not len(cents):
             # empty corpus: nothing was published (no committed data dir
             # to point serving at) and the search answer is empty
-            return spark.createDataFrame(
-                [],
+            return local_frame(
+                spark, [],
                 "query_id long, neighbor_id long, cos_sim double, rank int",
             )
         vpath = S.rebuild_ivf_index_versioned(
@@ -85,7 +86,7 @@ def ivf_versioned_rebuild_topk(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 @register(
@@ -124,8 +125,8 @@ def ivfpq_coarse_rebuild_search(spark, sf_dir):
         root = scratch + "/idx"
         if emb.limit(1).count() == 0:
             # empty corpus: the build raises by contract; serve empty
-            return spark.createDataFrame(
-                [],
+            return local_frame(
+                spark, [],
                 "query_id long, neighbor_id long, cos_sim double, rank int",
             )
         S.build_ivfpq_index_versioned(emb, root, n_centroids=8)
@@ -140,4 +141,4 @@ def ivfpq_coarse_rebuild_search(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)

@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .queries import frozen, register
+from .queries import register
+from .session import local_frame
 from .streaming import jobs, runner, sources
 
 _FMT = "%Y-%m-%d %H:%M:%S"
@@ -432,7 +433,7 @@ def stream_cdc_apply(spark, sf_dir):
         schema = audit.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -568,7 +569,7 @@ def stream_minhash_dedup(spark, sf_dir):
         schema = admitted.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -641,7 +642,7 @@ def stream_topk_maintenance(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -701,7 +702,7 @@ def stream_ivf_maintenance(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _ivfpq_residual_oracle() -> str:
@@ -748,8 +749,8 @@ def stream_ivfpq_maintenance(spark, sf_dir):
     emb = spark.read.schema(_EMB_SCHEMA).parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 20)
     if emb.limit(1).count() == 0:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rank int"
+        return local_frame(
+            spark, [], "query_id long, neighbor_id long, cos_sim double, rank int"
         )
     scratch = tempfile.mkdtemp(prefix="stream_ivfpq_")
     try:
@@ -771,7 +772,7 @@ def stream_ivfpq_maintenance(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _stream_delete_oracle() -> str:
@@ -825,8 +826,8 @@ def stream_ivf_delete_maintenance(spark, sf_dir):
             n_centroids=16, kmeans_max_iter=1, kmeans_init="random",
         )
         if not len(cents):  # empty corpus: nothing to maintain
-            return spark.createDataFrame(
-                [], "query_id long, neighbor_id long, cos_sim double, rank int"
+            return local_frame(
+                spark, [], "query_id long, neighbor_id long, cos_sim double, rank int"
             )
         inserts = emb.filter(F.col("vec_id") % 3 != 0).withColumn(
             "op", F.lit("I")
@@ -851,7 +852,7 @@ def stream_ivf_delete_maintenance(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 @register(
@@ -898,7 +899,7 @@ def stream_maintenance_tick(spark, sf_dir):
             n_centroids=8, kmeans_max_iter=1, kmeans_init="random",
         )
         if not len(cents):
-            return spark.createDataFrame([], empty_schema)
+            return local_frame(spark, [], empty_schema)
         # three files -> three micro-batches at maxFilesPerTrigger=1, so
         # the every-2-batches tick fires MID-DRAIN (after batch 2), with
         # batch 3's append following it through the flipped pointer
@@ -924,7 +925,7 @@ def stream_maintenance_tick(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -996,4 +997,4 @@ def stream_nb_model_serving(spark, sf_dir):
         schema = out.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)

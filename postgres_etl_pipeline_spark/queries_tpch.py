@@ -24,7 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators.scd import scd2_compress
-from .queries import frozen, read_events, register, t
+from .queries import read_events, register, t
+from .session import local_frame
 
 _FMT = "%Y-%m-%d %H:%M:%S"
 
@@ -269,8 +270,8 @@ def supplier_window_stats(spark, sf_dir):
         coarse=F.floor(F.col("s_acctbal")),
     )
     if rf.n_total == 0:
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             "s_suppkey long, s_name string, bal_pct_rank double,"
             " bal_cume_dist double, poorest_suppkey long, next_suppkey long",
         )
@@ -389,7 +390,7 @@ def csv_roundtrip_orders(spark, sf_dir):
         rows, schema = audit.collect(), audit.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 @register(
@@ -452,4 +453,4 @@ def orc_roundtrip_orders(spark, sf_dir):
         rows, schema = audit.collect(), audit.schema
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return frozen(spark, rows, schema)
+    return local_frame(spark, rows, schema)

@@ -19,9 +19,11 @@ from __future__ import annotations
 
 import os
 from contextlib import contextmanager
-from typing import Iterator
+from datetime import timezone
+from typing import Iterable, Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType, TimestampType
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -86,3 +88,50 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[SparkSes
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, prior)
+
+
+def arrow_schema(schema: StructType | str):
+    """The pyarrow schema of a StructType or DDL string (``"a long, b
+    array<double>"``) — Spark's own type mapping, shared by
+    :func:`local_frame` and the driver-side index sidecar reads/writes."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(DataType.fromDDL(schema) if isinstance(schema, str) else schema)
+
+
+def local_frame(spark: SparkSession, rows: Iterable, schema: StructType | str) -> DataFrame:
+    """Driver-side rows as a DataFrame that plans as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(list, schema)`` pickles the rows into a Python
+    RDD (``LogicalRDD``): the first action over it runs a Spark job that
+    starts Python workers only to unpickle a handful of rows. Handing the
+    rows to the JVM as an Arrow table instead gives a ``LocalRelation``:
+    Catalyst folds projections over it on the driver, collecting it runs no
+    job, and a join broadcasts it without any Python process. ``rows`` are
+    tuples (or Rows) in schema order, or dicts keyed by field name; types
+    are exactly ``schema``'s. As with ``createDataFrame`` over a list, a None
+    in a non-nullable field raises, and a naive ``datetime`` in a timestamp
+    column is read as local time — so collected rows round-trip unchanged.
+    """
+    import pyarrow as pa
+
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    target = arrow_schema(struct)
+    rows = list(rows)
+    width = len(struct.fields)
+    if rows and isinstance(rows[0], dict):
+        columns = [[r.get(name) for r in rows] for name in struct.names]
+    else:
+        if any(len(r) != width for r in rows):
+            raise ValueError(f"every row must have {width} fields: {struct.simpleString()}")
+        columns = [[r[i] for r in rows] for i in range(width)]
+    arrays = []
+    for values, field, afield in zip(columns, struct.fields, target):
+        if isinstance(field.dataType, TimestampType):
+            # pyarrow would take any datetime's wall clock as UTC
+            values = [None if v is None else v.astimezone(timezone.utc) for v in values]
+        arr = pa.array(values, type=afield.type)
+        if arr.null_count and not field.nullable:
+            raise ValueError(f"field {field.name}: not nullable, but got None")
+        arrays.append(arr)
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=target), struct)

@@ -23,6 +23,8 @@ import uuid
 
 from pyspark.sql import DataFrame
 
+from ..session import local_frame
+
 _TICK_RETRIES = 3
 _TICK_BACKOFF_S = 0.5
 """Lease-conflict retry policy for in-drain maintenance ticks (verdict
@@ -305,7 +307,7 @@ def read_state_or_empty(spark, path: str, schema: str) -> DataFrame:
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(jpath):
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.schema(schema).parquet(path)
 
 

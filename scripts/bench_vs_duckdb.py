@@ -115,8 +115,9 @@ marginal cost of each constituent op is what SCALE.md measures.
 Round 13 (optimization round): the Python-boundary fixed costs that
 dominated every lifecycle row — 32-slice driver-local DataFrames behind
 each sidecar write, probe frame, and result frame — were removed
-(single-slice `_tiny_df`/`frozen`), on top of the one-sample builds and
-REBALANCE'd partitioned writes of the round's first sweep. The
+(single-slice frames; today `session.local_frame` builds them as JVM
+LocalRelations, with no Python slice at all), on top of the one-sample
+builds and REBALANCE'd partitioned writes of the round's first sweep. The
 lifecycle rows dropped 3–10× with bit-identical results, which is what
 flipped the headline TOTAL from ~1.0× (r12) to ~0.5×: Spark now
 executes each entire multi-build deployment story in less time than

@@ -24,3 +24,23 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_med():
     return SF_MED
+
+
+@pytest.fixture
+def jobs_during(spark):
+    """``jobs_during(action)``: the number of Spark jobs ``action()``
+    launches, counted under a private job group so stream queries running
+    beside the test never count."""
+    sc = spark.sparkContext
+    group = "test-job-probe"
+
+    def count(action) -> int:
+        sc.setJobGroup(group, "job probe")
+        try:
+            before = set(sc.statusTracker().getJobIdsForGroup(group))
+            action()
+            return len(set(sc.statusTracker().getJobIdsForGroup(group)) - before)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    return count

@@ -208,6 +208,18 @@ def test_upsert_parquet_schema_mismatch_raises_not_destroys(spark, tmp_path):
     assert sorted(r.k for r in spark.read.parquet(target).collect()) == ["k1", "k2", "k3"]
 
 
+def test_swap_read_back_uses_the_written_schema(spark, tmp_path, jobs_during):
+    """The merged table is read back with the schema just written: the
+    write is the swap's only job (no footer schema-inference job)."""
+    from postgres_etl_pipeline_spark.connectors.sinks import _swap_into_place
+
+    merged = spark.range(4).selectExpr("cast(id AS string) AS k", "id AS seq")
+    target = str(tmp_path / "t")
+    out = {}
+    assert jobs_during(lambda: out.update(df=_swap_into_place(spark, merged, target, "t"))) == 1
+    assert out["df"].schema == spark.read.parquet(target).schema
+    assert sorted(r.k for r in out["df"].collect()) == ["0", "1", "2", "3"]
+
 def test_transactions_df_driver_side_with_drift(spark):
     # S7 driver-side DataFrame build incl. the schema_drift merge branch
     df_ok = G.transactions_df(spark, "run-tdf", "ok", n=12)

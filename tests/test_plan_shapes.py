@@ -752,3 +752,34 @@ def test_curriculum_gated_packing_stays_single_partition_free(spark, sf_small):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
     assert "EvalPython" not in plan
+
+
+def test_driver_local_frames_plan_without_python_rdds(spark, sf_small, tmp_path):
+    """Driver-side rows (seed dims, the typed payload, collected results,
+    empty-result frames) plan as JVM LocalRelations: no LogicalRDD means
+    no pickled Python RDD, so no Python worker is started to read them."""
+    from postgres_etl_pipeline_spark import datagen
+    from postgres_etl_pipeline_spark.streaming.runner import read_state_or_empty
+
+    frames = {
+        "dim_store": datagen.dim_store(spark),
+        "dim_product": datagen.dim_product(spark),
+        "transactions_df": datagen.transactions_df(spark, "plan-shape", "ok", n=5),
+        "collected result": q("csv_roundtrip_orders", spark, sf_small),
+        "empty result": read_state_or_empty(
+            spark, str(tmp_path / "absent"), "k string, n long"
+        ),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan, f"{name}: {plan}"
+        assert "LocalRelation" in plan, f"{name}: {plan}"
+
+
+def test_collecting_the_seed_dims_runs_no_spark_job(spark, jobs_during):
+    from postgres_etl_pipeline_spark import datagen
+
+    # the probe does see jobs
+    assert jobs_during(lambda: spark.range(3).collect()) >= 1
+    assert jobs_during(lambda: datagen.dim_store(spark).collect()) == 0
+    assert jobs_during(lambda: datagen.dim_product(spark).collect()) == 0
