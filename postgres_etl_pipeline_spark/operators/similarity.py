@@ -265,8 +265,65 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def cosine(
+    a: Column,
+    b: Column,
+    a_norm: Column | None = None,
+    b_norm: Column | None = None,
+) -> Column:
+    """Cosine similarity of two double arrays, NULL when either vector has
+    zero norm (``try_divide``: an ANSI ``/`` would raise DIVIDE_BY_ZERO).
+    Under the ``cos_sim DESC`` orderings here a NULL score ranks last.
+    ``a_norm``/``b_norm`` take norms already projected per row, so a
+    pair scorer computes each norm once per row instead of once per pair."""
+    a_norm = norm(a) if a_norm is None else a_norm
+    b_norm = norm(b) if b_norm is None else b_norm
+    return F.try_divide(dot(a, b), a_norm * b_norm)
+
+
+def _exact_cosine_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    filter_col: str | None = None,
+) -> DataFrame:
+    """The exact top-k kernel shared by :func:`brute_force_topk` and
+    :func:`filtered_topk`: the queries, projected to (id, vector, norm),
+    are broadcast; the corpus is projected once to the same shape and
+    streams through the join unshuffled. With ``filter_col`` the join is a
+    broadcast hash join on equal filter values (NULL matches nothing);
+    without it a broadcast nested-loop join. Either way the only shuffle
+    is the per-query window, whose ``rank <= k`` filter Spark pushes
+    map-side (WindowGroupLimit)."""
+
+    def side(df, id_name, vec_name, norm_name, filter_name):
+        extra = [F.col(filter_col).alias(filter_name)] if filter_col else []
+        return df.select(
+            F.col(id_col).cast("long").alias(id_name),
+            as_double_vec(vec_col).alias(vec_name),
+            *extra,
+        ).withColumn(norm_name, norm(F.col(vec_name)))
+
+    q = side(queries, "query_id", "qv", "qn", "qf")
+    c = side(corpus, "neighbor_id", "cv", "cn", "cf")
+    on = F.col("query_id") != F.col("neighbor_id")
+    if filter_col:
+        on = (F.col("qf") == F.col("cf")) & on
+    scored = c.join(F.broadcast(q), on).select(
+        "query_id",
+        "neighbor_id",
+        F.round(
+            cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 4
+        ).alias("cos_sim"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id")
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
 
 
 def brute_force_topk(
@@ -277,90 +334,22 @@ def brute_force_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k: for each query vector, the k nearest corpus
-    vectors (excluding itself).
+    vectors (excluding itself), as (query_id long, neighbor_id long,
+    cos_sim double, rank int).
 
-    Scale: the query matrix is collected once and broadcast to executors
-    (it is the small side by contract — same role as ``F.broadcast`` in a
-    join); the corpus streams through ONE ``mapInPandas`` pass that scores a
-    whole Arrow batch against all queries with a single BLAS matmul. This is
-    the sanctioned vectorized-Pandas-UDF path: per-element higher-order
-    functions measured ~5× slower at 64 dims. The only shuffle is the
-    per-query top-k (WindowGroupLimit pushes the k-filter map-side).
+    Scale: the query side is small by contract and is broadcast; the
+    corpus is scanned once, never shuffled, and scored JVM-side against
+    every query in a broadcast nested-loop join (O(Q × N) pairs, each norm
+    computed once per row). The only shuffle is the per-query top-k.
     Ranking uses the score ROUNDED to 4 dp with the neighbor id as
     tie-break, making the ordering total and engine-portable (raw double
     cosines differ across engines in the last ulp; 4 dp absorbs them).
+
+    NULL contract: a pair involving a zero-norm vector scores NULL and
+    ranks after every scored neighbor of its query (see :func:`cosine`).
+    An empty query relation yields an empty result of the same schema.
     """
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    q_rows = queries.select(id_col, vec_col).collect()
-    empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
-    if not q_rows:
-        return local_frame(spark, [], empty_schema)
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qmat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorm))
-
-    def score(batches):
-        # Per-batch PARTIAL top-k (round 13): shipping the full n×q score
-        # matrix back through Arrow made the Python→JVM return path the
-        # dominant cost (guide §4.1 — control how many rows cross the
-        # boundary). Keep only rows that can still reach the global
-        # top-k: per query, everything within 1e-4 (one rounding quantum)
-        # of the (k+1)-th largest raw score in the batch. Proof the
-        # result is unchanged: round() moves a value by ≤ 5e-5, so a
-        # dropped row x (raw < thresh − 1e-4) has round(x) < round(thresh)
-        # strictly, i.e. ≥ k+1 rows rank strictly above it under the
-        # final (rounded DESC, id ASC) order; at most one of those is the
-        # self-match the JVM filter removes — ≥ k non-self rows remain
-        # above, so x was never in the top-k. Non-finite scores (0-norm
-        # vectors) are always kept: Spark orders NaN above all doubles,
-        # and the old code shipped them through.
-        b_qids, b_q, b_qn = bc.value
-        kk = k + 1
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cids = pdf[id_col].to_numpy(dtype=np.int64)
-            cmat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-            sims = (cmat @ b_q.T) / np.outer(cnorm, b_qn)  # (n, q)
-            n = sims.shape[0]
-            if n > kk:
-                thresh = np.partition(sims, n - kk, axis=0)[n - kk]
-                mask = sims >= (thresh - 1e-4)
-                mask |= ~np.isfinite(sims)
-                rows, cols = np.nonzero(mask)
-                out_q, out_n, out_s = b_qids[cols], cids[rows], sims[rows, cols]
-            else:
-                q = sims.shape[1]
-                out_q = np.tile(b_qids, n)
-                out_n = np.repeat(cids, q)
-                out_s = sims.ravel()
-            yield pd.DataFrame(
-                {
-                    "query_id": out_q,
-                    "neighbor_id": out_n,
-                    "raw_sim": out_s,
-                }
-            )
-
-    # round JVM-side: Spark/DuckDB round HALF_UP, numpy rounds half-to-even
-    scored = (
-        corpus.select(id_col, vec_col)
-        .mapInPandas(score, "query_id long, neighbor_id long, raw_sim double")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round("raw_sim", 4).alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _exact_cosine_topk(corpus, queries, k, id_col, vec_col)
 
 
 def hyperplane_bucket(vec: Column, planes: list[list[float]] | None = None) -> Column:
@@ -421,7 +410,9 @@ def lsh_near_dups(
         F.col("a.vid").alias("vec_a"),
         F.col("b.vid").alias("vec_b"),
         F.round(
-            dot(F.col("a.vec"), F.col("b.vec")) / (F.col("a.nrm") * F.col("b.nrm")),
+            cosine(
+                F.col("a.vec"), F.col("b.vec"), F.col("a.nrm"), F.col("b.nrm")
+            ),
             4,
         ).alias("cos_sim"),
     )
@@ -661,8 +652,7 @@ def fit_two_level_quantizer(
 def assign_to_centroids(c: DataFrame, cents, extra_cols: tuple = ()) -> DataFrame:
     """Nearest-centroid assignment over the whole corpus: ONE
     ``mapInPandas`` pass, BLAS distance matmul per Arrow batch against the
-    broadcast centroid matrix (the sanctioned vectorized path of
-    :func:`brute_force_topk`). Deterministic: the label is a pure
+    broadcast centroid matrix. Deterministic: the label is a pure
     per-row function of (vector, centroids) — ``argmin`` ties resolve to
     the lowest centroid id on any partitioning. Input/output schema:
     (neighbor_id, cv[, extras]) → (neighbor_id, cv[, extras], cid).
@@ -730,8 +720,9 @@ def ivf_topk(
     driver-sized problem (pyspark.ml's fit measured 2.9 s FIXED overhead
     on a cached 2k-row input, vs ~10 ms for the same math in-process).
     Only the centroid ASSIGNMENT streams over the corpus — one
-    ``mapInPandas`` pass, BLAS distance matmul per Arrow batch, same
-    sanctioned vectorized path as :func:`brute_force_topk`.
+    ``mapInPandas`` pass, BLAS distance matmul per Arrow batch
+    (:func:`assign_to_centroids`); the probed rerank scores exact cosine
+    JVM-side, like :func:`brute_force_topk`.
 
     Recall is data-dependent (no pigeonhole guarantee, unlike the SimHash
     bands) — tests assert measured recall against brute force.
@@ -1201,10 +1192,9 @@ def sq8_topk(
     ``asymmetric hashing`` production shape.
 
     Candidate scoring is an INTEGER dot product of codes (int64 matmul per
-    Arrow batch, broadcast query codes — the sanctioned vectorized path of
-    :func:`brute_force_topk`). Integer scores are EXACT, so the candidate
-    cut (score desc, id) is reproducible on any engine — no float-boundary
-    flake in the approximate stage by construction. Re-rank joins the
+    Arrow batch against broadcast query codes). Integer scores are EXACT,
+    so the candidate cut (score desc, id) is reproducible on any engine —
+    no float-boundary flake in the approximate stage by construction. Re-rank joins the
     ≤ ``Q·k·rerank`` candidate ids back to the original vectors and scores
     exact double cosine JVM-side (tiny input — HOF fold, no Python).
 
@@ -1261,36 +1251,7 @@ def sq8_topk(
         .filter(F.col("crank") <= k * rerank)
         .select("query_id", "neighbor_id")
     )
-    qdf = local_frame(
-        spark,
-        [(int(r["query_id"]), list(r["qv"])) for r in q_rows],
-        "query_id long, qv array<double>",
-    )
-    exact = (
-        cands.join(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                as_double_vec(vec_col).alias("cv"),
-            ),
-            "neighbor_id",
-        )
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("cv"), F.col("qv"))
-                / (norm(F.col("cv")) * norm(F.col("qv"))),
-                4,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return exact.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rerank_exact_cosine(cands, corpus, q_rows, k, id_col, vec_col)
 
 
 def fixed_point_codes(vec: Column, scale: int = 1000) -> Column:
@@ -1496,36 +1457,7 @@ def pq_topk(
         .filter(F.col("crank") <= k * rerank)
         .select("query_id", "neighbor_id")
     )
-    qdf = local_frame(
-        spark,
-        [(int(r["query_id"]), list(r["qv"])) for r in q_rows],
-        "query_id long, qv array<double>",
-    )
-    exact = (
-        cands.join(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                as_double_vec(vec_col).alias("cv"),
-            ),
-            "neighbor_id",
-        )
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("cv"), F.col("qv"))
-                / (norm(F.col("cv")) * norm(F.col("qv"))),
-                4,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return exact.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rerank_exact_cosine(cands, corpus, q_rows, k, id_col, vec_col)
 
 
 def pq_train_codebook(
@@ -1777,36 +1709,7 @@ def ivfpq_topk(
         .filter(F.col("crank") <= k * rerank)
         .select("query_id", "neighbor_id")
     )
-    qdf = local_frame(
-        spark,
-        [(int(r["query_id"]), list(r["qv"])) for r in q_rows],
-        "query_id long, qv array<double>",
-    )
-    exact = (
-        cands.join(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                as_double_vec(vec_col).alias("cv"),
-            ),
-            "neighbor_id",
-        )
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("cv"), F.col("qv"))
-                / (norm(F.col("cv")) * norm(F.col("qv"))),
-                4,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return exact.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rerank_exact_cosine(cands, corpus, q_rows, k, id_col, vec_col)
 
 
 def write_ivf_index(
@@ -2455,9 +2358,9 @@ def incremental_topk_update(
     """Incremental top-k maintenance for a growing corpus: merge a
     PERSISTED per-query top-k relation with exact scores over the NEW
     batch only, re-rank, keep k — the continuously-ingesting corpus never
-    rescans (per increment: one batch-sized Arrow scan + a union of two
-    k-bounded relations + the per-query window; O(batch + Q·k), never
-    O(corpus)).
+    rescans (per increment: one scan of the batch against the broadcast
+    queries + a union of two k-bounded relations + the per-query window;
+    O(batch + Q·k), never O(corpus)).
 
     Correct BY CONSTRUCTION, not approximately: cosine is a pure per-pair
     function, so the true top-k over (old corpus ∪ batch) is the top-k of
@@ -2510,70 +2413,22 @@ def filtered_topk(
     the filter is selective.
 
     Plan: the :func:`brute_force_topk` single-pass shape with the filter
-    applied INSIDE the Arrow batch — queries ride the broadcast with
-    their filter values, each corpus batch scores against all queries in
-    one BLAS matmul, and only (row, query) pairs whose values match are
-    emitted. The corpus is NEVER shuffled by the filter column (a
-    label-keyed join would be, and a hot label would skew it); emitted
-    candidate volume is the true per-label match volume. The only
-    shuffle is the per-query top-k window. At selectivity extremes the
-    persisted layouts compose: partition by ``filter_col`` (or cid
-    within it) and this same scan prunes files.
+    as the join key — queries are broadcast with their filter values, the
+    corpus streams through a broadcast hash join on equal values, and
+    only matching (row, query) pairs are scored. The corpus is NEVER
+    shuffled by the filter column (a shuffled label-keyed join would be,
+    and a hot label would skew it); scored candidate volume is the true
+    per-label match volume. The only shuffle is the per-query top-k
+    window. At selectivity extremes the persisted layouts compose:
+    partition by ``filter_col`` (or cid within it) and this same scan
+    prunes files.
 
     NULL semantics: a NULL filter value matches nothing on either side
     (SQL equality), so NULL-labeled rows never pair — matching the
-    relational-join oracle.
+    relational-join oracle. Zero-norm vectors score NULL, as in
+    :func:`brute_force_topk`.
     """
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
-    q_rows = queries.select(id_col, vec_col, filter_col).collect()
-    q_rows = [r for r in q_rows if r[2] is not None]
-    if not q_rows:
-        return local_frame(spark, [], empty_schema)
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qmat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
-    qval = np.array([r[2] for r in q_rows])
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorm, qval))
-
-    def score(batches):
-        b_qids, b_q, b_qn, b_qv = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cids = pdf[id_col].to_numpy(dtype=np.int64)
-            cmat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-            cval = pdf[filter_col].to_numpy()
-            sims = (cmat @ b_q.T) / np.outer(cnorm, b_qn)  # (n, Q)
-            keep = cval[:, None] == b_qv[None, :]  # metadata match mask
-            ri, qi = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "query_id": b_qids[qi],
-                    "neighbor_id": cids[ri],
-                    "raw_sim": sims[ri, qi],
-                }
-            )
-
-    scored = (
-        corpus.select(id_col, vec_col, filter_col)
-        .filter(F.col(filter_col).isNotNull())
-        .mapInPandas(score, "query_id long, neighbor_id long, raw_sim double")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id", F.round("raw_sim", 4).alias("cos_sim")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _exact_cosine_topk(corpus, queries, k, id_col, vec_col, filter_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2708,11 +2563,7 @@ def _rerank_exact_cosine(cands, corpus, q_rows, k, id_col, vec_col):
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                dot(F.col("cv"), F.col("qv"))
-                / (norm(F.col("cv")) * norm(F.col("qv"))),
-                4,
-            ).alias("cos_sim"),
+            F.round(cosine(F.col("cv"), F.col("qv")), 4).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -5623,11 +5474,7 @@ def _filtered_ivfpq_topk_distributed(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                dot(F.col("_cv"), F.col("qv"))
-                / (norm(F.col("_cv")) * norm(F.col("qv"))),
-                4,
-            ).alias("cos_sim"),
+            F.round(cosine(F.col("_cv"), F.col("qv")), 4).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(

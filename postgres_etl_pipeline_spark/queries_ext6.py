@@ -332,7 +332,7 @@ _FILTERED_TOPK_ORACLE = """
     "top-k restricted to corpus vectors matching the query's metadata "
     "(same-label here; the tenant/language/license constraint every "
     "vector system grows into, where post-filtering under-fills k): "
-    "filter applied INSIDE the Arrow batch mask, corpus never shuffled "
+    "filter as the key of a broadcast join, corpus never shuffled "
     "by the filter column, exact by construction",
     tags=("ext", "similarity"),
 )

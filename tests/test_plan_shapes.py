@@ -9,6 +9,11 @@ strategy, not the local-data runtime rewrite.
 
 from __future__ import annotations
 
+import ast
+import re
+from collections import Counter
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -783,3 +788,89 @@ def test_collecting_the_seed_dims_runs_no_spark_job(spark, jobs_during):
     assert jobs_during(lambda: spark.range(3).collect()) >= 1
     assert jobs_during(lambda: datagen.dim_store(spark).collect()) == 0
     assert jobs_during(lambda: datagen.dim_product(spark).collect()) == 0
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["embedding_cosine_topk", "filtered_label_topk", "incremental_topk_update"],
+)
+def test_exact_cosine_topk_scores_in_the_jvm(spark, sf_small, name):
+    """The exact cosine scorers run inside the JVM: no Python evaluation
+    node in the executed plan, so no Python worker starts. The queries
+    are broadcast and the corpus streams into the join unshuffled: every
+    hash exchange is the per-query window's (keyed on query_id alone),
+    and the only other exchanges are the inputs' round-robin spread."""
+    df = q(name, spark, sf_small)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "PythonUDF", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, (node, plan)
+    s = plan_summary(df)
+    assert s.broadcast_joins >= 1, s
+    assert s.sort_merge_joins == s.shuffled_hash_joins == 0, s
+    assert s.nested_loop_joins == 0, s
+    exchanges = re.findall(r"\bExchange (\w+)\(([^)]*)\)", plan)
+    assert exchanges, plan
+    for kind, keys in exchanges:
+        if kind == "hashpartitioning":
+            assert re.fullmatch(r"query_id#\d+L, \d+", keys), (kind, keys)
+        else:
+            assert kind == "RoundRobinPartitioning", (kind, keys)
+
+
+# Every call site in the package that starts a Python worker, by module and
+# enclosing function. Adding one is a deliberate edit of this list.
+PYTHON_WORKER_APIS = {
+    "mapInPandas", "mapInArrow", "applyInPandas", "applyInArrow",
+    "applyInPandasWithState", "transformWithStateInPandas",
+    "pandas_udf", "udf", "udtf",
+}
+PYTHON_WORKER_SITES = Counter({
+    "operators/multimodal.py:extract_features": 1,
+    "operators/multimodal.py:resize_payloads": 1,
+    "operators/multimodal.py:sample_frames": 1,
+    "operators/similarity.py:assign_to_centroids": 1,
+    "operators/similarity.py:sq8_topk": 1,
+    "operators/similarity.py:pq_topk": 1,
+    "operators/similarity.py:ivfpq_topk": 1,
+    "operators/similarity.py:ivfpq_residual_topk": 1,
+    "operators/similarity.py:_filtered_ivf_topk_distributed": 1,
+    "operators/similarity.py:_ivfpq_encode_pass": 1,
+    "operators/similarity.py:ivfpq_index_topk": 1,
+    "operators/similarity.py:_filtered_ivfpq_topk_driver": 1,
+    "operators/similarity.py:_filtered_ivfpq_topk_distributed": 2,
+    "operators/similarity.py:_ivfpq_reencode_codes_pass": 1,
+    "operators/text.py:ngram_udtf": 1,
+    "operators/timeseries.py:grouped_ewma": 1,
+    "streaming/jobs.py:stateful_user_totals": 1,
+    "streaming/jobs.py:stateful_user_profile": 1,
+    "streaming/jobs.py:stateful_user_profile_tws": 1,
+})
+
+
+def test_python_worker_call_sites_are_pinned():
+    """Tooling guard: the package's Python-worker paths (pandas/Arrow
+    maps, grouped and stateful pandas applies, Python UDFs and UDTFs)
+    are exactly the allow-listed ones, so a new path that would start
+    a worker pool cannot slip in unnoticed."""
+    root = Path(__file__).resolve().parent.parent / "postgres_etl_pipeline_spark"
+    found = Counter()
+
+    def visit(node, rel, fn):
+        for child in ast.iter_child_nodes(node):
+            inner = fn
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            name = (
+                child.attr if isinstance(child, ast.Attribute)
+                else child.id if isinstance(child, ast.Name)
+                else None
+            )
+            if name in PYTHON_WORKER_APIS:
+                found[f"{rel}:{fn}"] += 1
+            visit(child, rel, inner)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        visit(ast.parse(path.read_text(), filename=str(path)), rel, None)
+    assert found == PYTHON_WORKER_SITES

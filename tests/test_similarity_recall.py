@@ -491,3 +491,41 @@ def test_retrain_repairs_recall_after_synthetic_drift(spark, sf_small, tmp_path)
     r_after = recall()
     assert r_after >= r_before, (r_before, r_after)
     assert r_after >= 0.5, (r_before, r_after)
+
+
+# 13 vectors, two of them all-zero (ids 0 and 11); vec 8 is parallel to
+# vec 3 and vecs 5 and 10 sit at cosine 2/3 from it
+_ZERO_NORM_VECS = [
+    [0, 0, 0, 0], [0, 1, 0, 0], [0, 1, 1, 0], [1, 0, 0, 0], [0, 0, 1, 0],
+    [2, 2, 1, 0], [0, 0, 0, 1], [1, 2, 2, 0], [2, 0, 0, 0], [0, 1, 0, 1],
+    [2, 0, 2, 1], [0, 0, 0, 0], [1, 1, 1, 1],
+]
+
+
+def test_zero_norm_vectors_score_null_and_rank_last_in_every_tier(spark):
+    """A zero-norm query or corpus vector scores NULL (never an ANSI
+    DIVIDE_BY_ZERO) and ranks after every scored neighbor — in the
+    exact scorer and in the IVF rerank alike, so a full probe still
+    equals brute force."""
+    from postgres_etl_pipeline_spark.session import local_frame
+
+    emb = local_frame(
+        spark,
+        [(i, [float(x) for x in v]) for i, v in enumerate(_ZERO_NORM_VECS)],
+        "vec_id long, embedding array<double>",
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for ids in ({1, 2}, {0, 3}):
+        queries = emb.filter(F.col("vec_id").isin(*ids))
+        exact = rows(S.brute_force_topk(emb, queries, k=3))
+        ivf = rows(
+            S.ivf_topk(emb, queries, k=3, n_centroids=4, n_probe=4)
+        )
+        assert ivf == exact, ids
+    assert exact == [
+        (0, 1, None, 1), (0, 2, None, 2), (0, 3, None, 3),
+        (3, 5, 0.6667, 2), (3, 8, 1.0, 1), (3, 10, 0.6667, 3),
+    ]
