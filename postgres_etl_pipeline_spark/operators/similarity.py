@@ -4059,7 +4059,6 @@ def filtered_ivf_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    distributed_cut: int = 10_000,
 ) -> DataFrame:
     """FILTERED search over a PERSISTED IVF index (verdict r08 item 3):
     per-query top-k restricted to corpus vectors matching the query's
@@ -4072,29 +4071,19 @@ def filtered_ivf_topk(
     names; this operator is its index-accelerated tier — the index must
     have been built with ``extra_cols=(filter_col,)``).
 
-    Round structure (≤ ⌈k₁/n_probe⌉ rounds, usually 1): each round scans
-    only the NEXT ``n_probe`` unexhausted lists of still-unfilled
-    queries — ``cid IN (…)`` is a file-level partition filter on the
-    cid layout — joins the (query, cid) probe pairs, masks on
-    ``filter_col = query value`` (null-rejecting SQL equality, matching
-    the relational oracle), scores exact cosine JVM-side, and merges the
-    per-query top-k with the accumulator (pure scores: top-k of
-    accumulated ∪ round candidates is exact over every list scanned so
-    far — the :func:`incremental_topk_update` theorem).
-
-    Two execution tiers, one semantics (verdict r09 item 3):
-
-    * ≤ ``distributed_cut`` queries — the SERVING shape: probe orders
-      and fill counts are bounded driver metadata (Q·n_probe pairs,
-      broadcast probe join).
-    * above the cut — the OFFLINE batch shape ("re-rank 10M queries
-      nightly"): probe orders come from the same elementwise-ℓ²
-      broadcast-centroid Arrow pass the corpus assignment uses, rounds
-      are driven by an aggregated fill-count RELATION, and no per-query
-      driver loop or collect runs — driver state is the ≤ n_centroids
-      probed-cid list per round. Identical arithmetic (same nearest-
-      first stable argsort, same chunk boundaries, same merge), so both
-      tiers produce the SAME output — pinned in tests.
+    Rounds run in :func:`_filtered_probe_rounds` (shared with
+    :func:`filtered_ivfpq_topk`), entirely as relations: probe orders
+    are a (query_id, probe_rank, cid) relation, fill counts and probed
+    watermarks an aggregated state relation, and the only driver state
+    is each round's ≤ n_centroids probed-cid list. Each round (≤
+    ⌈k₁/n_probe⌉, usually 1) scans only the NEXT ``n_probe`` unexhausted
+    lists of still-unfilled queries — ``cid IN (…)`` is a file-level
+    partition filter on the cid layout — masks on ``filter_col = query
+    value`` (null-rejecting SQL equality, matching the relational
+    oracle), scores exact cosine JVM-side, and merges the per-query
+    top-k with the accumulator (pure scores: top-k of accumulated ∪
+    round candidates is exact over every list scanned so far — the
+    :func:`incremental_topk_update` theorem).
 
     When the index carries a ``<path>_stats_<filter_col>`` sidecar
     (written at build, merged on append), the first probe set is
@@ -4110,167 +4099,14 @@ def filtered_ivf_topk(
     exist, so its results are exact over its probed prefix of lists. At
     probe-all (``n_probe = n_centroids``) one round scans everything and
     the output equals the filtered brute force — the hash-oracled
-    catalog configuration (driver-checked through the DISTRIBUTED tier:
-    the catalog entry forces ``distributed_cut=0``).
+    catalog configuration.
     """
     path = _resolve_maybe_root(spark, path)
-    # bounded peek: LIMIT cut+1 keeps the dispatch probe O(cut) even on
-    # a 10M-row query relation
-    over_cut = (
-        queries.limit(int(distributed_cut) + 1).count() > distributed_cut
-    )
-    args = (spark, path, queries, filter_col, k, n_probe, id_col, vec_col)
-    if over_cut:
-        return _filtered_ivf_topk_distributed(*args)
-    return _filtered_ivf_topk_driver(*args)
-
-
-def _probe_jump_starts(stats_rows, order, qmeta, k: int, n_probe: int, n_cents: int):
-    """Per-query first-round prefix from the stats sidecar: the first
-    n_probe-multiple p with cumulative match count ≥ k along the query's
-    nearest-first list order (n_cents when the value can't fill k —
-    straight to exhaustion, as the fill-driven loop would eventually).
-    Returns {} when no stats exist (fall back to one-chunk starts)."""
-    if stats_rows is None:
-        return {}
-    counts = {}  # (cid, value) -> n
-    for r in stats_rows:
-        if r["value"] is not None:
-            counts[(int(r["cid"]), r["value"])] = int(r["n"])
-    starts = {}
-    for qid, (_qv, qval) in qmeta.items():
-        cum = 0
-        start = n_cents
-        for pos, cid in enumerate(order[qid]):
-            cum += counts.get((cid, qval), 0)
-            if cum >= k:
-                # round up to the chunk boundary the fill-driven loop
-                # probes at — output-identity depends on it
-                start = min(-(-(pos + 1) // n_probe) * n_probe, n_cents)
-                break
-        starts[qid] = max(start, n_probe)
-    return starts
-
-
-def _filtered_ivf_topk_driver(
-    spark, path, queries, filter_col, k, n_probe, id_col, vec_col
-) -> DataFrame:
-    """The bounded-Q serving tier of :func:`filtered_ivf_topk` (see its
-    docstring for the semantics and the round structure)."""
-    import numpy as np
-
     cents = read_ivf_centroids(spark, path)
-    empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
-    q_rows = queries.select(id_col, vec_col, filter_col).collect()
-    q_rows = [r for r in q_rows if r[2] is not None]
-    if not q_rows or not len(cents):
-        return local_frame(spark, [], empty_schema)
-    n_cents = len(cents)
-    n_probe = max(1, min(int(n_probe), n_cents))
-    # per-query nearest-first list order (bounded driver metadata)
-    order = {}
-    for r in q_rows:
-        qv = np.array(r[1], dtype=np.float64)
-        d = ((cents - qv) ** 2).sum(axis=1)
-        order[int(r[0])] = [int(x) for x in np.argsort(d, kind="stable")]
-    qmeta = {int(r[0]): (list(map(float, r[1])), r[2]) for r in q_rows}
-    # selectivity-sized first probe set (verdict r09 item 6): bounded
-    # sidecar read — only the probe queries' values matter
-    stats = read_ivf_list_stats(spark, path, filter_col)
-    qvals = {v for _, v in qmeta.values()}
-    stats_rows = (
-        stats.filter(F.col("value").isin(list(qvals))).collect()
-        if stats is not None and qvals
-        else None
-    )
-    starts = _probe_jump_starts(stats_rows, order, qmeta, k, n_probe, n_cents)
-    acc = local_frame(
-        spark, [], "query_id long, neighbor_id long, cos_sim double"
-    )
-    filled = {qid: 0 for qid in qmeta}
-    probed_upto = {qid: 0 for qid in qmeta}
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    first_round = True
-    rounds = 0
-    while True:
-        probes = []
-        for qid, upto in probed_upto.items():
-            if filled[qid] >= k or upto >= n_cents:
-                continue
-            step = starts.get(qid, n_probe) if first_round else n_probe
-            qv, qval = qmeta[qid]
-            for cid in order[qid][upto : upto + step]:
-                probes.append((qid, cid, qv, qval))
-            probed_upto[qid] = min(upto + step, n_cents)
-        first_round = False
-        if not probes:
-            break
-        rounds += 1
-        _filtered_ivf_topk_driver.last_rounds = rounds  # test observable
-        probe_df = local_frame(
-            spark,
-            probes,
-            f"query_id long, cid int, qv array<double>, "
-            f"qval {queries.schema[filter_col].dataType.simpleString()}",
-        )
-        round_cids = sorted({p[1] for p in probes})
-        scan = spark.read.parquet(path).filter(F.col("cid").isin(round_cids))
-        scored = (
-            scan.join(F.broadcast(probe_df), "cid")
-            .filter(
-                (F.col("query_id") != F.col("neighbor_id"))
-                & (F.col(filter_col) == F.col("qval"))
-            )
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(cosine(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cos_sim")
-        )
-        # merge round candidates into the Q·k accumulator (exact over the
-        # probed prefix — pure per-pair scores), flatten lineage per round
-        acc = (
-            acc.unionByName(scored)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cos_sim")
-            .localCheckpoint(eager=True)
-        )
-        for row in (
-            acc.groupBy("query_id").agg(F.count(F.lit(1)).alias("n")).collect()
-        ):
-            filled[int(row["query_id"])] = int(row["n"])
-    return acc.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
-def _filtered_ivf_topk_distributed(
-    spark, path, queries, filter_col, k, n_probe, id_col, vec_col
-) -> DataFrame:
-    """The large-Q offline tier of :func:`filtered_ivf_topk`: NO
-    per-query driver state. Probe orders are a (query_id, probe_rank,
-    cid) RELATION from one broadcast-centroid Arrow pass (elementwise ℓ²
-    + stable argsort — bit-identical to the driver tier's ordering);
-    per-round fill counts and probed-upto watermarks live in a
-    (query_id, filled, upto) relation updated by one aggregation per
-    round. The only driver-side values are the round's distinct probed
-    cids (≤ n_centroids — the partition-pruning literal) and the loop
-    counter (≤ ⌈k₁/n_probe⌉)."""
-    import numpy as np
-    import pandas as pd
-
-    cents = read_ivf_centroids(spark, path)
-    empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
     if not len(cents):
-        return local_frame(spark, [], empty_schema)
-    n_cents = len(cents)
-    n_probe = max(1, min(int(n_probe), n_cents))
+        return local_frame(
+            spark, [], "query_id long, neighbor_id long, cos_sim double, rank int"
+        )
     qdf = (
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -4280,103 +4116,138 @@ def _filtered_ivf_topk_distributed(
         .filter(F.col("qval").isNotNull())
         .localCheckpoint(eager=True)
     )
-    if qdf.isEmpty():
-        return local_frame(spark, [], empty_schema)
-    bc = spark.sparkContext.broadcast(np.asarray(cents, dtype=np.float64))
+    acc = _filtered_probe_rounds(
+        spark, path, qdf, "qv", cents, filter_col, k, n_probe,
+        score=lambda pairs: pairs.select(
+            "query_id",
+            "neighbor_id",
+            F.round(cosine(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
+        ),
+        order=F.col("cos_sim").desc(),
+        score_ddl="cos_sim double",
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id")
+    )
+    return acc.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
 
-    def probe_order(batches):
+
+def _probe_order(qdf: DataFrame, vec: str, cents) -> DataFrame:
+    """Every query's nearest-first list order as a (query_id, probe_rank,
+    cid) relation: ONE shuffle-free Arrow pass over ``qdf`` against the
+    broadcast centroids. Distances are the elementwise Σ(c − q)² (one
+    centroid at a time, so a batch holds rows × d temporaries, never
+    rows × n_centroids × d) and ties keep the lowest cid (stable
+    argsort). The arithmetic follows ``cents``' dtype: float64 for the
+    raw index, exact int64 for IVF-PQ lattice codes — where it equals
+    the expanded |q|² − 2q·c + |c|² form integer for integer."""
+    import numpy as np
+    import pandas as pd
+
+    cents = np.asarray(cents)
+    n_cents = len(cents)
+    bc = qdf.sparkSession.sparkContext.broadcast(cents)
+
+    def order(batches):
         C = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            Q = np.array(list(pdf["qv"]), dtype=np.float64)
-            # elementwise (C - q)² sum, NOT the expanded dot-product form:
-            # the driver tier uses this formula and float rounding must
-            # agree for the stable-argsort tie order to be identical
-            d2 = ((C[None, :, :] - Q[:, None, :]) ** 2).sum(axis=2)
-            order = np.argsort(d2, axis=1, kind="stable")
-            n = len(Q)
+            Q = np.array(list(pdf[vec]), dtype=C.dtype)
+            d2 = np.stack([((Q - c) ** 2).sum(axis=1) for c in C], axis=1)
             yield pd.DataFrame(
                 {
                     "query_id": np.repeat(
                         pdf["query_id"].to_numpy(dtype=np.int64), n_cents
                     ),
-                    "probe_rank": np.tile(np.arange(n_cents), n),
-                    "cid": order.ravel(),
+                    "probe_rank": np.tile(np.arange(n_cents), len(Q)),
+                    "cid": np.argsort(d2, axis=1, kind="stable").ravel(),
                 }
             )
 
-    porder = qdf.select("query_id", "qv").mapInPandas(
-        probe_order, "query_id long, probe_rank int, cid int"
-    ).localCheckpoint(eager=True)
-    state = qdf.select(
-        "query_id", F.lit(0).alias("filled"), F.lit(0).alias("upto")
+    return qdf.select("query_id", vec).mapInPandas(
+        order, "query_id long, probe_rank int, cid int"
     )
-    # DISTRIBUTED selectivity jump (closes SCALE.md r10 gap #1): the same
-    # first-round sizing the driver tier does, as one cumsum window over
-    # (probe order ⋈ stats) — each query's round 1 covers the first
-    # n_probe-multiple prefix whose cumulative match count reaches k.
-    # Output-identical by the fill(p) ≤ cum(p) argument (and identical to
-    # a non-jumping run: the jump target is a chunk boundary the
-    # fill-driven grid also stops at); only the ROUND COUNT drops.
+
+
+def _filtered_probe_rounds(
+    spark, path, qdf, vec, cents, filter_col, target, n_probe,
+    score, order, score_ddl,
+) -> DataFrame:
+    """The probe-expansion loop of filtered index search, shared by both
+    cell codecs. ``qdf`` is the checkpointed (query_id, ``vec``, qval,
+    …) query relation with NULL filter values already dropped; ``score``
+    maps the round's masked (corpus row ⋈ probing query) pairs to
+    (query_id, neighbor_id, <score>) and ``order`` ranks that score
+    best-first. Returns the per-query best-``target`` accumulator:
+    exact over each query's probed prefix of lists, where a query stops
+    expanding once it holds ``target`` matches or every list is probed.
+
+    Each round keeps state as relations — a (query_id, filled, upto,
+    jump) row per query — so no per-query value reaches the driver;
+    the one collect is the round's distinct probed cids (≤ n_centroids,
+    the partition-pruning literal). With no queries the first round
+    probes nothing and the loop ends. ``last_rounds`` (the number of
+    rounds that scanned) is the test observable."""
+    n_cents = len(cents)
+    n_probe = max(1, min(int(n_probe), n_cents))
+    porder = _probe_order(qdf, vec, cents).localCheckpoint(eager=True)
     state = _attach_probe_jump(
-        spark, path, state, porder, qdf, filter_col, k, n_probe, n_cents
+        spark, path,
+        qdf.select("query_id", F.lit(0).alias("filled"), F.lit(0).alias("upto")),
+        porder, qdf, filter_col, target, n_probe, n_cents,
     ).localCheckpoint(eager=True)
     acc = local_frame(
-        spark, [], "query_id long, neighbor_id long, cos_sim double"
+        spark, [], f"query_id long, neighbor_id long, {score_ddl}"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    _filtered_ivf_topk_distributed.last_rounds = 0  # test observable
-    for _round in range(-(-n_cents // n_probe)):
-        active = state.filter(
-            (F.col("filled") < k) & (F.col("upto") < n_cents)
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+
+    def best(df):
+        return (
+            df.withColumn("_r", F.row_number().over(w))
+            .filter(F.col("_r") <= target)
+            .drop("_r")
         )
+
+    unfilled = (F.col("filled") < target) & (F.col("upto") < n_cents)
+    # exclusive probe_rank bound of a query's CURRENT round: the
+    # selectivity jump target in its first round (upto == 0), the next
+    # n_probe chunk afterwards — one expression for the probe filter and
+    # the watermark advance, so they can never disagree
+    round_end = F.when(F.col("upto") == 0, F.col("jump")).otherwise(
+        F.col("upto") + F.lit(n_probe)
+    )
+    _filtered_probe_rounds.last_rounds = 0
+    for _round in range(-(-n_cents // n_probe)):
         probes = (
-            active.select("query_id", "upto", "jump")
+            state.filter(unfilled)
+            .select("query_id", "upto", "jump")
             .join(porder, "query_id")
             .filter(
                 (F.col("probe_rank") >= F.col("upto"))
-                & (F.col("probe_rank") < _round_end(n_probe))
+                & (F.col("probe_rank") < round_end)
             )
             .select("query_id", "cid")
         )
-        # the round's partition-pruning literal — bounded by n_centroids,
-        # the ONLY thing collected per round
         round_cids = sorted(
             int(r["cid"]) for r in probes.select("cid").distinct().collect()
         )
         if not round_cids:
             break
-        _filtered_ivf_topk_distributed.last_rounds = _round + 1
-        pairs = probes.join(qdf, "query_id")
+        _filtered_probe_rounds.last_rounds = _round + 1
         scan = spark.read.parquet(path).filter(F.col("cid").isin(round_cids))
         # cid has ≤ n_centroids distinct values, so this join is skewed
         # by construction (every (corpus row, probing query) pair must
         # be scored — the algorithm's work, not an accident); AQE's
         # skew-join splitting spreads the per-cid partitions
-        scored = (
-            scan.join(pairs, "cid")
-            .filter(
-                (F.col("query_id") != F.col("neighbor_id"))
-                & (F.col(filter_col) == F.col("qval"))
-            )
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(cosine(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cos_sim")
+        pairs = scan.join(probes.join(qdf, "query_id"), "cid").filter(
+            (F.col("query_id") != F.col("neighbor_id"))
+            & (F.col(filter_col) == F.col("qval"))
         )
-        acc = (
-            acc.unionByName(scored)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cos_sim")
-            .localCheckpoint(eager=True)
+        acc = best(acc.unionByName(best(score(pairs)))).localCheckpoint(
+            eager=True
         )
         counts = acc.groupBy("query_id").agg(F.count(F.lit(1)).alias("n"))
         state = (
@@ -4384,10 +4255,7 @@ def _filtered_ivf_topk_distributed(
             .select(
                 "query_id",
                 F.coalesce(F.col("n"), F.lit(0)).cast("int").alias("filled"),
-                F.when(
-                    (F.col("filled") < k) & (F.col("upto") < n_cents),
-                    F.least(_round_end(n_probe), F.lit(n_cents)),
-                )
+                F.when(unfilled, F.least(round_end, F.lit(n_cents)))
                 .otherwise(F.col("upto"))
                 .cast("int")
                 .alias("upto"),
@@ -4395,31 +4263,19 @@ def _filtered_ivf_topk_distributed(
             )
             .localCheckpoint(eager=True)
         )
-    return acc.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
-def _round_end(n_probe: int):
-    """The exclusive probe_rank bound of a state row's CURRENT round:
-    the selectivity jump target for a query's first round (upto == 0),
-    the next n_probe chunk afterwards. Shared by the probe filter and
-    the watermark advance so they can never disagree."""
-    return F.when(F.col("upto") == 0, F.col("jump")).otherwise(
-        F.col("upto") + F.lit(n_probe)
-    )
+    return acc
 
 
 def _attach_probe_jump(
     spark, path, state, porder, qdf, filter_col, target, n_probe, n_cents
 ):
-    """Add the per-query first-round ``jump`` column to a distributed
-    probe-state relation: with a ``<path>_stats_<filter_col>`` sidecar,
-    one (porder ⋈ qval ⋈ stats) join + a cumulative-sum window finds
-    each query's first covering prefix (cum ≥ ``target``), rounded up to
-    the n_probe grid; a value the stats can't cover jumps straight to
-    exhaustion (probe everything in round 1 — what fill-driven expansion
-    would reach anyway). Without stats, jump = n_probe (plain chunks)."""
+    """Add the per-query first-round ``jump`` column to the probe-state
+    relation: with a ``<path>_stats_<filter_col>`` sidecar, one (porder
+    ⋈ qval ⋈ stats) join + a cumulative-sum window finds each query's
+    first covering prefix (cum ≥ ``target``), rounded up to the n_probe
+    grid; a value the stats can't cover jumps straight to exhaustion
+    (probe everything in round 1 — what fill-driven expansion would
+    reach anyway). Without stats, jump = n_probe (plain chunks)."""
     stats = read_ivf_list_stats(spark, path, filter_col)
     if stats is None:
         return state.withColumn("jump", F.lit(int(n_probe)))
@@ -5079,12 +4935,10 @@ def filtered_ivfpq_topk(
     scale: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    distributed_cut: int = 10_000,
 ) -> DataFrame:
     """FILTERED search over a persisted IVFADC layout — the compressed
-    tier of :func:`filtered_ivf_topk`: the metadata mask rides INSIDE
-    the ADC gather batch (a (row, query) pair is emitted only when the
-    query probes the row's list AND the filter values match), so the
+    tier of :func:`filtered_ivf_topk`: the metadata mask is applied to
+    the (corpus row ⋈ probing query) pairs BEFORE ADC scoring, so the
     candidate scan still reads only ``(neighbor_id, cid, codes,
     filter_col)`` of probed partitions, and per-query probe EXPANSION
     keeps scanning nearest-first lists until the query has ``k·rerank``
@@ -5092,238 +4946,33 @@ def filtered_ivfpq_topk(
     exhausted — a selective filter cannot under-fill the way
     post-filtering the unfiltered candidate list does.
 
-    Round structure mirrors :func:`filtered_ivf_topk`: ≤ ⌈k₁/n_probe⌉
-    rounds, each scanning only the NEXT lists of still-unfilled queries
-    (file-level partition pruning); the per-round candidate merge keeps
-    the per-query top-``k·rerank`` by the exact int64 (adc,
-    neighbor_id) order — ADC scores are a pure function of (row codes,
-    query, row's list), so the merged pool is exact over every list
-    scanned so far (the :func:`incremental_topk_update` argument, ADC
-    flavor). The final exact re-rank reads ``cv`` for candidates only.
+    Rounds run in the same relation-driven loop as
+    :func:`filtered_ivf_topk` (:func:`_filtered_probe_rounds`): probe
+    orders from the exact int64 lattice distances, ADC computed per
+    masked pair in one Arrow pass against the broadcast sidecars
+    (:func:`_adc_scores`), and the per-round candidate merge keeps the
+    per-query top-``k·rerank`` by the exact int64 (adc, neighbor_id)
+    order — ADC scores are a pure function of (row codes, query, row's
+    list), so the merged pool is exact over every list scanned so far
+    (the :func:`incremental_topk_update` argument, ADC flavor). A
+    ``<path>_stats_<filter_col>`` sidecar sizes the first probe set
+    (jump target = the k·rerank pool), changing no output by the same
+    fill(p) ≤ cum(p) argument. The final exact re-rank joins the pool
+    back to the layout's ``cv`` and the query relation.
 
     At probe-all one round scans everything and the output equals the
     residual pipeline restricted to matching labels — the hash-oracled
     catalog configuration. NULL filter values match nothing on either
     side (null-rejecting equality, the relational-oracle convention).
     The layout must have been built with ``extra_cols=(filter_col,)``.
-
-    Execution tiers mirror :func:`filtered_ivf_topk` (verdict r09 items
-    3 & 6 at the COMPRESSED tier): up to ``distributed_cut`` queries,
-    probe orders, LUTs, and fill counts are bounded driver metadata;
-    above it the distributed tier derives probe orders as a relation
-    (exact int64 lattice distances — bit-identical ordering), computes
-    ADC per joined (row, probing query) pair in one Arrow pass against
-    the broadcast sidecars, drives rounds from an aggregated fill-count
-    relation, and re-ranks distributively — no per-query driver state.
-    ADC is exact int64 in both tiers, so they produce IDENTICAL output
-    (pinned in tests). A ``<path>_stats_<filter_col>`` sidecar sizes the
-    driver tier's first probe set (jump target = the k·rerank pool),
-    changing no output by the same fill(p) ≤ cum(p) argument.
     """
     path = _resolve_maybe_root(spark, path)
-    over_cut = (
-        queries.limit(int(distributed_cut) + 1).count() > distributed_cut
-    )
-    args = (
-        spark, path, queries, filter_col, k, rerank, n_probe, scale,
-        id_col, vec_col,
-    )
-    if over_cut:
-        return _filtered_ivfpq_topk_distributed(*args)
-    return _filtered_ivfpq_topk_driver(*args)
-
-
-def _filtered_ivfpq_topk_driver(
-    spark, path, queries, filter_col, k, rerank, n_probe, scale,
-    id_col, vec_col,
-) -> DataFrame:
-    """The bounded-Q serving tier of :func:`filtered_ivfpq_topk` (see
-    its docstring for semantics and round structure)."""
-    import numpy as np
-    import pandas as pd
-
-    empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
-    Cc, As, stored_scale = read_ivfpq_sidecars(spark, path)
-    scale = _resolve_index_scale(stored_scale, scale, "filtered_ivfpq_topk")
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double_vec(vec_col).alias("qv"),
-        fixed_point_codes(as_double_vec(vec_col), scale).alias("qq"),
-        F.col(filter_col).alias("qval"),
-    ).collect()
-    q_rows = [r for r in q_rows if r["qval"] is not None]
-    if not q_rows or not len(Cc):
-        return local_frame(spark, [], empty_schema)
-    m, d = As.shape[1], As.shape[2]
-    n_cents = len(Cc)
-    n_probe = max(1, min(int(n_probe), n_cents))
-    pool = k * rerank
-    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    Qq = np.array([r["qq"] for r in q_rows], dtype=np.int64)
-    qvals = np.array([r["qval"] for r in q_rows])
-    qvals_py = [r["qval"] for r in q_rows]
-    qd2 = (
-        (Qq * Qq).sum(axis=1)[:, None]
-        - 2 * (Qq @ Cc.T)
-        + (Cc * Cc).sum(axis=1)[None, :]
-    )
-    order = np.argsort(qd2, axis=1, kind="stable")  # (Q, k1) nearest-first
-    nq = len(qids)
-    # selectivity-sized first probe set (verdict r09 item 6, compressed
-    # tier): jump to the first n_probe-multiple prefix whose cumulative
-    # match count covers the k·rerank POOL — fill(p) ≤ cum(p), so the
-    # fill-driven loop could never have stopped earlier (output identity)
-    starts = np.full(nq, n_probe, dtype=np.int64)
-    stats = read_ivf_list_stats(spark, path, filter_col)
-    if stats is not None:
-        counts = {
-            (int(r["cid"]), r["value"]): int(r["n"])
-            for r in stats.filter(
-                F.col("value").isin(list(set(qvals_py)))
-            ).collect()
-            if r["value"] is not None
-        }
-        for qi in range(nq):
-            cum, start = 0, n_cents
-            for pos in range(n_cents):
-                cum += counts.get((int(order[qi, pos]), qvals_py[qi]), 0)
-                if cum >= pool:
-                    start = min(-(-(pos + 1) // n_probe) * n_probe, n_cents)
-                    break
-            starts[qi] = max(start, n_probe)
-    filled = np.zeros(nq, dtype=np.int64)
-    probed_upto = np.zeros(nq, dtype=np.int64)
-    acc = local_frame(spark, [], "query_id long, neighbor_id long, adc long")
-    cand_w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
-    )
-    first_round = True
-    while True:
-        # this round's (query slot → cid) assignment: the next n_probe
-        # unexhausted lists of each unfilled query
-        round_lists = {}  # qi -> list of cids
-        for qi in range(nq):
-            if filled[qi] >= pool or probed_upto[qi] >= n_cents:
-                continue
-            step = int(starts[qi]) if first_round else n_probe
-            upto = int(probed_upto[qi])
-            round_lists[qi] = [
-                int(x) for x in order[qi, upto : upto + step]
-            ]
-            probed_upto[qi] = min(upto + step, n_cents)
-        first_round = False
-        if not round_lists:
-            break
-        width = max(len(v) for v in round_lists.values())
-        lut = np.zeros((nq, width, m, len(As)), dtype=np.int64)
-        slot_of = np.full((nq, n_cents), -1, dtype=np.int64)
-        probe_mask = np.zeros((nq, n_cents), dtype=bool)
-        for qi, cids_q in round_lists.items():
-            idx = np.array(cids_q, dtype=np.int64)
-            probe_mask[qi, idx] = True
-            slot_of[qi, idx] = np.arange(len(idx))
-            qres = (Qq[qi][None, :] - Cc[idx]).reshape(len(idx), m, d)
-            diffs = qres[:, :, None, :] - As.transpose(1, 0, 2)[None, :, :, :]
-            lut[qi, : len(idx)] = (diffs * diffs).sum(-1)
-        bc = spark.sparkContext.broadcast(
-            (qids, qvals, lut, slot_of, probe_mask)
-        )
-
-        def adc_gather(batches):
-            b_qids, b_qvals, b_lut, b_slot, b_mask = bc.value
-            q_arange = np.arange(len(b_qids))[:, None]
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                nids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-                cids = pdf["cid"].to_numpy(dtype=np.int64)
-                codes = np.array(list(pdf["codes"]), dtype=np.int64)
-                cvals = pdf[filter_col].to_numpy()
-                slots = b_slot[:, cids]  # (Q, n)
-                adc = np.zeros((len(nids), len(b_qids)), dtype=np.int64)
-                for s in range(codes.shape[1]):
-                    adc += b_lut[
-                        q_arange, slots, s, codes[:, s][None, :]
-                    ].T
-                # mask: probed list AND metadata match (NULL never matches)
-                keep = b_mask[:, cids].T & (
-                    cvals[:, None] == b_qvals[None, :]
-                )
-                ri, qi = np.nonzero(keep)
-                yield pd.DataFrame(
-                    {
-                        "query_id": b_qids[qi],
-                        "neighbor_id": nids[ri],
-                        "adc": adc[ri, qi],
-                    }
-                )
-
-        round_cids = sorted({c for v in round_lists.values() for c in v})
-        scan = (
-            spark.read.parquet(path)
-            .filter(F.col("cid").isin(round_cids))
-            .filter(F.col(filter_col).isNotNull())
-            .select("neighbor_id", "cid", "codes", filter_col)
-        )
-        scored = (
-            scan.mapInPandas(
-                adc_gather, "query_id long, neighbor_id long, adc long"
-            )
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn("crank", F.row_number().over(cand_w))
-            .filter(F.col("crank") <= pool)
-            .select("query_id", "neighbor_id", "adc")
-        )
-        acc = (
-            acc.unionByName(scored)
-            .withColumn("crank", F.row_number().over(cand_w))
-            .filter(F.col("crank") <= pool)
-            .select("query_id", "neighbor_id", "adc")
-            .localCheckpoint(eager=True)
-        )
-        counts = {
-            int(r["query_id"]): int(r["n"])
-            for r in acc.groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        for qi in range(nq):
-            filled[qi] = counts.get(int(qids[qi]), 0)
-    cands = acc.select("query_id", "neighbor_id")
-    stored = spark.read.parquet(path).select(
-        F.col("neighbor_id").alias(id_col), F.col("cv").alias(vec_col)
-    )
-    return _rerank_exact_cosine(cands, stored, q_rows, k, id_col, vec_col)
-
-
-def _filtered_ivfpq_topk_distributed(
-    spark, path, queries, filter_col, k, rerank, n_probe, scale,
-    id_col, vec_col,
-) -> DataFrame:
-    """The large-Q offline tier of :func:`filtered_ivfpq_topk`: NO
-    per-query driver state. Probe orders come from one Arrow pass over
-    the query relation (exact int64 lattice distances + stable argsort —
-    the driver tier's ordering, bit for bit); each round's candidates
-    are scored by computing ADC per joined (corpus row, probing query)
-    pair against the BROADCAST sidecars — more FLOPs per pair than the
-    driver tier's per-query LUT gather (d multiplies per subspace
-    instead of one lookup), but exactly the same int64 value, which is
-    what makes the two tiers' outputs identical — and the exact re-rank
-    joins candidates back to the layout's ``cv`` and the query relation
-    distributively. Driver state per round: the ≤ n_centroids probed-cid
-    literal and the loop counter."""
-    import numpy as np
-    import pandas as pd
-
-    empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
     Cc, As, stored_scale = read_ivfpq_sidecars(spark, path)
     scale = _resolve_index_scale(stored_scale, scale, "filtered_ivfpq_topk")
     if not len(Cc):
-        return local_frame(spark, [], empty_schema)
-    m, d = As.shape[1], As.shape[2]
-    n_cents = len(Cc)
-    n_probe = max(1, min(int(n_probe), n_cents))
-    pool = k * rerank
+        return local_frame(
+            spark, [], "query_id long, neighbor_id long, cos_sim double, rank int"
+        )
     qdf = (
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -5334,48 +4983,50 @@ def _filtered_ivfpq_topk_distributed(
         .filter(F.col("qval").isNotNull())
         .localCheckpoint(eager=True)
     )
-    if qdf.isEmpty():
-        return local_frame(spark, [], empty_schema)
-    bc = spark.sparkContext.broadcast((Cc, np.asarray(As, dtype=np.int64)))
-
-    def probe_order(batches):
-        b_Cc, _ = bc.value
-        c_sq = (b_Cc * b_Cc).sum(axis=1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Qq = np.array(list(pdf["qq"]), dtype=np.int64)
-            d2 = (
-                (Qq * Qq).sum(axis=1)[:, None]
-                - 2 * (Qq @ b_Cc.T)
-                + c_sq[None, :]
-            )
-            order = np.argsort(d2, axis=1, kind="stable")
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(
-                        pdf["query_id"].to_numpy(dtype=np.int64), n_cents
-                    ),
-                    "probe_rank": np.tile(np.arange(n_cents), len(Qq)),
-                    "cid": order.ravel(),
-                }
-            )
-
-    porder = qdf.select("query_id", "qq").mapInPandas(
-        probe_order, "query_id long, probe_rank int, cid int"
-    ).localCheckpoint(eager=True)
-    state = qdf.select(
-        "query_id", F.lit(0).alias("filled"), F.lit(0).alias("upto")
+    acc = _filtered_probe_rounds(
+        spark, path, qdf, "qq", Cc, filter_col, k * rerank, n_probe,
+        score=lambda pairs: _adc_scores(pairs, Cc, As),
+        order=F.col("adc").asc(),
+        score_ddl="adc long",
     )
-    # distributed selectivity jump, pool-targeted (see the raw tier)
-    state = _attach_probe_jump(
-        spark, path, state, porder, qdf, filter_col, pool, n_probe, n_cents
-    ).localCheckpoint(eager=True)
-    acc = local_frame(spark, [], "query_id long, neighbor_id long, adc long")
-    cand_w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
+    # exact re-rank: same arithmetic as _rerank_exact_cosine, with the
+    # query side joined as a relation instead of collected
+    exact = (
+        acc.select("query_id", "neighbor_id")
+        .join(
+            spark.read.parquet(path).select(
+                "neighbor_id", F.col("cv").alias("_cv")
+            ),
+            "neighbor_id",
+        )
+        .join(qdf.select("query_id", "qv"), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(cosine(F.col("_cv"), F.col("qv")), 4).alias("cos_sim"),
+        )
     )
-    _filtered_ivfpq_topk_distributed.last_rounds = 0  # test observable
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id")
+    )
+    return exact.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _adc_scores(pairs: DataFrame, Cc, As) -> DataFrame:
+    """Exact int64 ADC of each (corpus row, probing query) pair — the
+    query's lattice residual against the row's list centroid, minus the
+    row's code words, squared and summed — in one Arrow pass against the
+    broadcast sidecars. ``pairs`` carries (query_id, neighbor_id, cid,
+    codes, qq); the output is (query_id, neighbor_id, adc)."""
+    import numpy as np
+    import pandas as pd
+
+    m, d = As.shape[1], As.shape[2]
+    bc = pairs.sparkSession.sparkContext.broadcast(
+        (Cc, np.asarray(As, dtype=np.int64))
+    )
 
     def adc_rows(batches):
         b_Cc, b_As = bc.value
@@ -5398,91 +5049,9 @@ def _filtered_ivfpq_topk_distributed(
                 }
             )
 
-    for _round in range(-(-n_cents // n_probe)):
-        active = state.filter(
-            (F.col("filled") < pool) & (F.col("upto") < n_cents)
-        )
-        probes = (
-            active.select("query_id", "upto", "jump")
-            .join(porder, "query_id")
-            .filter(
-                (F.col("probe_rank") >= F.col("upto"))
-                & (F.col("probe_rank") < _round_end(n_probe))
-            )
-            .select("query_id", "cid")
-        )
-        round_cids = sorted(
-            int(r["cid"]) for r in probes.select("cid").distinct().collect()
-        )
-        if not round_cids:
-            break
-        _filtered_ivfpq_topk_distributed.last_rounds = _round + 1
-        pairs = probes.join(qdf.select("query_id", "qq", "qval"), "query_id")
-        scan = (
-            spark.read.parquet(path)
-            .filter(F.col("cid").isin(round_cids))
-            .filter(F.col(filter_col).isNotNull())
-            .select("neighbor_id", "cid", "codes", filter_col)
-        )
-        scored = (
-            scan.join(pairs, "cid")
-            .filter(
-                (F.col("query_id") != F.col("neighbor_id"))
-                & (F.col(filter_col) == F.col("qval"))
-            )
-            .select("query_id", "neighbor_id", "cid", "codes", "qq")
-            .mapInPandas(adc_rows, "query_id long, neighbor_id long, adc long")
-            .withColumn("crank", F.row_number().over(cand_w))
-            .filter(F.col("crank") <= pool)
-            .select("query_id", "neighbor_id", "adc")
-        )
-        acc = (
-            acc.unionByName(scored)
-            .withColumn("crank", F.row_number().over(cand_w))
-            .filter(F.col("crank") <= pool)
-            .select("query_id", "neighbor_id", "adc")
-            .localCheckpoint(eager=True)
-        )
-        counts = acc.groupBy("query_id").agg(F.count(F.lit(1)).alias("n"))
-        state = (
-            state.join(counts, "query_id", "left")
-            .select(
-                "query_id",
-                F.coalesce(F.col("n"), F.lit(0)).cast("int").alias("filled"),
-                F.when(
-                    (F.col("filled") < pool) & (F.col("upto") < n_cents),
-                    F.least(_round_end(n_probe), F.lit(n_cents)),
-                )
-                .otherwise(F.col("upto"))
-                .cast("int")
-                .alias("upto"),
-                "jump",
-            )
-            .localCheckpoint(eager=True)
-        )
-    # distributed exact re-rank: same arithmetic as _rerank_exact_cosine,
-    # with the query side joined as a relation instead of collected
-    exact = (
-        acc.select("query_id", "neighbor_id")
-        .join(
-            spark.read.parquet(path).select(
-                "neighbor_id", F.col("cv").alias("_cv")
-            ),
-            "neighbor_id",
-        )
-        .join(qdf.select("query_id", "qv"), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("_cv"), F.col("qv")), 4).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return exact.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return pairs.select(
+        "query_id", "neighbor_id", "cid", "codes", "qq"
+    ).mapInPandas(adc_rows, "query_id long, neighbor_id long, adc long")
 
 
 def resplit_ivfpq_cell(

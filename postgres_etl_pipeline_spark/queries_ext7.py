@@ -290,31 +290,24 @@ def _filtered_topk_oracle() -> str:
     # equals the filtered brute force and shares filtered_label_topk's
     # oracle verbatim — the same-SQL no-drift guarantee the prefix miners
     # use; the expansion path (selective filter at n_probe < k1 still
-    # fills k) is pinned by the under-fill regression test. Round 10:
-    # distributed_cut=0 forces the DISTRIBUTED probe tier (verdict r09
-    # item 3 — probe orders as a relation, fill counts as an
-    # aggregation, no per-query driver loop), so the hash-green row
-    # certifies the offline 10M-query shape, while the bounded-driver
-    # serving tier is pinned equal in tests/test_filtered_probe.py
+    # fills k) is pinned by the under-fill regression test and by the
+    # probe-prefix reference test in tests/test_filtered_probe.py
     _filtered_topk_oracle(),
     survey="§7 Phase 5 extension (verdict r08 item 3 + r09 item 3): "
     "FILTERED ANN over the persisted cid-partitioned index — metadata "
     "mask INSIDE the probed scan (null-rejecting equality, corpus never "
-    "shuffled by the filter column) with per-query probe EXPANSION and "
-    "TWO execution tiers: bounded-driver serving and a distributed "
-    "offline tier (probe-order relation from one broadcast-centroid "
-    "Arrow pass, relation-driven rounds, O(n_centroids) driver state) "
-    "that engages above a query-count cut; probe-all = exact, shared "
-    "oracle with filtered_label_topk, driver-checked through the "
-    "distributed tier",
+    "shuffled by the filter column) with per-query probe EXPANSION "
+    "through relation-driven rounds (probe-order relation from one "
+    "broadcast-centroid Arrow pass, fill counts as an aggregation, "
+    "O(n_centroids) driver state); probe-all = exact, shared oracle "
+    "with filtered_label_topk",
     tags=("ext", "similarity"),
 )
 def filtered_ivf_topk(spark, sf_dir):
     """Build the index with the label column persisted next to each
     vector (extra_cols), search probe-all with the same-label constraint
-    — hash-equal to the brute-force filtered oracle — THROUGH the
-    distributed tier (distributed_cut=0); scratch-lifecycle discipline
-    as the other persisted-index entries."""
+    — hash-equal to the brute-force filtered oracle; scratch-lifecycle
+    discipline as the other persisted-index entries."""
     import shutil
     import tempfile
 
@@ -330,7 +323,7 @@ def filtered_ivf_topk(spark, sf_dir):
         )
         out = S.filtered_ivf_topk(
             spark, path, emb.filter(F.col("vec_id") < 20),
-            filter_col="label", k=5, n_probe=16, distributed_cut=0,
+            filter_col="label", k=5, n_probe=16,
         )
         rows = out.collect()
         schema = out.schema
@@ -444,24 +437,22 @@ def ivfpq_index_search(spark, sf_dir):
     # that join added (filtered=True)
     _ivfpq_residual_oracle_sql(filtered=True),
     survey="§7 Phase 5 extension (round 9 + r09 item 3): FILTERED ANN "
-    "at the COMPRESSED tier — the metadata mask rides inside the IVFADC "
-    "gather batch (candidates restricted before the ADC cut, never "
-    "post-filtered), the scan reads only (neighbor_id, cid, codes, "
-    "label) of probed partitions, and per-query probe expansion refills "
-    "the k·rerank candidate pool for selective filters; TWO execution "
-    "tiers (driver LUT gather / distributed per-pair ADC — identical "
-    "exact int64 values), driver-checked through the DISTRIBUTED tier; "
-    "probe-all hash-oracled against the residual pipeline SQL with the "
-    "label join",
+    "at the COMPRESSED tier — the metadata mask is applied to the "
+    "probed pairs before exact int64 ADC (candidates restricted before "
+    "the ADC cut, never post-filtered), the scan reads only "
+    "(neighbor_id, cid, codes, label) of probed partitions, and "
+    "per-query probe expansion refills the k·rerank candidate pool for "
+    "selective filters through the same relation-driven rounds as "
+    "filtered_ivf_topk; probe-all hash-oracled against the residual "
+    "pipeline SQL with the label join",
     tags=("ext", "similarity"),
 )
 def filtered_ivfpq_search(spark, sf_dir):
     """Build the IVFADC layout with the label column persisted, search
-    probe-all with the same-label constraint through the DISTRIBUTED
-    tier (distributed_cut=0) — the compressed twin of filtered_ivf_topk
-    (scratch lifecycle as its siblings). The probe-expansion fill path
-    is pinned in tests/test_ivf_maintenance.py with a selective-label
-    corpus at n_probe=1; tier equality in tests/test_filtered_probe.py."""
+    probe-all with the same-label constraint — the compressed twin of
+    filtered_ivf_topk (scratch lifecycle as its siblings). The
+    probe-expansion fill path is pinned in tests/test_ivf_maintenance.py
+    with a selective-label corpus at n_probe=1."""
     import shutil
     import tempfile
 
@@ -481,7 +472,6 @@ def filtered_ivfpq_search(spark, sf_dir):
         out = S.filtered_ivfpq_topk(
             spark, path, emb.filter(F.col("vec_id") < 20),
             filter_col="label", k=5, rerank=4, n_probe=8,
-            distributed_cut=0,
         )
         rows = out.collect()
         schema = out.schema

@@ -1,9 +1,9 @@
-"""Round-10 filtered-ANN probing tiers (verdict r09 items 3 & 6):
+"""Filtered-ANN probe expansion over persisted IVF and IVF-PQ indexes
+(one relation-driven probe loop shared by both cell codecs):
 
-* the DISTRIBUTED probe tier (large offline query batches) produces the
-  same output as the bounded-driver serving tier — same nearest-first
-  stable ordering, same chunk boundaries, same merge — and runs with NO
-  per-query driver loop (the driver tier is monkeypatch-poisoned);
+* the loop's answer equals a loop-free reference — exact top-k over
+  each query's shortest filling n_probe-multiple prefix of its stable
+  nearest-first list order — at probe-all and through expansion;
 * the selectivity-sized first probe set (stats sidecar) changes no
   output while collapsing the fill-driven round trips on selective
   filters;
@@ -47,11 +47,52 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_distributed_tier_matches_driver_tier(spark, sf_small, tmp_path):
-    """Same output through both tiers on the ordinary corpus (probe-all
-    AND n_probe<all with expansion), with the driver tier poisoned so
-    the test proves the distributed path never falls back to a per-query
-    driver loop."""
+def _probe_prefix_reference(spark, emb, q, path, k, n_probe):
+    """Filtered search answered without the probe loop: every query's
+    matches with their exact scores (brute force at k = ∞), restricted to
+    the rows whose layout cid lies in the shortest ``n_probe``-multiple
+    prefix of the query's stable nearest-first list order that holds ≥ k
+    matches (or in every list), then the top k by (cos_sim DESC NULLS
+    LAST, neighbor_id)."""
+    import numpy as np
+
+    cents = S.read_ivf_centroids(spark, path)
+    n_cents = len(cents)
+    cid_of = {
+        int(r["neighbor_id"]): int(r["cid"])
+        for r in spark.read.parquet(path).select("neighbor_id", "cid").collect()
+    }
+    order = {}
+    for r in q.select("vec_id", "embedding").collect():
+        qv = np.array(r["embedding"], dtype=np.float64)
+        d2 = ((cents - qv) ** 2).sum(axis=1)
+        order[int(r["vec_id"])] = list(np.argsort(d2, kind="stable"))
+    matches = {}
+    for r in S.filtered_topk(emb, q, filter_col="label", k=10**6).collect():
+        matches.setdefault(int(r["query_id"]), []).append(
+            (int(r["neighbor_id"]), r["cos_sim"])
+        )
+    out = []
+    for qid, rows in matches.items():
+        p = min(n_probe, n_cents)
+        while True:
+            probed = set(order[qid][:p])
+            kept = [m for m in rows if cid_of[m[0]] in probed]
+            if len(kept) >= k or p == n_cents:
+                break
+            p = min(p + n_probe, n_cents)
+        kept.sort(key=lambda m: (m[1] is None, -(m[1] or 0.0), m[0]))
+        out += [(qid, nid, cs, i + 1) for i, (nid, cs) in enumerate(kept[:k])]
+    return sorted(out)
+
+
+def test_filtered_ivf_topk_equals_probe_prefix_reference(spark, sf_small, tmp_path):
+    """The probe loop's answer at probe-all and through multi-round
+    expansion equals the loop-free reference: exact top-k over each
+    query's shortest filling prefix of lists — with the stats sidecar
+    sizing the first round, and without it (plain n_probe chunks)."""
+    import shutil
+
     emb = spread(t(spark, sf_small, "embeddings"))
     q = emb.filter(F.col("vec_id") < 20)
     path = str(tmp_path / "idx")
@@ -59,33 +100,26 @@ def test_distributed_tier_matches_driver_tier(spark, sf_small, tmp_path):
         emb, path, n_centroids=8, kmeans_max_iter=1, kmeans_init="random",
         extra_cols=("label",),
     )
-    for n_probe in (8, 2):
-        via_driver = _rows(
-            S.filtered_ivf_topk(
-                spark, path, q, filter_col="label", k=5, n_probe=n_probe,
-            )
-        )
-        orig = S._filtered_ivf_topk_driver
-        try:
-            def boom(*a, **k):
-                raise AssertionError("driver tier ran above the cut")
-
-            S._filtered_ivf_topk_driver = boom
-            via_dist = _rows(
+    want = {
+        n_probe: _probe_prefix_reference(spark, emb, q, path, 5, n_probe)
+        for n_probe in (8, 3, 1)
+    }
+    for stats in (True, False):
+        if not stats:
+            shutil.rmtree(path + "_stats_label")
+        for n_probe, rows in want.items():
+            got = _rows(
                 S.filtered_ivf_topk(
                     spark, path, q, filter_col="label", k=5, n_probe=n_probe,
-                    distributed_cut=0,
                 )
             )
-        finally:
-            S._filtered_ivf_topk_driver = orig
-        assert via_dist == via_driver, n_probe
+            assert got == rows, (stats, n_probe)
 
 
 def test_distributed_tier_fills_selective_label(spark, tmp_path):
-    """The expansion semantics survive the tier change: the selective
-    label still fills k at n_probe=1 through the distributed path, and
-    the answer equals the filtered brute force (unique by construction)."""
+    """The selective label still fills k at n_probe=1 through the
+    relation-driven rounds, and the answer equals the filtered brute
+    force (unique by construction)."""
     emb = _selective_corpus(spark)
     q = emb.filter(F.col("vec_id") == 0)
     path = str(tmp_path / "idx")
@@ -95,7 +129,6 @@ def test_distributed_tier_fills_selective_label(spark, tmp_path):
     got = _rows(
         S.filtered_ivf_topk(
             spark, path, q, filter_col="label", k=5, n_probe=1,
-            distributed_cut=0,
         )
     )
     assert len(got) == 5
@@ -121,13 +154,13 @@ def test_probe_jump_same_output_fewer_rounds(spark, tmp_path):
     with_stats = _rows(
         S.filtered_ivf_topk(spark, path, q, filter_col="label", k=5, n_probe=1)
     )
-    jump_rounds = S._filtered_ivf_topk_driver.last_rounds
+    jump_rounds = S._filtered_probe_rounds.last_rounds
     # remove the sidecar → pure fill-driven expansion
     shutil.rmtree(path + "_stats_label")
     no_stats = _rows(
         S.filtered_ivf_topk(spark, path, q, filter_col="label", k=5, n_probe=1)
     )
-    fill_rounds = S._filtered_ivf_topk_driver.last_rounds
+    fill_rounds = S._filtered_probe_rounds.last_rounds
     assert with_stats == no_stats
     assert jump_rounds < fill_rounds, (jump_rounds, fill_rounds)
     assert jump_rounds == 1  # selective label fills in ONE round trip
@@ -177,41 +210,6 @@ def test_append_refuses_to_drop_layout_metadata(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_ivfpq_distributed_tier_matches_driver_tier(spark, sf_small, tmp_path):
-    """ADC is exact int64 in both tiers (per-query LUT gather vs
-    per-pair recompute), so the outputs must be IDENTICAL — at probe-all
-    and through multi-round expansion — and the distributed path must
-    never fall back to the per-query driver loop (poisoned)."""
-    emb = spread(t(spark, sf_small, "embeddings"))
-    q = emb.filter(F.col("vec_id") < 20)
-    path = str(tmp_path / "idx")
-    S.write_ivfpq_index(
-        emb, path, n_centroids=8, coarse="anchor", extra_cols=("label",)
-    )
-    for n_probe in (8, 2):
-        via_driver = _rows(
-            S.filtered_ivfpq_topk(
-                spark, path, q, filter_col="label", k=5, rerank=4,
-                n_probe=n_probe,
-            )
-        )
-        orig = S._filtered_ivfpq_topk_driver
-        try:
-            def boom(*a, **kw):
-                raise AssertionError("driver tier ran above the cut")
-
-            S._filtered_ivfpq_topk_driver = boom
-            via_dist = _rows(
-                S.filtered_ivfpq_topk(
-                    spark, path, q, filter_col="label", k=5, rerank=4,
-                    n_probe=n_probe, distributed_cut=0,
-                )
-            )
-        finally:
-            S._filtered_ivfpq_topk_driver = orig
-        assert via_dist == via_driver, n_probe
-
-
 def test_ivfpq_probe_jump_same_output(spark, tmp_path):
     """The compressed tier's stats-sized first probe set changes no
     output on the selective corpus (jump target = the k·rerank pool)."""
@@ -241,10 +239,10 @@ def test_ivfpq_probe_jump_same_output(spark, tmp_path):
 
 
 def test_distributed_tiers_take_the_selectivity_jump(spark, tmp_path):
-    """SCALE.md r10 gap #1 closed in-round: the DISTRIBUTED tiers size
-    their first probe set from the stats sidecar too (one cumsum window
-    over probe-order ⋈ stats) — the selective query fills in ONE round
-    through both tiers, with output unchanged (brute-force-equal)."""
+    """Both codecs size their first probe set from the stats sidecar
+    (one cumsum window over probe-order ⋈ stats) — the selective query
+    fills in ONE round through the raw and the compressed index, with
+    output unchanged (brute-force-equal)."""
     emb = _selective_corpus(spark)
     q = emb.filter(F.col("vec_id") == 0)
     raw = str(tmp_path / "raw")
@@ -254,10 +252,9 @@ def test_distributed_tiers_take_the_selectivity_jump(spark, tmp_path):
     got = _rows(
         S.filtered_ivf_topk(
             spark, raw, q, filter_col="label", k=5, n_probe=1,
-            distributed_cut=0,
         )
     )
-    assert S._filtered_ivf_topk_distributed.last_rounds == 1
+    assert S._filtered_probe_rounds.last_rounds == 1
     assert {g[1] for g in got} == {40, 41, 42, 43, 44}
     assert got == _rows(S.filtered_topk(emb, q, filter_col="label", k=5))
     # compressed tier: pool-targeted jump (rerank=1 → pool = k)
@@ -269,10 +266,9 @@ def test_distributed_tiers_take_the_selectivity_jump(spark, tmp_path):
     got2 = _rows(
         S.filtered_ivfpq_topk(
             spark, pq, q, filter_col="label", k=5, rerank=1, n_probe=1,
-            distributed_cut=0,
         )
     )
-    assert S._filtered_ivfpq_topk_distributed.last_rounds == 1
+    assert S._filtered_probe_rounds.last_rounds == 1
     assert len(got2) == 5
     # and the non-jumping fill-driven path (sidecar removed) agrees
     import shutil
@@ -281,10 +277,9 @@ def test_distributed_tiers_take_the_selectivity_jump(spark, tmp_path):
     assert got2 == _rows(
         S.filtered_ivfpq_topk(
             spark, pq, q, filter_col="label", k=5, rerank=1, n_probe=1,
-            distributed_cut=0,
         )
     )
-    assert S._filtered_ivfpq_topk_distributed.last_rounds > 1
+    assert S._filtered_probe_rounds.last_rounds > 1
 
 
 # ---------------------------------------------------------------------------
@@ -354,4 +349,4 @@ def test_stats_regenerate_through_versioned_rebuild(spark, tmp_path):
     )
     assert got == want
     # the sized first probe is intact post-rebuild: one round trip
-    assert S._filtered_ivf_topk_driver.last_rounds == 1
+    assert S._filtered_probe_rounds.last_rounds == 1

@@ -647,12 +647,12 @@ def test_retrain_reencode_is_one_linear_pass(spark, sf_small, tmp_path):
 
 
 def test_distributed_probe_order_pass_is_shuffle_free(spark, sf_small, tmp_path):
-    """The distributed filtered-probe tier's probe-order derivation must
-    be one shuffle-free Arrow pass over the query relation (broadcast
+    """The filtered-probe loop's probe-order derivation must be one
+    shuffle-free Arrow pass over the query relation (broadcast
     centroids) — a 10M-query batch gets its nearest-first orders without
-    moving a row."""
+    moving a row. On IVF-PQ lattice codes its elementwise int64
+    distances order the lists exactly as the expanded form does."""
     import numpy as np
-    import pandas as pd
 
     from postgres_etl_pipeline_spark.operators import similarity as S
     from postgres_etl_pipeline_spark.queries import spread, t
@@ -663,35 +663,35 @@ def test_distributed_probe_order_pass_is_shuffle_free(spark, sf_small, tmp_path)
         emb, path, n_centroids=4, kmeans_max_iter=1, kmeans_init="random",
         extra_cols=("label",),
     )
-    cents = S.read_ivf_centroids(spark, path)
-    n_cents = len(cents)
     qdf = emb.select(
         F.col("vec_id").alias("query_id"),
         S.as_double_vec("embedding").alias("qv"),
     )
-    bc = spark.sparkContext.broadcast(np.asarray(cents))
-
-    def probe_order(batches):
-        C = bc.value
-        for pdf in batches:
-            Q = np.array(list(pdf["qv"]))
-            d2 = ((C[None, :, :] - Q[:, None, :]) ** 2).sum(axis=2)
-            order = np.argsort(d2, axis=1, kind="stable")
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(
-                        pdf["query_id"].to_numpy(), n_cents
-                    ),
-                    "probe_rank": np.tile(np.arange(n_cents), len(Q)),
-                    "cid": order.ravel(),
-                }
-            )
-
-    porder = qdf.mapInPandas(
-        probe_order, "query_id long, probe_rank int, cid int"
-    )
+    porder = S._probe_order(qdf, "qv", S.read_ivf_centroids(spark, path))
     s = plan_summary(porder)
     assert s.joins == 0 and s.shuffles == 0, s
+
+    pq = str(tmp_path / "pq")
+    S.write_ivfpq_index(emb, pq, n_centroids=8, coarse="anchor")
+    Cc, _As, scale = S.read_ivfpq_sidecars(spark, pq)
+    qq = emb.select(
+        F.col("vec_id").alias("query_id"),
+        S.fixed_point_codes(S.as_double_vec("embedding"), scale).alias("qq"),
+    )
+    rows = sorted(qq.collect())
+    Qq = np.array([r["qq"] for r in rows], dtype=np.int64)
+    d2 = (
+        (Qq * Qq).sum(axis=1)[:, None]
+        - 2 * (Qq @ Cc.T)
+        + (Cc * Cc).sum(axis=1)[None, :]
+    )
+    expanded = np.argsort(d2, axis=1, kind="stable")
+    got = sorted(S._probe_order(qq, "qq", Cc).collect())
+    assert [(r[0], r[1], r[2]) for r in got] == [
+        (r["query_id"], j, int(cid))
+        for r, order in zip(rows, expanded)
+        for j, cid in enumerate(order)
+    ]
 
 
 def test_sequence_packing_has_no_single_partition_window(spark, sf_small):
@@ -834,11 +834,10 @@ PYTHON_WORKER_SITES = Counter({
     "operators/similarity.py:pq_topk": 1,
     "operators/similarity.py:ivfpq_topk": 1,
     "operators/similarity.py:ivfpq_residual_topk": 1,
-    "operators/similarity.py:_filtered_ivf_topk_distributed": 1,
     "operators/similarity.py:_ivfpq_encode_pass": 1,
     "operators/similarity.py:ivfpq_index_topk": 1,
-    "operators/similarity.py:_filtered_ivfpq_topk_driver": 1,
-    "operators/similarity.py:_filtered_ivfpq_topk_distributed": 2,
+    "operators/similarity.py:_probe_order": 1,
+    "operators/similarity.py:_adc_scores": 1,
     "operators/similarity.py:_ivfpq_reencode_codes_pass": 1,
     "operators/text.py:ngram_udtf": 1,
     "operators/timeseries.py:grouped_ewma": 1,
