@@ -56,7 +56,8 @@ def required_fields(df: DataFrame, fields_: list[str], name: str = "required") -
     event_time, txn_id, store_id, sku, quantity, tender_type)."""
     if not fields_:  # vacuous pass, not a filter(None) crash
         return CheckResult(name, True)
-    missing_schema = [f for f in fields_ if f not in df.columns]
+    present = set(df.columns)  # one schema fetch, not one per field
+    missing_schema = [f for f in fields_ if f not in present]
     if missing_schema:
         return CheckResult(
             name, False, len(missing_schema),
@@ -227,7 +228,8 @@ def required_and_not_null(
     that needs "rows staged" (A4) never pays a separate count() action
     over data the gate just scanned. On the missing-schema failure path
     the count is 0 (the gate fails before any caller can use it)."""
-    missing_schema = [f for f in required + extra_cols if f not in df.columns]
+    present = set(df.columns)  # one schema fetch, not one per field
+    missing_schema = [f for f in required + extra_cols if f not in present]
     if missing_schema:
         failed = (
             CheckResult(

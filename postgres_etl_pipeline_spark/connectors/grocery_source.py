@@ -91,13 +91,17 @@ class _GroceryReader(DataSourceReader):
 
 
 class _GroceryStreamReader(SimpleDataSourceStreamReader):
-    """Micro-batch stream: batch k = run ``{prefix}-{k}`` of ``n`` rows.
+    """Micro-batch stream of runs: run k is ``{prefix}-{k}`` of ``n`` rows.
 
     The offset is just the run counter; because run content is a pure
     function of the run_id, ``readBetweenOffsets`` (recovery replay after a
     restart) regenerates byte-identical batches — exactly-once without any
-    source-side persistence. ``max_runs`` bounds the stream for tests
-    (0 = unbounded).
+    source-side persistence. ``max_runs`` bounds the stream (0 =
+    unbounded): every run below it has arrived, so one ``read`` returns
+    them all. Spark runs a Python stream under ``availableNow`` as ONE
+    micro-batch (``PythonMicroBatchStream`` does not support that
+    trigger), and a drain must still consume everything that has
+    arrived. An unbounded stream yields one new run per ``read``.
     """
 
     def __init__(self, options: dict):
@@ -110,12 +114,10 @@ class _GroceryStreamReader(SimpleDataSourceStreamReader):
         return {"run": 0}
 
     def read(self, start: dict):
-        k = start["run"]
-        if self.max_runs and k >= self.max_runs:
+        end = {"run": self.max_runs or start["run"] + 1}
+        if end["run"] <= start["run"]:
             return iter([]), start
-        return iter(list(_gen_rows(f"{self.prefix}-{k}", self.scenario, 0, self.n))), {
-            "run": k + 1
-        }
+        return iter(list(self.readBetweenOffsets(start, end))), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
         for k in range(start["run"], end["run"]):

@@ -120,7 +120,8 @@ def read_parquet_evolving(
         return df
     from pyspark.sql import functions as F
 
-    missing = [f.name for f in expected.fields if f.name not in df.columns]
+    present = set(df.columns)  # one schema fetch, not one per field
+    missing = [f.name for f in expected.fields if f.name not in present]
     if missing:
         raise ValueError(
             f"columns {missing} absent from every file under {path!r} — "

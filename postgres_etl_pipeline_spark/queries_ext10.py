@@ -227,12 +227,11 @@ def ivf_maintenance_tick_topk(spark, sf_dir):
         for m in (1, 2, 3):
             S.append_to_ivf_index(emb.filter(F.col("vec_id") % 4 == m), root)
         rep = S.maintain_index(
-            spark, root, kind="ivf",
-            compact_target_bytes=1 << 30, gc_min_age_sec=0.0,
+            spark, root, compact_target_bytes=1 << 30, gc_min_age_sec=0.0,
         )
         assert rep["rebuilt_to"] is None  # healthy: compaction only
         rep2 = S.maintain_index(
-            spark, root, kind="ivf", coarse_threshold=0.0,
+            spark, root, coarse_threshold=0.0,
             gc_min_age_sec=0.0,
             n_centroids=16, kmeans_max_iter=1, kmeans_init="random",
         )

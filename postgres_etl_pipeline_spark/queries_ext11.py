@@ -15,8 +15,8 @@ gaps this batch closes:
 * ``pack_training_sequences_bpe`` — spans measured in MODEL tokens: the
   BPE-ish pre-tokenizer the token_counts_bpe entry canonized feeds the
   same packing machinery (one extra linear regexp pass).
-* ``ivfpq_maintenance_tick_search`` — the compressed-tier twin of
-  ivf_maintenance_tick_topk: maintain_index(kind='ivfpq') runs
+* ``ivfpq_maintenance_tick_search`` — ivf_maintenance_tick_topk on
+  an IVFADC root: maintain_index reads the codec from the layout and runs
   recover → coarse drift → blue/green rebuild → residual RETRAIN →
   compaction → GC; probe-all + rerank-ALL is exact whatever the
   codebook, so the oracle is the same brute-force scan.
@@ -141,7 +141,7 @@ def pack_training_sequences_bpe(spark, sf_dir):
     _cosine_topk_oracle(),
     survey="§7 Phase 5 extension (verdict r12 item 8): the IVFADC "
     "maintenance tick driver-checked end-to-end — "
-    "maintain_index(kind='ivfpq') composes recover -> coarse-drift "
+    "maintain_index on an IVFADC root composes recover -> coarse-drift "
     "measure -> blue/green rebuild -> residual codebook RETRAIN -> "
     "compaction -> retired-version GC for the compressed tier; this "
     "entry fragments a versioned IVFADC root with appends, runs a "
@@ -169,18 +169,18 @@ def ivfpq_maintenance_tick_search(spark, sf_dir):
     scratch = tempfile.mkdtemp(prefix="ivfpq_tick_")
     try:
         root = scratch + "/idx"
-        S.build_ivfpq_index_versioned(
-            emb.filter(F.col("vec_id") % 4 == 0), root, n_centroids=8
+        S.build_ivf_index_versioned(
+            emb.filter(F.col("vec_id") % 4 == 0), root,
+            writer=S.write_ivfpq_index, n_centroids=8,
         )
         for m in (1, 2, 3):
-            S.append_to_ivfpq_index(emb.filter(F.col("vec_id") % 4 == m), root)
+            S.append_to_ivf_index(emb.filter(F.col("vec_id") % 4 == m), root)
         rep = S.maintain_index(
-            spark, root, kind="ivfpq",
-            compact_target_bytes=1 << 30, gc_min_age_sec=0.0,
+            spark, root, compact_target_bytes=1 << 30, gc_min_age_sec=0.0,
         )
         assert rep["rebuilt_to"] is None  # healthy: no blue/green flip
         rep2 = S.maintain_index(
-            spark, root, kind="ivfpq", coarse_threshold=0.0,
+            spark, root, coarse_threshold=0.0,
             gc_min_age_sec=0.0,
         )
         assert rep2["rebuilt_to"] is not None  # forced: blue/green + GC

@@ -127,7 +127,7 @@ def ivfpq_delete_search(spark, sf_dir):
             return local_frame(spark, [], _EMPTY_TOPK)
         path = scratch + "/index"
         S.write_ivfpq_index(emb, path, n_centroids=8, coarse="anchor")
-        S.delete_from_ivfpq_index(
+        S.delete_from_ivf_index(
             spark, path, emb.filter(F.col("vec_id") % 7 == 3)
         )
         out = S.ivfpq_index_topk(
@@ -195,7 +195,7 @@ def ivfpq_drift_retrain(spark, sf_dir):
             codebook=S.anchor_residual_codebook(build_df, Cc),
         )
         if append_df is not None:
-            S.append_to_ivfpq_index(append_df, path)
+            S.append_to_ivf_index(append_df, path)
         S.retrain_ivfpq_codebook(
             spark, path, drift_threshold=0.0, mode="anchor"
         )
@@ -429,8 +429,8 @@ def ivfpq_append_resplit_search(spark, sf_dir):
             codebook=S.anchor_residual_codebook(emb, Cc),
         )
         if append_df is not None:
-            S.append_to_ivfpq_index(append_df, path)
-        new_cents = S.resplit_ivfpq_cell(
+            S.append_to_ivf_index(append_df, path)
+        new_cents = S.resplit_ivf_cell(
             spark, path, n_sub=2, split_mode="anchor"
         )
         out = S.ivfpq_index_topk(

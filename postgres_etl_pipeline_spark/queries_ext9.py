@@ -6,8 +6,9 @@ create; readers (`ivf_index_topk` / `ivfpq_index_topk` / the filtered
 tiers) resolve through the root, so a rebuild is invisible to serving;
 `gc_retired_versions` bounds the rollback window and removes crashed
 half-built subtrees. The compressed tier gains the coarse-drift trigger
-the raw tier got in round 10 (`measure_ivfpq_coarse_drift` — residual
-drift with cells fixed cannot see wholesale structure drift).
+the raw tier got in round 10 (`measure_ivf_coarse_drift` on an IVFADC
+layout — residual drift with cells fixed cannot see wholesale structure
+drift).
 
 Both entries search THROUGH the pointer at probe-all, so the oracle is
 the exact pipeline over the same corpus — a hash-green row certifies
@@ -100,10 +101,10 @@ def ivf_versioned_rebuild_topk(spark, sf_dir):
     survey="§7 Phase 5 extension (verdict r10 item 2): the COARSE-drift "
     "trigger at the COMPRESSED tier — write_ivfpq_index stamps "
     "train_coarse_err (nearest-coarse-centroid error, exact int64) in "
-    "_meta next to the residual baseline; measure_ivfpq_coarse_drift "
+    "_meta next to the residual baseline; measure_ivf_coarse_drift "
     "detects wholesale cluster-structure drift that a codebook retrain "
     "cannot repair (residual error stays flat while every vector sits "
-    "in the wrong cell); rebuild_ivfpq_index_versioned re-derives "
+    "in the wrong cell); rebuild_ivf_index_versioned re-derives "
     "coarse + codebook over the current rows into the next version and "
     "flips the serving pointer",
     tags=("ext", "similarity"),
@@ -129,8 +130,10 @@ def ivfpq_coarse_rebuild_search(spark, sf_dir):
                 spark, [],
                 "query_id long, neighbor_id long, cos_sim double, rank int",
             )
-        S.build_ivfpq_index_versioned(emb, root, n_centroids=8)
-        vpath = S.rebuild_ivfpq_index_versioned(spark, root, force=True)
+        S.build_ivf_index_versioned(
+            emb, root, writer=S.write_ivfpq_index, n_centroids=8
+        )
+        vpath = S.rebuild_ivf_index_versioned(spark, root, force=True)
         assert vpath == S.resolve_index_path(spark, root)
         S.gc_retired_versions(spark, root, keep=1, min_age_sec=0.0)
         out = S.ivfpq_index_topk(

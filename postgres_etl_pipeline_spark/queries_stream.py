@@ -722,8 +722,8 @@ def _ivfpq_residual_oracle() -> str:
     survey="§2.8 extension (round 9): streaming PERSISTED-IVFADC "
     "maintenance — micro-batches are residual-PQ-ENCODED against the "
     "stored sidecars and appended into cid partitions "
-    "(append_to_ivfpq_index via run_ivf_maintenance_sink "
-    "index_kind='ivfpq'); drained layout == one-shot build bit-for-bit "
+    "(append_to_ivf_index via run_ivf_maintenance_sink, the codec read "
+    "from the layout); drained layout == one-shot build bit-for-bit "
     "(pure-function encoding), probe-all search hash-oracled against "
     "the residual pipeline SQL",
     tags=("streaming", "similarity"),
@@ -764,9 +764,7 @@ def stream_ivfpq_maintenance(spark, sf_dir):
         st = sources.stream_parquet(
             spark, f"{sf_dir}/embeddings.parquet", _EMB_SCHEMA
         ).filter(F.col("vec_id") % 5 == 4)
-        runner.run_ivf_maintenance_sink(
-            st, path, index_kind="ivfpq", checkpoint=scratch + "/ckpt"
-        )
+        runner.run_ivf_maintenance_sink(st, path, checkpoint=scratch + "/ckpt")
         out = ivfpq_index_topk(spark, path, queries, k=5, rerank=4, n_probe=8)
         rows = out.collect()
         schema = out.schema

@@ -493,7 +493,6 @@ def run_ivf_maintenance_sink(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    index_kind: str = "ivf",
     op_col: str | None = None,
     extra_cols: tuple = (),
     checkpoint: str | None = None,
@@ -504,10 +503,11 @@ def run_ivf_maintenance_sink(
 ) -> None:
     """Drain a bounded vector stream through PERSISTED-IVF maintenance —
     the full growing-corpus ANN story as one foreachBatch sink (verdict
-    r08 item 8): each micro-batch assigns against the STORED centroids
-    and appends into its cid partitions
-    (:func:`~..operators.similarity.append_to_ivf_index` — one Arrow
-    pass over the batch, the corpus never rescanned or re-clustered),
+    r08 item 8): each micro-batch is encoded against the STORED sidecars
+    with the layout's own cell codec and appended into its cid
+    partitions (:func:`~..operators.similarity.append_to_ivf_index` —
+    one Arrow pass over the batch, the corpus never rescanned or
+    re-clustered),
     and, when ``queries`` is given, the served per-query top-k state
     under ``state_dir/topk`` is kept current with
     :func:`~..operators.similarity.incremental_topk_update` (the
@@ -527,14 +527,12 @@ def run_ivf_maintenance_sink(
     :func:`run_upsert_sink` documents for keyed vs append-only sinks).
 
     The index must exist with trained centroids before the drain
-    (:func:`~..operators.similarity.write_ivf_index` — the FAISS
-    train-then-add split); the first batch raises otherwise.
-
-    ``index_kind='ivfpq'`` maintains a persisted IVFADC layout instead
-    (:func:`~..operators.similarity.append_to_ivfpq_index` — each batch
-    is encoded against the STORED sidecars, bit-identically to the
-    build, so the drained layout equals a one-shot build over the full
-    corpus whenever the sidecars are held fixed).
+    (:func:`~..operators.similarity.write_ivf_index` or
+    :func:`~..operators.similarity.write_ivfpq_index` — the FAISS
+    train-then-add split); the first batch raises otherwise. An IVFADC
+    batch is encoded bit-identically to the build, so the drained
+    layout equals a one-shot build over the full corpus whenever the
+    sidecars are held fixed.
 
     ``op_col`` makes the drain CDC-shaped (verdict r09 item 2): rows
     whose ``op_col`` is ``'D'`` are TOMBSTONES (vector payload ignored)
@@ -551,9 +549,9 @@ def run_ivf_maintenance_sink(
     :func:`~..operators.similarity.maintain_index`'s docstring
     prescribes, "run the tick from the drain's own scheduler slot", now
     code, not convention): after every N processed batches the sink
-    calls ``maintain_index(spark, index_path, kind=index_kind,
-    **maintenance_kw)`` from INSIDE the foreachBatch slot — the one
-    place in a streaming deployment where no append can race the tick,
+    calls ``maintain_index(spark, index_path, **maintenance_kw)`` from
+    INSIDE the foreachBatch slot — the one place in a streaming
+    deployment where no append can race the tick,
     so recover → drift-rebuild → retrain → compact → GC runs
     interleaved with the drain under the same single-writer lease
     discipline. A tick that still loses the lease to an EXTERNAL writer
@@ -570,7 +568,6 @@ def run_ivf_maintenance_sink(
     that)."""
     from ..operators.similarity import (
         append_to_ivf_index,
-        append_to_ivfpq_index,
         delete_from_ivf_index,
         incremental_topk_update,
         maintain_index,
@@ -633,8 +630,7 @@ def run_ivf_maintenance_sink(
             raise ValueError(
                 "maintenance ticks require index_path to be a VERSIONED "
                 f"ROOT (got the plain layout path {index_path!r}) — "
-                "build with build_ivf_index_versioned / "
-                "build_ivfpq_index_versioned and pass the root"
+                "build with build_ivf_index_versioned and pass the root"
             )
 
     def _tick(kw: dict | None) -> dict:
@@ -648,8 +644,7 @@ def run_ivf_maintenance_sink(
         for attempt in range(_TICK_RETRIES):
             try:
                 return maintain_index(
-                    stream_vectors.sparkSession, index_path,
-                    kind=index_kind, **(kw or {}),
+                    stream_vectors.sparkSession, index_path, **(kw or {})
                 )
             except WriterLeaseHeld as e:
                 last = e
@@ -657,19 +652,9 @@ def run_ivf_maintenance_sink(
         assert last is not None
         raise last
 
-    if index_kind == "ivf":
-        _append = lambda df: append_to_ivf_index(  # noqa: E731
-            df, index_path, id_col, vec_col, extra_cols=extra_cols
-        )
-    elif index_kind == "ivfpq":
-        _append = lambda df: append_to_ivfpq_index(  # noqa: E731
-            df, index_path, id_col=id_col, vec_col=vec_col,
-            extra_cols=extra_cols,
-        )
-    else:
-        raise ValueError(
-            f"unknown index_kind {index_kind!r}: expected 'ivf' or 'ivfpq'"
-        )
+    def _append(df: DataFrame) -> None:
+        append_to_ivf_index(df, index_path, id_col, vec_col, extra_cols)
+
     ckpt = checkpoint or _scratch_checkpoint("ckpt_ivf_maint_")
     topk_path = os.path.join(state_dir, "topk") if state_dir else None
     q_static = (

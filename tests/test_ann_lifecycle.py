@@ -68,7 +68,7 @@ def test_scale_stamp_survives_persistence(spark, sf_small, tmp_path):
     assert scale == 500
     assert getattr(As, "scale", None) == 500  # stamped codebook
     # maintenance with NO scale argument re-encodes on the stored lattice
-    S.append_to_ivfpq_index(emb.filter(F.col("vec_id") % 5 == 4), path)
+    S.append_to_ivf_index(emb.filter(F.col("vec_id") % 5 == 4), path)
     # ... bit-identically to a one-shot scale-500 build
     full = str(tmp_path / "full500")
     S.write_ivfpq_index(emb, full, coarse_cents=Cc,
@@ -79,10 +79,10 @@ def test_scale_stamp_survives_persistence(spark, sf_small, tmp_path):
     )
     # explicit mismatch: every maintenance/serving surface dies loudly
     for fn in (
-        lambda: S.append_to_ivfpq_index(emb.limit(1), path, scale=1000),
+        lambda: S.append_to_ivf_index(emb.limit(1), path, scale=1000),
         lambda: S.ivfpq_index_topk(spark, path, q, scale=1000),
         lambda: S.filtered_ivfpq_topk(spark, path, q, scale=1000),
-        lambda: S.resplit_ivfpq_cell(spark, path, scale=1000),
+        lambda: S.resplit_ivf_cell(spark, path, scale=1000),
     ):
         with pytest.raises(ValueError, match="shared-scale"):
             fn()
@@ -258,7 +258,7 @@ def test_ivfpq_delete_twin(spark, sf_small, tmp_path):
     path = str(tmp_path / "idx")
     Cc, As = S.write_ivfpq_index(emb, path, n_centroids=8, coarse="anchor")
     tombs = emb.filter(F.col("vec_id") % 7 == 3).select("vec_id")
-    S.delete_from_ivfpq_index(spark, path, tombs)
+    S.delete_from_ivf_index(spark, path, tombs)
     rebuilt = str(tmp_path / "rebuilt")
     S.write_ivfpq_index(
         emb.filter(F.col("vec_id") % 7 != 3), rebuilt,
@@ -267,12 +267,6 @@ def test_ivfpq_delete_twin(spark, sf_small, tmp_path):
     assert _rows(S.ivfpq_index_topk(spark, path, q, k=5, n_probe=8)) == _rows(
         S.ivfpq_index_topk(spark, rebuilt, q, k=5, n_probe=8)
     )
-    # the twin refuses a raw (unstamped) layout
-    raw = str(tmp_path / "raw")
-    S.write_ivf_index(emb, raw, n_centroids=4, kmeans_max_iter=1,
-                      kmeans_init="random")
-    with pytest.raises(ValueError, match="_meta sidecar"):
-        S.delete_from_ivfpq_index(spark, raw, tombs)
 
 
 # ---------------------------------------------------------------------------
@@ -295,7 +289,7 @@ def test_retrain_equals_one_shot_build(spark, sf_small, tmp_path):
     sliceA = emb.filter(F.col("vec_id") % 5 != 4)
     S.write_ivfpq_index(sliceA, split, coarse_cents=Cc,
                         codebook=S.anchor_residual_codebook(sliceA, Cc))
-    S.append_to_ivfpq_index(emb.filter(F.col("vec_id") % 5 == 4), split)
+    S.append_to_ivf_index(emb.filter(F.col("vec_id") % 5 == 4), split)
     assert S.retrain_ivfpq_codebook(
         spark, split, drift_threshold=0.0, mode="anchor"
     ) is True
@@ -330,7 +324,7 @@ def test_retrain_rebaselines_the_drift_trigger(spark, sf_small, tmp_path):
     sliceA = emb.filter(F.col("vec_id") % 5 != 4)
     S.write_ivfpq_index(sliceA, path, coarse_cents=Cc,
                         codebook=S.anchor_residual_codebook(sliceA, Cc))
-    S.append_to_ivfpq_index(emb.filter(F.col("vec_id") % 5 == 4), path)
+    S.append_to_ivf_index(emb.filter(F.col("vec_id") % 5 == 4), path)
     assert S.retrain_ivfpq_codebook(
         spark, path, drift_threshold=0.0, mode="anchor"
     ) is True
@@ -567,7 +561,7 @@ def test_compaction_works_on_the_ivfpq_layout_too(spark, sf_small, tmp_path):
         coarse_cents=Cc, codebook=As,
     )
     for r in range(1, 5):
-        S.append_to_ivfpq_index(emb.filter(F.col("vec_id") % 5 == r), path)
+        S.append_to_ivf_index(emb.filter(F.col("vec_id") % 5 == r), path)
     before = _rows(S.ivfpq_index_topk(spark, path, q, k=5, n_probe=8))
     assert S.compact_ivf_cells(spark, path, target_bytes=1 << 30)
     assert _rows(S.ivfpq_index_topk(spark, path, q, k=5, n_probe=8)) == before
@@ -712,7 +706,7 @@ def test_ivfpq_coarse_drift_trigger_and_versioned_rebuild(
     spark, sf_small, tmp_path
 ):
     """The compressed tier's wholesale-structure detector (verdict r10
-    item 2): conformal 3x drift trips measure_ivfpq_coarse_drift while
+    item 2): conformal 3x drift trips measure_ivf_coarse_drift while
     a codebook RETRAIN alone cannot repair it (and must not re-baseline
     it away); the versioned rebuild restores coarse quality and flips
     the pointer; below threshold nothing is written."""
@@ -723,33 +717,35 @@ def test_ivfpq_coarse_drift_trigger_and_versioned_rebuild(
         .alias("embedding"),
     )
     root = str(tmp_path / "idx")
-    S.build_ivfpq_index_versioned(emb, root, n_centroids=8)
+    S.build_ivf_index_versioned(
+        emb, root, writer=S.write_ivfpq_index, n_centroids=8
+    )
     v1 = S.resolve_index_path(spark, root)
     # below threshold: no-op, no new version dir
-    assert S.rebuild_ivfpq_index_versioned(
+    assert S.rebuild_ivf_index_versioned(
         spark, root, drift_threshold=10.0) is None
     assert S.resolve_index_path(spark, root) == v1
     # wholesale drift arrives through the normal append path
-    S.append_to_ivfpq_index(drifted, v1)
-    err, train = S.measure_ivfpq_coarse_drift(spark, root, sample_of=drifted)
+    S.append_to_ivf_index(drifted, v1)
+    err, train = S.measure_ivf_coarse_drift(spark, root, sample_of=drifted)
     assert err > 1.5 * train, (err, train)
     # a codebook retrain does NOT silence the structure trigger: the
     # coarse baseline is carried forward, not re-measured (else the
     # drift this trigger exists to catch would be masked)
     assert S.retrain_ivfpq_codebook(spark, v1, force=True, mode="anchor")
-    err2, train2 = S.measure_ivfpq_coarse_drift(spark, root,
-                                                sample_of=drifted)
+    err2, train2 = S.measure_ivf_coarse_drift(spark, root,
+                                              sample_of=drifted)
     assert train2 == train
     assert err2 > 1.5 * train2
     # the versioned rebuild re-clusters (production mode: Lloyd coarse,
     # more cells — the structural repair) and restores coarse quality
-    v2 = S.rebuild_ivfpq_index_versioned(
+    v2 = S.rebuild_ivf_index_versioned(
         spark, root, drift_threshold=1.5, sample_of=drifted,
         coarse="lloyd", n_centroids=16, kmeans_max_iter=4,
         kmeans_init="random",
     )
     assert v2 is not None and S.resolve_index_path(spark, root) == v2
-    err3, _ = S.measure_ivfpq_coarse_drift(spark, root, sample_of=drifted)
+    err3, _ = S.measure_ivf_coarse_drift(spark, root, sample_of=drifted)
     assert err3 < err2, (err2, err3)
     # probe-all + rerank-everything through the root is exact over the
     # full (old + drifted) corpus
@@ -779,7 +775,7 @@ def test_layout_without_coarse_baseline_guides_rebuild(
         "scale int, m int, d int, train_err double",
     ).coalesce(1).write.parquet(path + "_meta")
     with pytest.raises(ValueError, match="coarse-drift baseline"):
-        S.measure_ivfpq_coarse_drift(spark, path)
+        S.measure_ivf_coarse_drift(spark, path)
     # the residual trigger and serving still work on the old stamp
     err, train = S.measure_ivfpq_drift(spark, path)
     assert train > 0.0 or err >= 0.0
@@ -957,3 +953,170 @@ def test_append_during_rebuild_raises_instead_of_losing_rows(
     q = _q(emb)
     got = _rows(S.ivf_index_topk(spark, root, q, k=5, n_probe=4))
     assert got == _rows(S.brute_force_topk(emb, q, k=5))
+
+
+# ---------------------------------------------------------------------------
+# One lifecycle for both cell codecs: every maintenance op reads the codec
+# from the layout's _meta stamp
+# ---------------------------------------------------------------------------
+
+
+def _codec_layouts(spark, emb, tmp_path):
+    raw = str(tmp_path / "raw")
+    S.write_ivf_index(emb, raw, n_centroids=4, kmeans_max_iter=1,
+                      kmeans_init="random")
+    pq = str(tmp_path / "pq")
+    S.write_ivfpq_index(emb, pq, n_centroids=4)
+    return raw, pq
+
+
+def _has_codes(spark, path):
+    return "codes" in spark.read.parquet(path).columns
+
+
+def test_lifecycle_ops_read_the_codec_from_the_layout(
+    spark, sf_small, tmp_path
+):
+    """The same entry points run the raw-vector path on a write_ivf_index
+    layout and the IVFADC path on a write_ivfpq_index layout; an
+    unstamped layout raises the _meta ValueError before anything is
+    written, and the IVFADC-only arguments raise on a raw layout."""
+    import numpy as np
+
+    emb = _emb(spark, sf_small)
+    base = emb.filter(F.col("vec_id") % 4 != 3)
+    more = emb.filter(F.col("vec_id") % 4 == 3)
+    raw, pq = _codec_layouts(spark, base, tmp_path)
+
+    cents = S.append_to_ivf_index(more, raw)
+    assert cents.dtype == np.float64 and not _has_codes(spark, raw)
+    Cc, As = S.append_to_ivf_index(more, pq)
+    assert Cc.dtype == np.int64 and As.ndim == 3 and _has_codes(spark, pq)
+    assert spark.read.parquet(pq).filter(F.col("codes").isNull()).count() == 0
+
+    assert S.resplit_ivf_cell(spark, raw, n_sub=2, kmeans_max_iter=1,
+                              kmeans_init="random").dtype == np.float64
+    split = S.resplit_ivf_cell(spark, pq, n_sub=2, split_mode="anchor")
+    assert split.dtype == np.int64 and len(split) == 5
+    assert len(S.read_ivfpq_sidecars(spark, pq)[0]) == 5
+
+    for path, scale in ((raw, None), (pq, 1000)):
+        err, train = S.measure_ivf_coarse_drift(spark, path)
+        assert train == S._read_layout_meta(spark, path)["train_coarse_err"]
+        assert S._read_layout_meta(spark, path)["scale"] == scale
+        assert err > 0.0
+
+    raw2, pq2 = str(tmp_path / "raw2"), str(tmp_path / "pq2")
+    assert S.rebuild_ivf_index(spark, raw, raw2, force=True, n_centroids=4,
+                               kmeans_max_iter=1,
+                               kmeans_init="random").dtype == np.float64
+    assert isinstance(S.rebuild_ivf_index(spark, pq, pq2, force=True), tuple)
+    assert S._read_layout_meta(spark, raw2)["scale"] is None
+    assert S._read_layout_meta(spark, pq2)["scale"] == 1000
+    assert not _has_codes(spark, raw2) and _has_codes(spark, pq2)
+
+    tombs = emb.filter(F.col("vec_id") % 7 == 3).select("vec_id")
+    for path in (raw, pq):
+        assert S.delete_from_ivf_index(spark, path, tombs)
+        assert spark.read.parquet(path).join(
+            tombs.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
+        ).count() == 0
+
+    for kind, writer, kw in (
+        ("ivf", S.write_ivf_index,
+         dict(kmeans_max_iter=1, kmeans_init="random")),
+        ("ivfpq", S.write_ivfpq_index, {}),
+    ):
+        root = str(tmp_path / f"root_{kind}")
+        S.build_ivf_index_versioned(base, root, writer=writer,
+                                    n_centroids=4, **kw)
+        rep = S.maintain_index(spark, root, gc_min_age_sec=0.0)
+        assert rep["kind"] == kind and rep["rebuilt_to"] is None
+        assert ("retrained" in rep) == (kind == "ivfpq")
+        assert S.rebuild_ivf_index_versioned(spark, root, force=True, **kw)
+        live = S.resolve_index_path(spark, root)
+        assert _has_codes(spark, live) == (kind == "ivfpq")
+
+    # IVFADC-only arguments on a raw layout
+    with pytest.raises(ValueError, match="split_mode"):
+        S.resplit_ivf_cell(spark, raw, split_mode="anchor")
+    with pytest.raises(ValueError, match="scale"):
+        S.append_to_ivf_index(more, raw, scale=1000)
+
+    # unstamped: no op may guess a codec
+    import shutil
+
+    for path in (raw, pq):
+        shutil.rmtree(path + "_meta")
+        before = _mtimes(path)
+        for op in (
+            lambda: S.append_to_ivf_index(more, path),
+            lambda: S.resplit_ivf_cell(spark, path),
+            lambda: S.measure_ivf_coarse_drift(spark, path),
+            lambda: S.rebuild_ivf_index(spark, path, path + "_new"),
+            lambda: S.delete_from_ivf_index(spark, path, tombs),
+        ):
+            with pytest.raises(ValueError, match="_meta sidecar"):
+                op()
+        assert _mtimes(path) == before
+        assert not os.path.exists(path + "_new")
+    root = str(tmp_path / "root_ivf")
+    shutil.rmtree(S.resolve_index_path(spark, root) + "_meta")
+    for op in (
+        lambda: S.rebuild_ivf_index_versioned(spark, root, force=True),
+        lambda: S.maintain_index(spark, root),
+    ):
+        with pytest.raises(ValueError, match="_meta sidecar"):
+            op()
+
+
+# Spark jobs of one warm call at the parent commit of the merged
+# lifecycle (sf0.001, 4-centroid layouts, counted with jobs_during).
+_PARENT_JOBS = {
+    "ivf": {"append": 2, "resplit": 9, "rebuild": 6,
+            "rebuild_versioned": 6, "maintain": 2},
+    "ivfpq": {"append": 2, "resplit": 9, "rebuild": 7,
+              "rebuild_versioned": 7, "maintain": 4},
+}
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+def test_warm_lifecycle_calls_run_no_more_jobs(
+    spark, sf_small, tmp_path, jobs_during, kind
+):
+    """Reading the codec from the layout is a driver-side sidecar read:
+    a warm call of each merged op runs no more Spark jobs than the
+    per-codec twin it replaced."""
+    emb = t(spark, sf_small, "embeddings")
+    base = emb.filter(F.col("vec_id") % 4 != 3)
+    extra = emb.filter(F.col("vec_id") % 4 == 3)
+    fit_kw = dict(kmeans_max_iter=1, kmeans_init="random")
+    raw_kw = dict(n_centroids=4, **fit_kw)
+    pq = kind == "ivfpq"
+    writer = S.write_ivfpq_index if pq else S.write_ivf_index
+    build_kw = dict(n_centroids=4) if pq else raw_kw
+    rebuild_kw = {} if pq else raw_kw
+    path = str(tmp_path / "idx")
+    writer(base, path, **build_kw)
+    root = str(tmp_path / "root")
+    S.build_ivf_index_versioned(emb, root, writer=writer, **build_kw)
+    ops = {
+        "append": lambda i: S.append_to_ivf_index(
+            extra.filter(F.col("vec_id") % 8 == 3 + 4 * i), path
+        ),
+        "resplit": lambda i: S.resplit_ivf_cell(
+            spark, path, n_sub=2, **({} if pq else fit_kw)
+        ),
+        "rebuild": lambda i: S.rebuild_ivf_index(
+            spark, path, str(tmp_path / f"rb{i}"), force=True, **rebuild_kw
+        ),
+        "rebuild_versioned": lambda i: S.rebuild_ivf_index_versioned(
+            spark, root, force=True, **rebuild_kw
+        ),
+        "maintain": lambda i: S.maintain_index(
+            spark, root, gc_min_age_sec=0.0
+        ),
+    }
+    for name, op in ops.items():
+        op(0)  # warm
+        assert jobs_during(lambda: op(1)) <= _PARENT_JOBS[kind][name], name

@@ -188,6 +188,36 @@ def test_datasource_stream_runs_deterministic(spark, tmp_path):
     assert by_run["sr-1"] == {tuple(r) for r in batch.collect()}
 
 
+def test_stream_drain_consumes_every_arrived_run(spark, tmp_path):
+    """A drain consumes everything that has arrived: Spark runs a Python
+    stream under availableNow as ONE micro-batch, so one run_upsert_sink
+    call over a grocery_txns stream with max_runs=3 must land all three
+    runs, and a later drain of the same checkpoint with one more run
+    must add exactly that run."""
+    from postgres_etl_pipeline_spark.streaming.runner import run_upsert_sink
+
+    _registered(spark)
+    target = str(tmp_path / "stg")
+
+    def drain(max_runs):
+        stream = (
+            spark.readStream.format("grocery_txns")
+            .option("run_prefix", "dr")
+            .option("n", "50")
+            .option("max_runs", str(max_runs))
+            .load()
+        )
+        run_upsert_sink(
+            stream, target, ["run_id", "txn_id"], ["event_time"],
+            checkpoint=str(tmp_path / "ckpt"),
+        )
+        rows = spark.read.parquet(target).select("run_id").collect()
+        return len(rows), {r.run_id for r in rows}
+
+    assert drain(3) == (150, {"dr-0", "dr-1", "dr-2"})
+    assert drain(4) == (200, {"dr-0", "dr-1", "dr-2", "dr-3"})
+
+
 def test_bench_vs_prev_normalization_math(tmp_path, monkeypatch):
     """_vs_prev_normalized divides out box drift via the control ratio:
     with the box 2x slower (control 0.5 -> 1.0) and raw timings equal,

@@ -309,7 +309,7 @@ def test_ivfpq_index_probe_all_equals_residual_operator(spark, sf_small, tmp_pat
 def test_ivfpq_index_append_equals_one_shot_build(spark, sf_small, tmp_path):
     """Split build + append == one-shot build, bit-for-bit, when the
     sidecars are held fixed (the explicit coarse_cents/codebook override
-    is exactly the stored-sidecar path append_to_ivfpq_index reads)."""
+    is exactly the stored-sidecar path append_to_ivf_index reads)."""
     emb = _emb(spark, sf_small)
     q = emb.filter(F.col("vec_id") < 20)
     full = str(tmp_path / "full")
@@ -319,7 +319,7 @@ def test_ivfpq_index_append_equals_one_shot_build(spark, sf_small, tmp_path):
         emb.filter(F.col("vec_id") % 5 != 4), split,
         coarse_cents=Cc, codebook=S.LatticeCodebook(As, 1000),
     )
-    S.append_to_ivfpq_index(emb.filter(F.col("vec_id") % 5 == 4), split)
+    S.append_to_ivf_index(emb.filter(F.col("vec_id") % 5 == 4), split)
     a = sorted(
         map(tuple, S.ivfpq_index_topk(spark, full, q, k=5, n_probe=8).collect())
     )
@@ -444,27 +444,11 @@ def test_streaming_ivfpq_maintenance_multi_batch(spark, sf_small, tmp_path):
         max_files_per_trigger=1,
     )
     run_ivf_maintenance_sink(
-        st, split, index_kind="ivfpq", checkpoint=str(tmp_path / "ckpt")
+        st, split, checkpoint=str(tmp_path / "ckpt")
     )
     fa = spark.read.parquet(full).select("neighbor_id", "cid", "codes")
     fb = spark.read.parquet(split).select("neighbor_id", "cid", "codes")
     assert sorted(map(tuple, fa.collect())) == sorted(map(tuple, fb.collect()))
-
-
-def test_ivf_maintenance_sink_rejects_unknown_kind(spark, sf_small, tmp_path):
-    import pytest as _pytest
-
-    from postgres_etl_pipeline_spark.streaming.runner import (
-        run_ivf_maintenance_sink,
-    )
-    from postgres_etl_pipeline_spark.streaming.sources import stream_parquet
-
-    st = stream_parquet(
-        spark, f"{sf_small}/embeddings.parquet",
-        "vec_id long, embedding array<float>, label int",
-    )
-    with _pytest.raises(ValueError, match="index_kind"):
-        run_ivf_maintenance_sink(st, str(tmp_path / "x"), index_kind="hnsw")
 
 
 def test_ivfpq_resplit_invariants(spark, sf_small, tmp_path):
@@ -484,7 +468,7 @@ def test_ivfpq_resplit_invariants(spark, sf_small, tmp_path):
     sizes = {r["cid"]: r["n"] for r in S.ivf_list_sizes(spark, path).collect()}
     hot = max(sizes, key=lambda c: (sizes[c], -c))
     dirs_before, _ = _file_sets(path)
-    new_cents = S.resplit_ivfpq_cell(
+    new_cents = S.resplit_ivf_cell(
         spark, path, n_sub=2, kmeans_max_iter=2
     )
     assert new_cents.shape[0] == 9

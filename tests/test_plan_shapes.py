@@ -873,3 +873,36 @@ def test_python_worker_call_sites_are_pinned():
         rel = path.relative_to(root).as_posix()
         visit(ast.parse(path.read_text(), filename=str(path)), rel, None)
     assert found == PYTHON_WORKER_SITES
+
+
+IVF_LIFECYCLE_OPS = (
+    "append_to_ivf_index", "resplit_ivf_cell", "measure_ivf_coarse_drift",
+    "rebuild_ivf_index", "build_ivf_index_versioned",
+    "rebuild_ivf_index_versioned", "delete_from_ivf_index", "maintain_index",
+)
+
+
+def test_ivf_lifecycle_ops_are_defined_once_for_both_codecs():
+    """Tooling guard: each IVF maintenance op is ONE function serving
+    both cell codecs (the codec comes from the layout's _meta stamp), so
+    no per-codec ``*_ivfpq_*`` twin of append, re-split, coarse drift,
+    rebuild, versioned build/rebuild or delete may reappear, and neither
+    the ANN module nor the streaming runner takes a ``kind`` /
+    ``index_kind`` option that the stamp already determines."""
+    root = Path(__file__).resolve().parent.parent / "postgres_etl_pipeline_spark"
+    tree = ast.parse((root / "operators/similarity.py").read_text())
+    defs = Counter(
+        n.name for n in tree.body if isinstance(n, ast.FunctionDef)
+    )
+    assert all(defs[op] == 1 for op in IVF_LIFECYCLE_OPS), defs
+    twin = re.compile(
+        r".*ivfpq.*(append|resplit|coarse_drift|rebuild|versioned|delete).*"
+        r"|.*(append|resplit|coarse_drift|rebuild|versioned|delete).*ivfpq.*"
+    )
+    assert not [name for name in defs if twin.fullmatch(name)]
+    for rel in ("operators/similarity.py", "streaming/runner.py"):
+        for node in ast.walk(ast.parse((root / rel).read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.Lambda)):
+                a = node.args
+                params = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+                assert not params & {"kind", "index_kind"}, (rel, node.lineno)

@@ -855,9 +855,9 @@ def test_ivfpq_append_delete_commute(spark, sf_small, order):
         S.write_ivfpq_index(base, path, coarse_cents=Cc, codebook=As)
         for op in order:
             if op in slices:
-                S.append_to_ivfpq_index(slices[op], path)
+                S.append_to_ivf_index(slices[op], path)
             else:
-                S.delete_from_ivfpq_index(spark, path, tombs)
+                S.delete_from_ivf_index(spark, path, tombs)
         got = sorted(
             map(
                 tuple,
@@ -934,11 +934,11 @@ def test_ivfpq_resplit_interleavings_commute_at_exactness(
         S.write_ivfpq_index(base, path, coarse_cents=Cc, codebook=As)
         for op in order:
             if op in slices:
-                S.append_to_ivfpq_index(slices[op], path)
+                S.append_to_ivf_index(slices[op], path)
             elif op == "r":
-                S.resplit_ivfpq_cell(spark, path, n_sub=2, split_mode="anchor")
+                S.resplit_ivf_cell(spark, path, n_sub=2, split_mode="anchor")
             else:
-                S.delete_from_ivfpq_index(spark, path, tombs)
+                S.delete_from_ivf_index(spark, path, tombs)
         # (1) row set is order-independent
         rows = spark.read.parquet(path).select(
             "neighbor_id", "cv", "codes", "cid"

@@ -467,7 +467,7 @@ def test_retrain_repairs_recall_after_synthetic_drift(spark, sf_small, tmp_path)
         emb, path, n_centroids=8, coarse="lloyd",
         kmeans_max_iter=4, kmeans_init="random",
     )
-    S.append_to_ivfpq_index(drifted, path)
+    S.append_to_ivf_index(drifted, path)
     # (a) the appended batch IS the drift signal
     err_before, train_err = S.measure_ivfpq_drift(spark, path, sample_of=drifted)
     assert err_before > 1.5 * train_err, (err_before, train_err)

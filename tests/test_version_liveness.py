@@ -473,7 +473,7 @@ def test_maintain_index_tick_compacts_and_is_idempotent(
     for m in (1, 2, 3):  # fragment: one file per touched cell per append
         S.append_to_ivf_index(emb.filter(F.col("vec_id") % 4 == m), root)
     rep = S.maintain_index(
-        spark, root, kind="ivf", compact_target_bytes=1 << 30,
+        spark, root, compact_target_bytes=1 << 30,
         gc_min_age_sec=0.0,
     )
     assert rep["recovered"] is False and rep["rebuilt_to"] is None
@@ -485,7 +485,7 @@ def test_maintain_index_tick_compacts_and_is_idempotent(
         S.brute_force_topk(emb, q, k=5)
     )
     rep2 = S.maintain_index(
-        spark, root, kind="ivf", compact_target_bytes=1 << 30,
+        spark, root, compact_target_bytes=1 << 30,
         gc_min_age_sec=0.0,
     )
     assert rep2["rebuilt_to"] is None and rep2["compacted_cids"] == []
@@ -504,7 +504,7 @@ def test_maintain_index_tick_rebuilds_past_threshold(
                                 kmeans_max_iter=1, kmeans_init="random")
     v1 = S.resolve_index_path(spark, root)
     rep = S.maintain_index(
-        spark, root, kind="ivf", coarse_threshold=0.0,
+        spark, root, coarse_threshold=0.0,
         gc_min_age_sec=0.0,
         n_centroids=8, kmeans_max_iter=1, kmeans_init="random",
     )
@@ -523,11 +523,11 @@ def test_maintain_index_tick_on_ivfpq_root(spark, sf_small, tmp_path):
     compaction + GC path; ADC serving through the root stays live."""
     emb = _emb(spark, sf_small)
     root = str(tmp_path / "idx")
-    S.build_ivfpq_index_versioned(emb, root, n_centroids=4)
-    rep = S.maintain_index(spark, root, kind="ivfpq", gc_min_age_sec=0.0)
+    S.build_ivf_index_versioned(
+        emb, root, writer=S.write_ivfpq_index, n_centroids=4
+    )
+    rep = S.maintain_index(spark, root, gc_min_age_sec=0.0)
     assert rep["rebuilt_to"] is None and rep["retrained"] is False
     assert rep["coarse_baseline"] > 0
     out = S.ivfpq_index_topk(spark, root, _q(emb), k=5, n_probe=4)
     assert out.count() > 0
-    with pytest.raises(ValueError, match="kind"):
-        S.maintain_index(spark, root, kind="flat")
