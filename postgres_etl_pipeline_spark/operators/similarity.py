@@ -690,6 +690,24 @@ def assign_to_centroids(c: DataFrame, cents, extra_cols: tuple = ()) -> DataFram
     )
 
 
+def _fit_ivf_quantizer(
+    c: DataFrame, n_centroids, seed, kmeans_max_iter, kmeans_init, fit_sample
+):
+    """Float coarse centroids of an IVF search or build over ``c``
+    (neighbor_id, cv). Same quantizer-tier cut as semdedup_scaled
+    (verdict r07 item 1): one flat Lloyd carries k only up to
+    fit_sample // 8 before the points-per-centroid floor degenerates and
+    driver fit time goes O(k·fit_sample·d); past it the two-level
+    √k-split quantizer keeps k ∝ N with per-branch samples. Below the
+    cut the flat fit stays bit-identical to previous rounds (recall
+    tests + SCALE rows pin it)."""
+    flat = n_centroids <= max(2, int(fit_sample) // 8)
+    return (fit_coarse_quantizer if flat else fit_two_level_quantizer)(
+        c, n_centroids, seed=seed, kmeans_max_iter=kmeans_max_iter,
+        kmeans_init=kmeans_init, fit_sample=fit_sample,
+    )
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -728,7 +746,9 @@ def ivf_topk(
 
     Recall is data-dependent (no pigeonhole guarantee, unlike the SimHash
     bands) — tests assert measured recall against brute force.
+    ``n_probe < 1`` raises ``ValueError``.
     """
+    n_probe = _probe_count(n_probe, n_centroids)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double_vec(vec_col).alias("cv")
     )
@@ -736,31 +756,14 @@ def ivf_topk(
     # back to exact search (same contract, no index worth building)
     if c.limit(n_centroids).count() < n_centroids:
         return brute_force_topk(corpus, queries, k, id_col, vec_col)
-
-    # Same quantizer-tier cut as semdedup_scaled (verdict r07 item 1):
-    # one flat Lloyd carries k only up to fit_sample // 8 before the
-    # points-per-centroid floor degenerates and driver fit time goes
-    # O(k·fit_sample·d); past it the two-level √k-split quantizer keeps
-    # k ∝ N with per-branch samples. Below the cut the flat fit stays
-    # bit-identical to previous rounds (recall tests + SCALE rows pin it).
-    if n_centroids <= max(2, int(fit_sample) // 8):
-        cents = fit_coarse_quantizer(
-            c,
-            n_centroids,
-            seed=seed,
-            kmeans_max_iter=kmeans_max_iter,
-            kmeans_init=kmeans_init,
-            fit_sample=fit_sample,
-        )
-    else:
-        cents = fit_two_level_quantizer(
-            c,
-            n_centroids,
-            seed=seed,
-            kmeans_max_iter=kmeans_max_iter,
-            kmeans_init=kmeans_init,
-            fit_sample=fit_sample,
-        )
+    cents = _fit_ivf_quantizer(
+        c,
+        n_centroids,
+        seed=seed,
+        kmeans_max_iter=kmeans_max_iter,
+        kmeans_init=kmeans_init,
+        fit_sample=fit_sample,
+    )
     assigned = assign_to_centroids(c, cents)
     import numpy as np
 
@@ -1314,6 +1317,195 @@ def pq_anchor_codebook(
     return [list(r["q"]) for r in rows]
 
 
+_TOPK_DDL = "query_id long, neighbor_id long, cos_sim double, rank int"
+
+
+def _probe_count(n_probe, n_cents: int) -> int:
+    """Lists each query of an IVF search probes: ``n_probe`` clamped to
+    the ``n_cents`` lists there are. Every IVF search over at least one
+    list resolves its ``n_probe`` here, so ``n_probe < 1`` raises
+    ``ValueError`` on each (a layout with no lists answers empty)."""
+    if int(n_probe) < 1:
+        raise ValueError(f"n_probe must be at least 1; got {n_probe}")
+    return min(int(n_probe), int(n_cents))
+
+
+def _lattice_d2(X, C):
+    """|c|² − 2x·c for every (row of ``X``, row of ``C``) on the int64
+    lattice: the squared distance minus the per-row constant |x|², so an
+    argmin or stable argsort over it is exact and ties go to the LOWEST
+    index — the order coarse cells, PQ codes and lattice probe lists all
+    use, and the DuckDB oracle's (dist, index) order."""
+    return (C * C).sum(axis=1)[None, :] - 2 * (X @ C.T)
+
+
+def _nearest(X, C):
+    """Index of each lattice row's nearest entry of ``C`` (:func:`_lattice_d2`)."""
+    return _lattice_d2(X, C).argmin(axis=1)
+
+
+def _pq_encode(X, As, Cc=None, cids=None):
+    """PQ-encode int64 lattice vectors ``X`` against the ``(C, m, d)``
+    codebook ``As``: returns ``(cids, codes)``. With coarse centroids
+    ``Cc`` the codes encode the residual ``x − Cc[cid]``, where ``cid`` is
+    the given ``cids`` (a layout's stored cell) or else the nearest
+    centroid; without ``Cc`` the raw vector is encoded and ``cids`` passes
+    through. Every build, append, re-split, retrain, search scan and
+    error measure assigns codes here, so they agree bit for bit."""
+    import numpy as np
+
+    X = np.asarray(X, dtype=np.int64)
+    if Cc is not None:
+        if cids is None:
+            cids = _nearest(X, Cc)
+        X = X - Cc[cids]
+    _, m, d = As.shape
+    R = X.reshape(len(X), m, d)
+    codes = np.empty((len(X), m), dtype=np.int64)
+    for s in range(m):
+        codes[:, s] = _nearest(R[:, s, :], As[:, s, :])
+    return cids, codes
+
+
+def _lattice_queries(queries: DataFrame, id_col, vec_col, scale) -> list:
+    """Collected query rows of a PQ search: ``query_id``, the double
+    vector ``qv`` for the exact re-rank, and its lattice codes ``qq``."""
+    return queries.select(
+        F.col(id_col).alias("query_id"),
+        as_double_vec(vec_col).alias("qv"),
+        fixed_point_codes(as_double_vec(vec_col), scale).alias("qq"),
+    ).collect()
+
+
+def _checked_codebook(codebook, scale, caller, m, d=None):
+    """A caller-supplied codebook as an int64 ``(C, m, d)`` array, after
+    the shared-scale check (:func:`_check_codebook_scale`) and the shape
+    check (``d`` too when the caller knows the vector width)."""
+    import numpy as np
+
+    _check_codebook_scale(codebook, scale, caller)
+    As = np.asarray(codebook, dtype=np.int64)
+    if As.ndim != 3 or As.shape[1] != m or d not in (None, As.shape[2]):
+        width = "d" if d is None else f"d={d}"
+        raise ValueError(
+            f"codebook must have shape (C, m={m}, {width}); got {As.shape}"
+        )
+    return As
+
+
+def _pq_search(rows, corpus, q_rows, As, probe_idx, n_cents, k, rerank,
+               id_col, vec_col, Cc=None) -> DataFrame:
+    """The ADC candidate scan of every PQ search, then the exact re-rank.
+
+    ``rows`` is (neighbor_id[, cid], cd | codes): rows with ``cd`` (the
+    lattice codes of the vector) are PQ-encoded inside the batch by
+    :func:`_pq_encode` — as residuals when ``Cc`` is given — and rows with
+    ``codes`` were encoded at build. ``probe_idx`` (Q × p) lists the
+    cells among ``n_cents`` each query probes; a row pairs with a query
+    only when its cell is on that list (rows without ``cid`` form one
+    cell), and never with itself.
+
+    The LUTs are exact int64 and built here on the driver: with ``Cc``
+    one per (query, probe slot) — the query's residual against that
+    slot's centroid — so the broadcast is Q·p·m·C, never Q·n_cents·m·C;
+    without it one per query (Q·m·C) that every cell reads. A row's ADC
+    to a query is the sum of the m LUT entries its codes pick. ONE Arrow
+    pass emits the probed (query, row, adc) pairs, the per-query top
+    ``k·rerank`` by (adc, neighbor_id) are kept, and
+    :func:`_rerank_exact_cosine` scores them against ``corpus``."""
+    import numpy as np
+    import pandas as pd
+
+    As = np.asarray(As, dtype=np.int64)
+    C, m, d = As.shape
+    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
+    Qq = np.array([r["qq"] for r in q_rows], dtype=np.int64)
+    if m * d != Qq.shape[1]:
+        raise ValueError(
+            f"codebook subvector width d={d} gives m*d={m * d}, but "
+            f"vectors have {Qq.shape[1]} dims"
+        )
+    nq, p = probe_idx.shape
+    if Cc is None:
+        offsets = np.zeros((nq, 1, m * d), dtype=np.int64)
+        slot_ids = np.zeros(p, dtype=np.int64)
+    else:
+        offsets = Cc[probe_idx]
+        slot_ids = np.arange(p)
+    books = As.transpose(1, 0, 2)[None, :, :, :]  # (1, m, C, d)
+    lut = np.empty((nq, offsets.shape[1], m, C), dtype=np.int64)
+    # slot_of[q, cid]: the LUT slot query q reads for a row of cell cid,
+    # −1 where q does not probe it (such pairs are masked before emission)
+    slot_of = np.full((nq, n_cents), -1, dtype=np.int64)
+    for qi in range(nq):
+        res = (Qq[qi][None, :] - offsets[qi]).reshape(-1, m, 1, d)
+        lut[qi] = ((res - books) ** 2).sum(-1)
+        slot_of[qi, probe_idx[qi]] = slot_ids
+    has_cid = "cid" in rows.columns
+    encode = None if "codes" in rows.columns else (As, Cc)
+    bc = rows.sparkSession.sparkContext.broadcast((qids, lut, slot_of, encode))
+
+    def adc_candidates(batches):
+        b_qids, b_lut, b_slot, b_encode = bc.value
+        q_arange = np.arange(len(b_qids))[:, None]
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            nids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
+            cids = pdf["cid"].to_numpy(dtype=np.int64) if has_cid else None
+            if b_encode is None:
+                codes = np.array(list(pdf["codes"]), dtype=np.int64)
+            else:
+                cids, codes = _pq_encode(list(pdf["cd"]), *b_encode, cids)
+            if cids is None:
+                cids = np.zeros(len(nids), dtype=np.int64)
+            slots = b_slot[:, cids]  # (Q, n)
+            adc = np.zeros((len(nids), len(b_qids)), dtype=np.int64)
+            for s in range(codes.shape[1]):
+                adc += b_lut[q_arange, slots, s, codes[:, s][None, :]].T
+            keep = (slots >= 0).T & (nids[:, None] != b_qids[None, :])
+            ri, qi = np.nonzero(keep)
+            yield pd.DataFrame(
+                {
+                    "query_id": b_qids[qi],
+                    "neighbor_id": nids[ri],
+                    "adc": adc[ri, qi],
+                }
+            )
+
+    cand_w = Window.partitionBy("query_id").orderBy(
+        F.col("adc").asc(), F.col("neighbor_id")
+    )
+    cands = (
+        rows.mapInPandas(
+            adc_candidates, "query_id long, neighbor_id long, adc long"
+        )
+        .withColumn("crank", F.row_number().over(cand_w))
+        .filter(F.col("crank") <= k * rerank)
+        .select("query_id", "neighbor_id")
+    )
+    return _rerank_exact_cosine(cands, corpus, q_rows, k, id_col, vec_col)
+
+
+def _pq_codebook(corpus, codebook, m, codebook_size, scale, id_col, vec_col,
+                 caller):
+    """The ``(C, m, d)`` codebook of a raw-vector PQ search: the caller's
+    ``codebook`` (:func:`_checked_codebook`), or the hash-first anchor
+    codebook of ``corpus`` split into m subvectors — None when the
+    corpus is empty."""
+    import numpy as np
+
+    if codebook is not None:
+        return _checked_codebook(codebook, scale, caller, m)
+    book = pq_anchor_codebook(corpus, codebook_size, id_col, vec_col, scale)
+    if not book:
+        return None
+    A = np.array(book, dtype=np.int64)  # (C, D)
+    if A.shape[1] % m:
+        raise ValueError(f"m={m} must divide vector dims={A.shape[1]}")
+    return A.reshape(len(A), m, A.shape[1] // m)
+
+
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1346,12 +1538,12 @@ def pq_topk(
     as :func:`sq8_topk`'s integer-dot cut. The final scores re-rank
     ``k·rerank`` candidates with exact double cosine JVM-side.
 
-    Scale shape: the codebook and per-query LUTs are bounded driver
-    metadata (``codebook_size × dims`` ints; Q·m·codebook_size int64
-    LUT) broadcast to executors; encode+ADC is ONE Arrow-batched
-    ``mapInPandas`` corpus scan (int64 matmul per batch — the
-    :func:`sq8_topk` sanctioned vectorized path); the only shuffles are
-    the per-query candidate top-k and the ≤ Q·k·rerank re-rank join.
+    The search is the shared PQ scan (:func:`_pq_search`) over the whole
+    corpus as one cell: the codebook and the Q·m·codebook_size int64 LUT
+    are bounded metadata broadcast to executors, the corpus is encoded
+    and scored in ONE Arrow-batched ``mapInPandas`` pass, and the only
+    shuffles are the per-query candidate top-k and the ≤ Q·k·rerank
+    re-rank join.
 
     ``m`` must divide the vector dimensionality (raises ``ValueError``).
     Recall vs brute force is data-dependent (tests measure it);
@@ -1372,94 +1564,24 @@ def pq_topk(
     rather than failing deep inside the Arrow scan.
     """
     import numpy as np
-    import pandas as pd
 
     spark = corpus.sparkSession
-    empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
-    if codebook is not None:
-        _check_codebook_scale(codebook, scale, "pq_topk")
-        As = np.asarray(codebook, dtype=np.int64)
-        if As.ndim != 3 or As.shape[1] != m:
-            raise ValueError(
-                f"codebook must have shape (C, m={m}, d); got {As.shape}"
-            )
-        C, _, d = As.shape
-    else:
-        book = pq_anchor_codebook(corpus, codebook_size, id_col, vec_col, scale)
-        if not book:
-            return local_frame(spark, [], empty_schema)
-        A = np.array(book, dtype=np.int64)  # (C, D)
-        C, D = A.shape
-        if D % m:
-            raise ValueError(f"m={m} must divide vector dims={D}")
-        d = D // m
-        As = A.reshape(C, m, d)
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double_vec(vec_col).alias("qv"),
-        fixed_point_codes(as_double_vec(vec_col), scale).alias("qq"),
-    ).collect()
+    As = _pq_codebook(
+        corpus, codebook, m, codebook_size, scale, id_col, vec_col, "pq_topk"
+    )
+    if As is None:
+        return local_frame(spark, [], _TOPK_DDL)
+    q_rows = _lattice_queries(queries, id_col, vec_col, scale)
     if not q_rows:
-        return local_frame(spark, [], empty_schema)
-    if m * d != len(q_rows[0]["qq"]):
-        # provided-codebook dim mismatch would otherwise surface as an
-        # opaque numpy reshape error inside mapInPandas (advice r07)
-        raise ValueError(
-            f"codebook subvector width d={d} gives m*d={m * d}, but "
-            f"vectors have {len(q_rows[0]['qq'])} dims"
-        )
-    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    Qs = np.array([r["qq"] for r in q_rows], dtype=np.int64).reshape(-1, m, d)
-    # LUT[q, s, c] = ||Qs[q,s] - As[c,s]||^2 — exact int64
-    lut = ((Qs[:, None, :, :] - As[None, :, :, :]) ** 2).sum(-1)  # (Q, C, m)
-    lut = np.ascontiguousarray(lut.transpose(0, 2, 1))  # (Q, m, C)
-    bc = spark.sparkContext.broadcast((qids, lut, As))
-
-    def adc_score(batches):
-        b_qids, b_lut, b_As = bc.value
-        nq = len(b_qids)
-        a_sq = (b_As**2).sum(-1)  # (C, m)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            X = np.array(list(pdf["cd"]), dtype=np.int64).reshape(
-                len(cids), m, d
-            )
-            n = len(cids)
-            adc = np.zeros((n, nq), dtype=np.int64)
-            for s in range(m):
-                # assignment: argmin ||x - a||^2 = x^2 - 2x·a + a^2;
-                # x^2 is constant per row, so argmin over a^2 - 2x·a —
-                # one int64 matmul, no (n, C, d) temp. np.argmin takes
-                # the FIRST minimum = lowest code, matching the oracle's
-                # (dist, code) order.
-                g = X[:, s, :] @ b_As[:, s, :].T  # (n, C)
-                codes_s = np.argmin(a_sq[:, s][None, :] - 2 * g, axis=1)
-                adc += b_lut[:, s, codes_s].T  # (n, Q)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(b_qids, n),
-                    "neighbor_id": np.repeat(cids, nq),
-                    "adc": adc.ravel(),
-                }
-            )
-
-    coded = corpus.select(
+        return local_frame(spark, [], _TOPK_DDL)
+    rows = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         fixed_point_codes(as_double_vec(vec_col), scale).alias("cd"),
     )
-    cand_w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
+    one_list = np.zeros((len(q_rows), 1), dtype=np.int64)
+    return _pq_search(
+        rows, corpus, q_rows, As, one_list, 1, k, rerank, id_col, vec_col
     )
-    cands = (
-        coded.mapInPandas(adc_score, "query_id long, neighbor_id long, adc long")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("crank", F.row_number().over(cand_w))
-        .filter(F.col("crank") <= k * rerank)
-        .select("query_id", "neighbor_id")
-    )
-    return _rerank_exact_cosine(cands, corpus, q_rows, k, id_col, vec_col)
 
 
 def pq_train_codebook(
@@ -1562,36 +1684,34 @@ def ivfpq_topk(
     Exactness structure (shared with the component operators):
 
     * coarse stage — the same flat / two-level Lloyd tier cut as
-      :func:`ivf_topk` (two-level above ``fit_sample // 8`` centroids,
-      keeping k ∝ N); assignment is :func:`assign_to_centroids`' pure
-      argmin; the per-query probe list is a driver-side argsort over
-      bounded centroid metadata, exactly :func:`ivf_topk`'s shape.
-    * ADC stage — bit-identical arithmetic to :func:`pq_topk`: the SAME
-      hash-ordered anchor codebook derived from the FULL corpus (or a
-      provided trained codebook on the shared ``scale`` lattice — same
-      contract), the same exact-int64 LUT and assignment, the same
-      (adc, neighbor_id) candidate order. With ``n_probe =
-      n_centroids`` every list is scanned and the output EQUALS
-      :func:`pq_topk`'s — which is what lets the catalog entry
-      hash-oracle against the PQ SQL while the sub-linear n_probe <
-      n_centroids path is pinned by measured-recall tests and the
-      SCALE.md scanned-fraction row.
+      :func:`ivf_topk` (:func:`_fit_ivf_quantizer`); assignment is
+      :func:`assign_to_centroids`' pure argmin; the per-query probe list
+      is a driver-side float argsort over bounded centroid metadata,
+      exactly :func:`ivf_topk`'s shape.
+    * ADC stage — the shared PQ scan (:func:`_pq_search`) with
+      :func:`pq_topk`'s codebook (the hash-ordered anchor codebook of the
+      FULL corpus, or a provided trained codebook on the shared ``scale``
+      lattice) and its one LUT per query. With ``n_probe = n_centroids``
+      every list is scanned and the output EQUALS :func:`pq_topk`'s —
+      which is what lets the catalog entry hash-oracle against the PQ
+      SQL while the sub-linear n_probe < n_centroids path is pinned by
+      measured-recall tests and the SCALE.md scanned-fraction row.
 
-    Scale shape: centroids, codebook, LUTs, and probe lists are bounded
-    driver/broadcast metadata; ONE Arrow-batched ``mapInPandas`` pass
-    scores the PRUNED corpus (rows whose cid no query probes are dropped
-    scan-side by a broadcast semi-join — at 100 TB the corpus is written
-    partitioned by cid and the same join prunes file reads); per-row
-    emit volume is its probing queries only (the cid→query mask applies
-    INSIDE the batch, so candidate volume is the true probed volume, not
-    n × Q). Shuffles: the per-query candidate top-k and the ≤ Q·k·rerank
-    exact re-rank join, both identical to :func:`pq_topk`.
+    Scale shape: centroids, codebook, LUTs and probe lists are bounded
+    driver/broadcast metadata; the assignment pass and ONE fused
+    encode+ADC pass score the PRUNED corpus (rows whose cid no query
+    probes are dropped scan-side by a broadcast semi-join — at 100 TB the
+    corpus is written partitioned by cid and the same join prunes file
+    reads); a row is emitted only for the queries that probe its list,
+    so candidate volume is the true probed volume, not n × Q. Shuffles:
+    the per-query candidate top-k and the ≤ Q·k·rerank exact re-rank
+    join, both identical to :func:`pq_topk`. ``n_probe < 1`` raises
+    ``ValueError``.
     """
     import numpy as np
-    import pandas as pd
 
     spark = corpus.sparkSession
-    empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
+    n_probe = _probe_count(n_probe, n_centroids)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double_vec(vec_col).alias("cv")
     )
@@ -1602,95 +1722,26 @@ def ivfpq_topk(
             corpus, queries, m, k, rerank, codebook_size, scale,
             id_col, vec_col, codebook,
         )
-    if n_centroids <= max(2, int(fit_sample) // 8):
-        cents = fit_coarse_quantizer(
-            c, n_centroids, seed=seed, kmeans_max_iter=kmeans_max_iter,
-            kmeans_init=kmeans_init, fit_sample=fit_sample,
-        )
-    else:
-        cents = fit_two_level_quantizer(
-            c, n_centroids, seed=seed, kmeans_max_iter=kmeans_max_iter,
-            kmeans_init=kmeans_init, fit_sample=fit_sample,
-        )
-    # --- PQ codebook: identical derivation to pq_topk (full corpus) ---
-    if codebook is not None:
-        _check_codebook_scale(codebook, scale, "ivfpq_topk")
-        As = np.asarray(codebook, dtype=np.int64)
-        if As.ndim != 3 or As.shape[1] != m:
-            raise ValueError(
-                f"codebook must have shape (C, m={m}, d); got {As.shape}"
-            )
-        d = As.shape[2]
-    else:
-        book = pq_anchor_codebook(corpus, codebook_size, id_col, vec_col, scale)
-        if not book:
-            return local_frame(spark, [], empty_schema)
-        A = np.array(book, dtype=np.int64)
-        if A.shape[1] % m:
-            raise ValueError(f"m={m} must divide vector dims={A.shape[1]}")
-        d = A.shape[1] // m
-        As = A.reshape(len(A), m, d)
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double_vec(vec_col).alias("qv"),
-        fixed_point_codes(as_double_vec(vec_col), scale).alias("qq"),
-    ).collect()
+    cents = _fit_ivf_quantizer(
+        c, n_centroids, seed=seed, kmeans_max_iter=kmeans_max_iter,
+        kmeans_init=kmeans_init, fit_sample=fit_sample,
+    )
+    As = _pq_codebook(
+        corpus, codebook, m, codebook_size, scale, id_col, vec_col,
+        "ivfpq_topk",
+    )
+    if As is None:
+        return local_frame(spark, [], _TOPK_DDL)
+    q_rows = _lattice_queries(queries, id_col, vec_col, scale)
     if not q_rows:
-        return local_frame(spark, [], empty_schema)
-    if m * d != len(q_rows[0]["qq"]):
-        raise ValueError(
-            f"codebook subvector width d={d} gives m*d={m * d}, but "
-            f"vectors have {len(q_rows[0]['qq'])} dims"
-        )
-    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    Qs = np.array([r["qq"] for r in q_rows], dtype=np.int64).reshape(-1, m, d)
-    lut = ((Qs[:, None, :, :] - As[None, :, :, :]) ** 2).sum(-1)  # (Q, C, m)
-    lut = np.ascontiguousarray(lut.transpose(0, 2, 1))  # (Q, m, C)
-    # --- per-query probe lists over bounded centroid metadata ---
+        return local_frame(spark, [], _TOPK_DDL)
     Qv = np.array([r["qv"] for r in q_rows], dtype=np.float64)
     d2 = ((Qv[:, None, :] - cents[None, :, :]) ** 2).sum(-1)  # (Q, k1)
-    probe_idx = np.argsort(d2, axis=1)[:, : int(n_probe)]  # (Q, n_probe)
-    n_cents = len(cents)
-    probe_mask = np.zeros((len(qids), n_cents), dtype=bool)
-    for qi, row in enumerate(probe_idx):
-        probe_mask[qi, row] = True
-    probed_cids = sorted({int(x) for x in probe_idx.ravel()})
-    bc = spark.sparkContext.broadcast((qids, lut, As, probe_mask))
-
-    def adc_score(batches):
-        b_qids, b_lut, b_As, b_mask = bc.value
-        a_sq = (b_As**2).sum(-1)  # (C, m)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            nids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            cids = pdf["cid"].to_numpy(dtype=np.int64)
-            X = np.array(list(pdf["cd"]), dtype=np.int64).reshape(
-                len(nids), m, d
-            )
-            n = len(nids)
-            adc = np.zeros((n, len(b_qids)), dtype=np.int64)
-            for s in range(m):
-                g = X[:, s, :] @ b_As[:, s, :].T
-                codes_s = np.argmin(a_sq[:, s][None, :] - 2 * g, axis=1)
-                adc += b_lut[:, s, codes_s].T
-            # probe mask: emit (row, query) only where the row's list is
-            # probed by that query — candidate volume is the true probed
-            # volume, not n × Q
-            keep = b_mask[:, cids].T  # (n, Q)
-            ri, qi = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "query_id": b_qids[qi],
-                    "neighbor_id": nids[ri],
-                    "adc": adc[ri, qi],
-                }
-            )
-
+    probe_idx = np.argsort(d2, axis=1)[:, :n_probe]
     probed = local_frame(
-        spark, [(int(x),) for x in probed_cids], "cid int"
+        spark, [(int(x),) for x in np.unique(probe_idx)], "cid int"
     )
-    coded = (
+    rows = (
         assign_to_centroids(c, cents)
         .join(F.broadcast(probed), "cid", "left_semi")
         .select(
@@ -1699,19 +1750,10 @@ def ivfpq_topk(
             fixed_point_codes(F.col("cv"), scale).alias("cd"),
         )
     )
-    cand_w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
+    return _pq_search(
+        rows, corpus, q_rows, As, probe_idx, len(cents), k, rerank,
+        id_col, vec_col,
     )
-    cands = (
-        coded.mapInPandas(
-            adc_score, "query_id long, neighbor_id long, adc long"
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("crank", F.row_number().over(cand_w))
-        .filter(F.col("crank") <= k * rerank)
-        .select("query_id", "neighbor_id")
-    )
-    return _rerank_exact_cosine(cands, corpus, q_rows, k, id_col, vec_col)
 
 
 def write_ivf_index(
@@ -1888,7 +1930,9 @@ def rebuild_ivf_index(
 ):
     """Drift-triggered GLOBAL re-cluster, blue/green: when
     :func:`measure_ivf_coarse_drift` exceeds ``drift_threshold ×
-    train_err`` (or ``force``), rebuild the layout's CURRENT rows into a
+    train_err`` — or on ``force``, which skips the measurement, so a
+    layout without a coarse baseline can be rebuilt to stamp one —
+    rebuild the layout's CURRENT rows into a
     fresh index at ``new_path`` with the writer of the layout's own
     codec (:func:`write_ivf_index` or :func:`write_ivfpq_index`, which
     re-derives the coarse quantizer AND the residual codebook) — the
@@ -1913,11 +1957,12 @@ def rebuild_ivf_index(
     one). Returns what the writer returns when the rebuild ran: the
     centroid matrix, or ``(Cc, As)``."""
     old_path = _resolve_maybe_root(spark, old_path)
-    err, train_err = measure_ivf_coarse_drift(
-        spark, old_path, sample_of=sample_of
-    )
-    if not force and err <= float(drift_threshold) * train_err:
-        return None
+    if not force:
+        err, train_err = measure_ivf_coarse_drift(
+            spark, old_path, sample_of=sample_of
+        )
+        if err <= float(drift_threshold) * train_err:
+            return None
     codec, meta = _layout_codec(spark, old_path, "rebuild_ivf_index")
     old = spark.read.parquet(old_path)
     if "extra_cols" not in build_kw:
@@ -2304,21 +2349,23 @@ def ivf_index_topk(
     SQL while n_probe < n_centroids is the measured-recall scale path.
     ``path`` may be a VERSIONED ROOT (see :func:`publish_index_version`)
     — resolved through the serving pointer, so blue/green rebuilds are
-    invisible to callers.
+    invisible to callers. ``n_probe < 1`` raises ``ValueError``.
     """
     import numpy as np
 
     path = _resolve_maybe_root(spark, path)
     cents = read_ivf_centroids(spark, path)
-    empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
+    if not len(cents):  # an empty layout: no list to probe
+        return local_frame(spark, [], _TOPK_DDL)
+    n_probe = _probe_count(n_probe, len(cents))
     q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows or not len(cents):
-        return local_frame(spark, [], empty_schema)
+    if not q_rows:
+        return local_frame(spark, [], _TOPK_DDL)
     probes = []
     for r in q_rows:
         qv = np.array(r[1], dtype=np.float64)
         d = ((cents - qv) ** 2).sum(axis=1)
-        for cid in np.argsort(d)[: int(n_probe)]:
+        for cid in np.argsort(d)[:n_probe]:
             probes.append((int(r[0]), int(cid), [float(x) for x in qv]))
     probe_df = local_frame(
         spark, probes, "query_id long, cid int, qv array<double>"
@@ -2493,19 +2540,9 @@ def pq_train_residual_codebook(
     import numpy as np
 
     coarse = np.asarray(coarse, dtype=np.int64)
-    sample = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            fixed_point_codes(as_double_vec(vec_col), scale).alias("q"),
-        )
-        .orderBy(F.xxhash64("neighbor_id"), "neighbor_id")
-        .limit(int(fit_sample))
-        .select("q")
-        .toPandas()
-    )
-    if not len(sample):
+    X = _hash_first_sample(corpus, scale, fit_sample, id_col, vec_col)
+    if not len(X):
         return None
-    X = np.array(list(sample["q"]), dtype=np.int64)
     D = X.shape[1]
     if D % m:
         raise ValueError(f"m={m} must divide vector dims={D}")
@@ -2514,14 +2551,8 @@ def pq_train_residual_codebook(
             f"coarse centroids must be (k1, {D}); got {coarse.shape}"
         )
     d = D // m
-    # exact int64 nearest-coarse assignment (ties → lowest cid), then
-    # integer residuals — the same arithmetic the search scan runs
-    d2 = (
-        (X * X).sum(axis=1)[:, None]
-        - 2 * (X @ coarse.T)
-        + (coarse * coarse).sum(axis=1)[None, :]
-    )
-    R = X - coarse[d2.argmin(axis=1)]
+    # the scan's own coarse assignment, then integer residuals
+    R = X - coarse[_nearest(X, coarse)]
     C = min(codebook_size, len(R))
     subs = []
     for s in range(m):
@@ -2615,177 +2646,62 @@ def ivfpq_residual_topk(
       (:func:`pq_train_residual_codebook`, scale-stamped and verified)
       or None for the anchor derivation.
 
-    Scale shape: centroids (k₁·D ints), codebook (C·D ints), and the
-    per-query probe/LUT tensors (Q·n_probe·m·C int64 — bounded by the
-    collected-query contract every ANN entry shares) are broadcast; ONE
-    fused Arrow ``mapInPandas`` pass assigns, residual-encodes, and
-    ADC-scores each corpus batch (three int64 BLAS matmuls), emitting
-    only (row, query) pairs whose list the query probes — at 100 TB the
-    corpus is stored cid-partitioned (:func:`write_ivf_index`) and the
-    probe set prunes file reads before this scan. Shuffles: candidate
-    top-k window + the ≤ Q·k·rerank exact re-rank join, identical to
-    :func:`ivfpq_topk`.
-    """
-    import numpy as np
-    import pandas as pd
+    The coarse stage and the codebook come from the same derivation as
+    :func:`write_ivfpq_index` (:func:`_ivfadc_quantizers`; the anchor
+    coarse centroids and codebook share one hash-first sample job), and
+    probe lists are a stable int64 argsort over the lattice centroids
+    (ties to the lowest cid).
 
+    Scale shape: the shared PQ scan (:func:`_pq_search`) — centroids
+    (k₁·D ints), codebook (C·D ints) and the per-(query, probe slot)
+    residual LUTs (Q·n_probe·m·C int64, bounded by the collected-query
+    contract every ANN entry shares) are broadcast; ONE fused Arrow
+    ``mapInPandas`` pass assigns, residual-encodes and ADC-scores each
+    corpus batch, emitting only (row, query) pairs whose list the query
+    probes — at 100 TB the corpus is stored cid-partitioned
+    (:func:`write_ivfpq_index`) and the probe set prunes file reads
+    before the scan. Shuffles: candidate top-k window + the ≤ Q·k·rerank
+    exact re-rank join, identical to :func:`ivfpq_topk`. ``n_probe < 1``
+    raises ``ValueError``.
+    """
     spark = corpus.sparkSession
-    empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_vec(vec_col).alias("cv")
-    )
+    n_probe = _probe_count(n_probe, n_centroids)
     # degenerate corpora: below k1 points no coarse stage is worth it —
     # fall back to the unpartitioned PQ scan (ivfpq_topk's contract);
     # the residual codebook is coarse-specific so it cannot carry over
-    if c.limit(n_centroids).count() < n_centroids:
+    if corpus.limit(n_centroids).count() < n_centroids:
         return pq_topk(
             corpus, queries, m, k, rerank, codebook_size, scale,
             id_col, vec_col,
         )
-    if coarse == "anchor":
-        Cc = lattice_anchor_centroids(
-            corpus, n_centroids, id_col, vec_col, scale
-        )
-    elif coarse == "lloyd":
-        if n_centroids <= max(2, int(fit_sample) // 8):
-            cents_f = fit_coarse_quantizer(
-                c, n_centroids, seed=seed, kmeans_max_iter=kmeans_max_iter,
-                kmeans_init=kmeans_init, fit_sample=fit_sample,
-            )
-        else:
-            cents_f = fit_two_level_quantizer(
-                c, n_centroids, seed=seed, kmeans_max_iter=kmeans_max_iter,
-                kmeans_init=kmeans_init, fit_sample=fit_sample,
-            )
-        Cc = np.floor(cents_f * scale + 0.5).astype(np.int64)
-    else:
-        raise ValueError(
-            f"unknown coarse {coarse!r}: expected 'anchor' or 'lloyd'"
-        )
-    if codebook is not None:
-        _check_codebook_scale(codebook, scale, "ivfpq_residual_topk")
-        As = np.asarray(codebook, dtype=np.int64)
-        if As.ndim != 3 or As.shape[1] != m:
-            raise ValueError(
-                f"codebook must have shape (C, m={m}, d); got {As.shape}"
-            )
-        d = As.shape[2]
-    else:
-        # anchor RESIDUAL codebook: residuals of the hash-first
-        # codebook_size vectors against THIS coarse quantizer — the
-        # SQL-expressible derivation (pq_anchor_codebook one stage in)
-        book = pq_anchor_codebook(corpus, codebook_size, id_col, vec_col, scale)
-        if not book:
-            return local_frame(spark, [], empty_schema)
-        A = np.array(book, dtype=np.int64)  # (C, D) raw lattice codes
-        if A.shape[1] % m:
-            raise ValueError(f"m={m} must divide vector dims={A.shape[1]}")
-        d = A.shape[1] // m
-        a_d2 = (
-            (A * A).sum(axis=1)[:, None]
-            - 2 * (A @ Cc.T)
-            + (Cc * Cc).sum(axis=1)[None, :]
-        )
-        As = (A - Cc[a_d2.argmin(axis=1)]).reshape(len(A), m, d)
-    if m * d != Cc.shape[1]:
-        raise ValueError(
-            f"codebook subvector width d={d} gives m*d={m * d}, but "
-            f"vectors have {Cc.shape[1]} dims"
-        )
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double_vec(vec_col).alias("qv"),
-        fixed_point_codes(as_double_vec(vec_col), scale).alias("qq"),
-    ).collect()
-    if not q_rows:
-        return local_frame(spark, [], empty_schema)
-    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    Qq = np.array([r["qq"] for r in q_rows], dtype=np.int64)  # (Q, D)
-    n_cents = len(Cc)
-    n_probe = min(int(n_probe), n_cents)
-    # per-query probe lists over the lattice centroids (exact int64
-    # distances; stable argsort → ties to the lowest cid)
-    qd2 = (
-        (Qq * Qq).sum(axis=1)[:, None]
-        - 2 * (Qq @ Cc.T)
-        + (Cc * Cc).sum(axis=1)[None, :]
-    )  # (Q, k1)
-    probe_idx = np.argsort(qd2, axis=1, kind="stable")[:, :n_probe]
-    probe_mask = np.zeros((len(qids), n_cents), dtype=bool)
-    for qi, row in enumerate(probe_idx):
-        probe_mask[qi, row] = True
-    # COMPACT per-(query, probed cid) residual LUTs: lut[q, slot, s, code]
-    # = ||(qq − Cc[probe_idx[q, slot]])_s − As[code, s]||², exact int64.
-    # Keyed by probe SLOT, not cid, so broadcast volume is the true
-    # Q·n_probe·m·C — a dense (Q, k₁, m, C) tensor would carry k₁/n_probe
-    # dead zeros, catastrophic at production k₁ (65k lists). slot_of maps
-    # a row's cid back to its slot per query (−1 = unprobed; those pairs
-    # read a garbage slot but the mask drops them before emission).
-    C_book = len(As)
-    nq = len(qids)
-    lut = np.zeros((nq, n_probe, m, C_book), dtype=np.int64)
-    slot_of = np.full((nq, n_cents), -1, dtype=np.int64)
-    for qi in range(nq):
-        slot_of[qi, probe_idx[qi]] = np.arange(n_probe)
-        qres = (Qq[qi][None, :] - Cc[probe_idx[qi]]).reshape(
-            n_probe, m, d
-        )  # (p, m, d)
-        # (p, m, C): sum over d of (qres - As)^2
-        diffs = qres[:, :, None, :] - As.transpose(1, 0, 2)[None, :, :, :]
-        lut[qi] = (diffs * diffs).sum(-1)
-    bc = spark.sparkContext.broadcast(
-        (qids, lut, slot_of, As, Cc, probe_mask)
+    quantizers = _ivfadc_quantizers(
+        corpus, m, codebook_size, scale, n_centroids, coarse, None,
+        codebook, "ivfpq_residual_topk", id_col, vec_col, seed=seed,
+        kmeans_max_iter=kmeans_max_iter, kmeans_init=kmeans_init,
+        fit_sample=fit_sample,
     )
-
-    def residual_adc(batches):
-        b_qids, b_lut, b_slot, b_As, b_Cc, b_mask = bc.value
-        c_sq = (b_Cc * b_Cc).sum(axis=1)
-        a_sq = (b_As**2).sum(-1)  # (C, m)
-        q_arange = np.arange(len(b_qids))[:, None]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            nids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            X = np.array(list(pdf["cd"]), dtype=np.int64)  # (n, D)
-            n = len(nids)
-            # coarse assignment: exact int64 argmin, ties → lowest cid
-            g = X @ b_Cc.T
-            cids = np.argmin(c_sq[None, :] - 2 * g, axis=1)
-            R = (X - b_Cc[cids]).reshape(n, m, d)  # integer residuals
-            slots = b_slot[:, cids]  # (Q, n); −1 where unprobed
-            adc = np.zeros((n, len(b_qids)), dtype=np.int64)
-            for s in range(m):
-                gs = R[:, s, :] @ b_As[:, s, :].T
-                codes_s = np.argmin(a_sq[:, s][None, :] - 2 * gs, axis=1)
-                # LUT slice depends on the ROW's list via its probe slot
-                adc += b_lut[q_arange, slots, s, codes_s[None, :]].T
-            keep = b_mask[:, cids].T  # (n, Q)
-            ri, qi = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "query_id": b_qids[qi],
-                    "neighbor_id": nids[ri],
-                    "adc": adc[ri, qi],
-                }
-            )
-
-    coded = corpus.select(
+    q_rows = _lattice_queries(queries, id_col, vec_col, scale)
+    if quantizers is None or not q_rows:
+        return local_frame(spark, [], _TOPK_DDL)
+    Cc, As = quantizers
+    rows = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         fixed_point_codes(as_double_vec(vec_col), scale).alias("cd"),
     )
-    cand_w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
+    return _pq_search(
+        rows, corpus, q_rows, As, _lattice_probe_lists(q_rows, Cc, n_probe),
+        len(Cc), k, rerank, id_col, vec_col, Cc,
     )
-    cands = (
-        coded.mapInPandas(
-            residual_adc, "query_id long, neighbor_id long, adc long"
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("crank", F.row_number().over(cand_w))
-        .filter(F.col("crank") <= k * rerank)
-        .select("query_id", "neighbor_id")
-    )
-    return _rerank_exact_cosine(cands, corpus, q_rows, k, id_col, vec_col)
+
+
+def _lattice_probe_lists(q_rows, Cc, n_probe: int):
+    """Each query's ``n_probe`` nearest lattice centroids, nearest first:
+    a stable argsort of :func:`_lattice_d2`, so ties keep the lowest
+    cid — the probe rule of both IVFADC searches."""
+    import numpy as np
+
+    Qq = np.array([r["qq"] for r in q_rows], dtype=np.int64)
+    return np.argsort(_lattice_d2(Qq, Cc), axis=1, kind="stable")[:, :n_probe]
 
 
 # ---------------------------------------------------------------------------
@@ -4223,7 +4139,7 @@ def _filtered_probe_rounds(
     probes nothing and the loop ends. ``last_rounds`` (the number of
     rounds that scanned) is the test observable."""
     n_cents = len(cents)
-    n_probe = max(1, min(int(n_probe), n_cents))
+    n_probe = _probe_count(n_probe, n_cents)
     porder = _probe_order(qdf, vec, cents).localCheckpoint(eager=True)
     state = _attach_probe_jump(
         spark, path,
@@ -4357,25 +4273,28 @@ def _attach_probe_jump(
 
 
 def _ivfpq_encode_pass(
-    rows: DataFrame, Cc, As, scale: int, extra_cols: tuple = ()
+    rows: DataFrame, Cc, As, scale: int, extra_cols: tuple = (),
+    keep_cids: bool = False,
 ) -> DataFrame:
-    """One fused Arrow pass: coarse-assign the ``scale`` lattice codes
-    of each row (exact int64 argmin, ties → lowest cid), residual-encode,
-    and PQ-code-assign each corpus batch. Input (neighbor_id, cv[,
-    extras]) → output (neighbor_id, cv[, extras], codes array<int>,
-    cid). Shared by the index build, the append and the re-split so
-    stored codes are bit-identical no matter when a row arrived;
-    ``extra_cols`` metadata rides the batch unchanged (the
-    :func:`assign_to_centroids` convention)."""
+    """One Arrow pass that residual-encodes the ``scale`` lattice codes
+    of each row (:func:`_pq_encode`) against its nearest coarse centroid
+    — or, with ``keep_cids``, against the cell its ``cid`` column already
+    names: the codebook retrain keeps every stored cell, because after a
+    re-split stored cells are deliberately not globally nearest. Input
+    (neighbor_id, cv[, cid][, extras]) → output (neighbor_id, cv[,
+    extras], codes array<int>, cid). Shared by the index build, the
+    append, the re-split and the retrain, so stored codes are
+    bit-identical no matter when a row arrived; ``extra_cols`` metadata
+    rides the batch unchanged (the :func:`assign_to_centroids`
+    convention)."""
     import numpy as np
-    import pandas as pd
 
     extra_cols = tuple(extra_cols)
-    _, m, d = As.shape
     c = rows.select(
         "neighbor_id",
         "cv",
         fixed_point_codes(F.col("cv"), scale).alias("cd"),
+        *(["cid"] if keep_cids else []),
         *[F.col(x) for x in extra_cols],
     )
     bc = c.sparkSession.sparkContext.broadcast((Cc, As))
@@ -4383,22 +4302,13 @@ def _ivfpq_encode_pass(
 
     def encode(batches):
         b_Cc, b_As = bc.value
-        c_sq = (b_Cc * b_Cc).sum(axis=1)
-        a_sq = (b_As**2).sum(-1)  # (C, m)
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.array(list(pdf["cd"]), dtype=np.int64)  # (n, D)
-            n = len(X)
-            g = X @ b_Cc.T
-            cids = np.argmin(c_sq[None, :] - 2 * g, axis=1)
-            R = (X - b_Cc[cids]).reshape(n, m, d)
-            codes = np.empty((n, m), dtype=np.int32)
-            for s in range(m):
-                gs = R[:, s, :] @ b_As[:, s, :].T
-                codes[:, s] = np.argmin(a_sq[:, s][None, :] - 2 * gs, axis=1)
+            stored = pdf["cid"].to_numpy(dtype=np.int64) if keep_cids else None
+            cids, codes = _pq_encode(list(pdf["cd"]), b_As, b_Cc, stored)
             out = pdf[keep].copy()
-            out["codes"] = list(codes)
+            out["codes"] = list(codes.astype(np.int32))
             out["cid"] = cids.astype("int32")
             yield out
 
@@ -4441,9 +4351,9 @@ def _coarse_error(X, C) -> float:
 def _lattice_quantization_error(X, Cc, As) -> float:
     """Mean squared residual-quantization error of int64 lattice vectors
     ``X`` against (coarse ``Cc``, residual codebook ``As``) — coarse
-    assignment and per-subspace code choice exactly as
-    :func:`_ivfpq_encode_pass` computes them (exact int64, ties → lowest
-    index), then the squared distance the CHOSEN code leaves behind.
+    assignment and per-subspace code choice by :func:`_pq_encode`, the
+    encoder of every build, append and search scan, then the squared
+    distance the CHOSEN code leaves behind.
     This is the number ADC accuracy decays with: it is what
     :func:`write_ivfpq_index` records at build time (``train_err`` in
     the ``_meta`` sidecar) and what :func:`measure_ivfpq_drift` re-measures
@@ -4454,24 +4364,9 @@ def _lattice_quantization_error(X, Cc, As) -> float:
     if not len(X):
         return 0.0
     _, m, d = As.shape
-    c_full = (
-        (X * X).sum(axis=1)[:, None]
-        - 2 * (X @ Cc.T)
-        + (Cc * Cc).sum(axis=1)[None, :]
-    )
-    cids = np.argmin(c_full, axis=1)
-    R = (X - Cc[cids]).reshape(len(X), m, d)
-    a_sq = (As**2).sum(-1)  # (C, m)
-    total = np.zeros(len(X), dtype=np.float64)
-    for s in range(m):
-        gs = R[:, s, :] @ As[:, s, :].T
-        dist = (
-            a_sq[:, s][None, :]
-            - 2 * gs
-            + (R[:, s, :] ** 2).sum(axis=1)[:, None]
-        )
-        total += dist.min(axis=1)
-    return float(total.mean())
+    cids, codes = _pq_encode(X, As, Cc)
+    diff = (X - Cc[cids]).reshape(len(X), m, d) - As[codes, np.arange(m)]
+    return float((diff * diff).sum(axis=(1, 2)).astype(np.float64).mean())
 
 
 def _hash_first_sample(
@@ -4531,13 +4426,8 @@ def anchor_residual_codebook(
     if A.shape[1] % m:
         raise ValueError(f"m={m} must divide vector dims={A.shape[1]}")
     d = A.shape[1] // m
-    a_d2 = (
-        (A * A).sum(axis=1)[:, None]
-        - 2 * (A @ Cc.T)
-        + (Cc * Cc).sum(axis=1)[None, :]
-    )
     return LatticeCodebook(
-        (A - Cc[a_d2.argmin(axis=1)]).reshape(len(A), m, d), scale
+        (A - Cc[_nearest(A, Cc)]).reshape(len(A), m, d), scale
     )
 
 
@@ -4582,78 +4472,22 @@ def write_ivfpq_index(
     tests pin that a split build + append equals the one-shot build.
     Returns (Cc, As). Raises on an empty corpus (nothing to derive a
     codebook from — mirror of the untrained-append guard)."""
-    import numpy as np
-
     spark = corpus.sparkSession
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         as_double_vec(vec_col).alias("cv"),
         *[F.col(x) for x in extra_cols],
     )
-    _book = None
-    if coarse_cents is not None:
-        Cc = np.asarray(coarse_cents, dtype=np.int64)
-    elif coarse == "anchor":
-        if codebook is None and int(codebook_size) >= int(n_centroids):
-            # ONE hash-first sample job serves BOTH anchor derivations
-            # (round 13): the top-n selection is by the same total order
-            # (md5(vec_id), vec_id), so the coarse anchors are exactly
-            # the first n_centroids rows of the codebook sample —
-            # bitwise identical to two separate TakeOrdered jobs
-            _book = pq_anchor_codebook(
-                corpus, codebook_size, id_col, vec_col, scale
-            )
-            Cc = (
-                np.array(_book[: int(n_centroids)], dtype=np.int64)
-                if _book
-                else np.zeros((0, 0), dtype=np.int64)
-            )
-        else:
-            Cc = lattice_anchor_centroids(
-                corpus, n_centroids, id_col, vec_col, scale
-            )
-    elif coarse == "lloyd":
-        cf = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double_vec(vec_col).alias("cv"),
-        )
-        if n_centroids <= max(2, int(fit_sample) // 8):
-            cents_f = fit_coarse_quantizer(
-                cf, n_centroids, seed=seed, kmeans_max_iter=kmeans_max_iter,
-                kmeans_init=kmeans_init, fit_sample=fit_sample,
-            )
-        else:
-            cents_f = fit_two_level_quantizer(
-                cf, n_centroids, seed=seed, kmeans_max_iter=kmeans_max_iter,
-                kmeans_init=kmeans_init, fit_sample=fit_sample,
-            )
-        Cc = np.floor(cents_f * scale + 0.5).astype(np.int64)
-    else:
-        raise ValueError(
-            f"unknown coarse {coarse!r}: expected 'anchor' or 'lloyd'"
-        )
-    if not len(Cc):
+    quantizers = _ivfadc_quantizers(
+        corpus, m, codebook_size, scale, n_centroids, coarse, coarse_cents,
+        codebook, "write_ivfpq_index", id_col, vec_col, seed=seed,
+        kmeans_max_iter=kmeans_max_iter, kmeans_init=kmeans_init,
+        fit_sample=fit_sample,
+    )
+    if quantizers is None:
         raise ValueError("cannot build an IVFADC index over an empty corpus")
-    D = Cc.shape[1]
-    if D % m:
-        raise ValueError(f"m={m} must divide vector dims={D}")
-    d = D // m
-    if codebook is not None:
-        _check_codebook_scale(codebook, scale, "write_ivfpq_index")
-        As = np.asarray(codebook, dtype=np.int64)
-        if As.ndim != 3 or As.shape[1] != m or As.shape[2] != d:
-            raise ValueError(
-                f"codebook must have shape (C, m={m}, d={d}); got {As.shape}"
-            )
-    else:
-        As = anchor_residual_codebook(
-            corpus, Cc, m, codebook_size, scale, id_col, vec_col, book=_book
-        )
-        if As is None:
-            raise ValueError(
-                "cannot build an IVFADC index over an empty corpus"
-            )
-        As = np.asarray(As, dtype=np.int64)
+    Cc, As = quantizers
+    d = As.shape[2]
     # REBALANCE before the partitioned write (guide §6) — same file-count
     # rationale as write_ivf_index
     _ivfpq_encode_pass(c, Cc, As, scale, extra_cols).hint(
@@ -4707,6 +4541,68 @@ def write_ivfpq_index(
             spark.read.parquet(path), path, tuple(extra_cols)
         )
     return Cc, As
+
+
+def _ivfadc_quantizers(
+    corpus, m, codebook_size, scale, n_centroids, coarse, coarse_cents,
+    codebook, caller, id_col, vec_col, **fit_kw,
+):
+    """The IVFADC ``(Cc, As)`` of ``corpus`` — int64 lattice coarse
+    centroids and the ``(C, m, d)`` residual codebook — that
+    :func:`write_ivfpq_index` stores and :func:`ivfpq_residual_topk`
+    searches with, or None on an empty corpus.
+
+    Coarse stage: ``coarse_cents`` when given, else ``coarse='anchor'``
+    (:func:`lattice_anchor_centroids`) or ``'lloyd'``
+    (:func:`_fit_ivf_quantizer` with ``fit_kw``, quantized onto the
+    lattice). Codebook: ``codebook`` after :func:`_checked_codebook`,
+    else :func:`anchor_residual_codebook`. When both anchor derivations
+    run, ONE hash-first sample job serves them (round 13): the top-n
+    selection is by the same total order (md5(vec_id), vec_id), so the
+    coarse anchors are exactly the first n_centroids rows of the
+    codebook sample — bitwise identical to two separate TakeOrdered
+    jobs."""
+    import numpy as np
+
+    book = None
+    if coarse_cents is not None:
+        Cc = np.asarray(coarse_cents, dtype=np.int64)
+    elif coarse == "anchor":
+        if codebook is None and int(codebook_size) >= int(n_centroids):
+            book = pq_anchor_codebook(
+                corpus, codebook_size, id_col, vec_col, scale
+            )
+            Cc = (
+                np.array(book[: int(n_centroids)], dtype=np.int64)
+                if book
+                else np.zeros((0, 0), dtype=np.int64)
+            )
+        else:
+            Cc = lattice_anchor_centroids(
+                corpus, n_centroids, id_col, vec_col, scale
+            )
+    elif coarse == "lloyd":
+        c = corpus.select(
+            F.col(id_col).alias("neighbor_id"),
+            as_double_vec(vec_col).alias("cv"),
+        )
+        cents = _fit_ivf_quantizer(c, n_centroids, **fit_kw)
+        Cc = np.floor(cents * scale + 0.5).astype(np.int64)
+    else:
+        raise ValueError(
+            f"unknown coarse {coarse!r}: expected 'anchor' or 'lloyd'"
+        )
+    if not len(Cc):
+        return None
+    D = Cc.shape[1]
+    if D % m:
+        raise ValueError(f"m={m} must divide vector dims={D}")
+    if codebook is not None:
+        return Cc, _checked_codebook(codebook, scale, caller, m, D // m)
+    As = anchor_residual_codebook(
+        corpus, Cc, m, codebook_size, scale, id_col, vec_col, book=book
+    )
+    return None if As is None else (Cc, np.asarray(As, dtype=np.int64))
 
 
 _META_DDL = (
@@ -4907,8 +4803,9 @@ def ivfpq_index_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Serve ANN from a persisted IVFADC layout: probe lists and
-    per-(query, probed-list) residual LUTs come from the sidecars
+    """Serve ANN from a persisted IVFADC layout: the shared PQ scan
+    (:func:`_pq_search`) with probe lists (:func:`_lattice_probe_lists`)
+    and per-(query, probed-list) residual LUTs from the sidecars
     (bounded driver metadata, :func:`ivfpq_residual_topk`'s compact
     slot-keyed shape); the candidate scan reads ONLY ``(neighbor_id,
     cid, codes)`` of the PROBED partitions — partition pruning bounds
@@ -4916,92 +4813,35 @@ def ivfpq_index_topk(
     row (m×4 code bytes, never the D×8 vector) — and ADC is a pure LUT
     gather per batch (codes were assigned at build). The exact re-rank
     joins the ≤ Q·k·rerank candidates back to the layout's ``cv``
-    column. At probe-all the output EQUALS :func:`ivfpq_residual_topk`
-    on the same corpus and derivations — which is what lets the catalog
-    entry share the residual oracle. ``path`` may be a versioned root
-    (resolved through the serving pointer, as the raw tier)."""
+    column. At any n_probe the output EQUALS :func:`ivfpq_residual_topk`
+    on the same corpus and derivations (the same probe lists and codes)
+    — which is what lets the catalog entry share the residual oracle.
+    ``path`` may be a versioned root (resolved through the serving
+    pointer, as the raw tier). ``n_probe < 1`` raises ``ValueError``."""
     import numpy as np
-    import pandas as pd
 
     path = _resolve_maybe_root(spark, path)
-    empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
     Cc, As, stored_scale = read_ivfpq_sidecars(spark, path)
     scale = _resolve_index_scale(stored_scale, scale, "ivfpq_index_topk")
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double_vec(vec_col).alias("qv"),
-        fixed_point_codes(as_double_vec(vec_col), scale).alias("qq"),
-    ).collect()
-    if not q_rows or not len(Cc):
-        return local_frame(spark, [], empty_schema)
-    m, d = As.shape[1], As.shape[2]
-    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    Qq = np.array([r["qq"] for r in q_rows], dtype=np.int64)
-    n_cents = len(Cc)
-    n_probe = max(1, min(int(n_probe), n_cents))
-    qd2 = (
-        (Qq * Qq).sum(axis=1)[:, None]
-        - 2 * (Qq @ Cc.T)
-        + (Cc * Cc).sum(axis=1)[None, :]
-    )
-    probe_idx = np.argsort(qd2, axis=1, kind="stable")[:, :n_probe]
-    nq = len(qids)
-    lut = np.zeros((nq, n_probe, m, len(As)), dtype=np.int64)
-    slot_of = np.full((nq, n_cents), -1, dtype=np.int64)
-    probe_mask = np.zeros((nq, n_cents), dtype=bool)
-    for qi in range(nq):
-        probe_mask[qi, probe_idx[qi]] = True
-        slot_of[qi, probe_idx[qi]] = np.arange(n_probe)
-        qres = (Qq[qi][None, :] - Cc[probe_idx[qi]]).reshape(n_probe, m, d)
-        diffs = qres[:, :, None, :] - As.transpose(1, 0, 2)[None, :, :, :]
-        lut[qi] = (diffs * diffs).sum(-1)
-    bc = spark.sparkContext.broadcast((qids, lut, slot_of, probe_mask))
-
-    def adc_gather(batches):
-        b_qids, b_lut, b_slot, b_mask = bc.value
-        q_arange = np.arange(len(b_qids))[:, None]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            nids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            cids = pdf["cid"].to_numpy(dtype=np.int64)
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)  # (n, m)
-            slots = b_slot[:, cids]  # (Q, n)
-            adc = np.zeros((len(nids), len(b_qids)), dtype=np.int64)
-            for s in range(codes.shape[1]):
-                adc += b_lut[q_arange, slots, s, codes[:, s][None, :]].T
-            keep = b_mask[:, cids].T
-            ri, qi = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "query_id": b_qids[qi],
-                    "neighbor_id": nids[ri],
-                    "adc": adc[ri, qi],
-                }
-            )
-
-    probed_cids = sorted({int(x) for x in probe_idx.ravel()})
-    scan = (
+    if not len(Cc):  # an empty layout: no list to probe
+        return local_frame(spark, [], _TOPK_DDL)
+    n_probe = _probe_count(n_probe, len(Cc))
+    q_rows = _lattice_queries(queries, id_col, vec_col, scale)
+    if not q_rows:
+        return local_frame(spark, [], _TOPK_DDL)
+    probe_idx = _lattice_probe_lists(q_rows, Cc, n_probe)
+    rows = (
         spark.read.parquet(path)
-        .filter(F.col("cid").isin(probed_cids))
+        .filter(F.col("cid").isin(np.unique(probe_idx).tolist()))
         .select("neighbor_id", "cid", "codes")
-    )
-    cand_w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
-    )
-    cands = (
-        scan.mapInPandas(
-            adc_gather, "query_id long, neighbor_id long, adc long"
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("crank", F.row_number().over(cand_w))
-        .filter(F.col("crank") <= k * rerank)
-        .select("query_id", "neighbor_id")
     )
     stored = spark.read.parquet(path).select(
         F.col("neighbor_id").alias(id_col), F.col("cv").alias(vec_col)
     )
-    return _rerank_exact_cosine(cands, stored, q_rows, k, id_col, vec_col)
+    return _pq_search(
+        rows, stored, q_rows, As, probe_idx, len(Cc), k, rerank,
+        id_col, vec_col, Cc,
+    )
 
 
 def filtered_ivfpq_topk(
@@ -5144,54 +4984,6 @@ def _adc_scores(pairs: DataFrame, Cc, As) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ivfpq_reencode_codes_pass(
-    c: DataFrame, Cc, As, m: int, d: int, extra_cols: tuple = ()
-) -> DataFrame:
-    """CODES-ONLY re-encode: residual against the row's STORED owning
-    centroid (``cid`` rides through unchanged — after a re-split, stored
-    assignments are deliberately NOT globally-nearest, so recomputing
-    them here would silently move rows between cells), codes re-chosen
-    against the new codebook. Input (neighbor_id, cv, cd, cid[, extras])
-    → same relation with fresh ``codes``. The retrain path's one linear
-    pass."""
-    import numpy as np
-    import pandas as pd
-
-    extra_cols = tuple(extra_cols)
-    bc = c.sparkSession.sparkContext.broadcast((Cc, As))
-    keep = ["neighbor_id", "cv", *extra_cols]
-
-    def encode(batches):
-        b_Cc, b_As = bc.value
-        a_sq = (b_As**2).sum(-1)  # (C, m)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(list(pdf["cd"]), dtype=np.int64)
-            cids = pdf["cid"].to_numpy(dtype=np.int64)
-            n = len(X)
-            R = (X - b_Cc[cids]).reshape(n, m, d)
-            codes = np.empty((n, m), dtype=np.int32)
-            for s in range(m):
-                gs = R[:, s, :] @ b_As[:, s, :].T
-                codes[:, s] = np.argmin(a_sq[:, s][None, :] - 2 * gs, axis=1)
-            out = pdf[keep].copy()
-            out["codes"] = list(codes)
-            out["cid"] = cids.astype("int32")
-            yield out
-
-    extra_schema = "".join(
-        f", {f.name} {f.dataType.simpleString()}"
-        for f in c.schema.fields
-        if f.name in extra_cols
-    )
-    return c.mapInPandas(
-        encode,
-        f"neighbor_id long, cv array<double>{extra_schema}, "
-        "codes array<int>, cid int",
-    )
-
-
 def measure_ivfpq_drift(
     spark,
     path: str,
@@ -5254,8 +5046,8 @@ def retrain_ivfpq_codebook(
       residual-pipeline oracle.
 
     The re-encode preserves every row's stored cell
-    (:func:`_ivfpq_reencode_codes_pass` — coarse geometry is untouched;
-    only code ids move), rewrites the layout through the crash-safe
+    (:func:`_ivfpq_encode_pass` with ``keep_cids`` — coarse geometry is
+    untouched; only code ids move), rewrites the layout through the crash-safe
     staged swap, swaps the codebook sidecar, and re-baselines
     ``train_err`` in ``_meta`` to the NEW codebook's error on the
     retrain sample. Cost shape at 100 TB: the trigger is bounded
@@ -5297,14 +5089,9 @@ def retrain_ivfpq_codebook(
         c for c in layout.columns
         if c not in ("neighbor_id", "cv", "codes", "cid")
     )
-    c = layout.select(
-        "neighbor_id",
-        "cv",
-        "cid",
-        fixed_point_codes(F.col("cv"), scale).alias("cd"),
-        *[F.col(x) for x in extra],
+    reencoded = _ivfpq_encode_pass(
+        layout, Cc, As_new, scale, extra, keep_cids=True
     )
-    reencoded = _ivfpq_reencode_codes_pass(c, Cc, As_new, m, d, extra)
     live_cids = sorted(
         int(r["cid"]) for r in layout.select("cid").distinct().collect()
     )

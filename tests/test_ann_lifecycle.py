@@ -779,6 +779,14 @@ def test_layout_without_coarse_baseline_guides_rebuild(
     # the residual trigger and serving still work on the old stamp
     err, train = S.measure_ivfpq_drift(spark, path)
     assert train > 0.0 or err >= 0.0
+    # following the guidance works: an unforced rebuild still needs the
+    # baseline, a forced one skips the measure and stamps a new one
+    with pytest.raises(ValueError, match="coarse-drift baseline"):
+        S.rebuild_ivf_index(spark, path, str(tmp_path / "unforced"))
+    rebuilt = str(tmp_path / "rebuilt")
+    S.rebuild_ivf_index(spark, path, rebuilt, force=True)
+    assert not os.path.exists(str(tmp_path / "unforced"))
+    assert S._read_ivfpq_meta(spark, rebuilt)["train_coarse_err"] is not None
 
 
 # ---------------------------------------------------------------------------
@@ -1070,13 +1078,15 @@ def test_lifecycle_ops_read_the_codec_from_the_layout(
             op()
 
 
-# Spark jobs of one warm call at the parent commit of the merged
-# lifecycle (sf0.001, 4-centroid layouts, counted with jobs_during).
+# Spark jobs of one warm call (sf0.001, 4-centroid layouts, counted
+# with jobs_during): the parent counts of the merged lifecycle, except a
+# forced rebuild, which no longer runs the coarse-drift sample (its
+# shuffle and TakeOrdered stages were one job each).
 _PARENT_JOBS = {
-    "ivf": {"append": 2, "resplit": 9, "rebuild": 6,
-            "rebuild_versioned": 6, "maintain": 2},
-    "ivfpq": {"append": 2, "resplit": 9, "rebuild": 7,
-              "rebuild_versioned": 7, "maintain": 4},
+    "ivf": {"append": 2, "resplit": 9, "rebuild": 4,
+            "rebuild_versioned": 4, "maintain": 2},
+    "ivfpq": {"append": 2, "resplit": 9, "rebuild": 5,
+              "rebuild_versioned": 5, "maintain": 4},
 }
 
 

@@ -281,10 +281,14 @@ def test_filtered_ivf_expansion_fills_k_for_selective_label(spark, tmp_path):
     assert got == bf
 
 
-def test_ivfpq_index_probe_all_equals_residual_operator(spark, sf_small, tmp_path):
+@pytest.mark.parametrize("n_probe", [8, 2])
+def test_ivfpq_index_probe_all_equals_residual_operator(
+    spark, sf_small, tmp_path, n_probe
+):
     """Persisted-codes search == the in-memory residual operator at
-    probe-all: code assignment is a pure function of (vector, sidecars),
-    so encoding at build and encoding at search are interchangeable."""
+    probe-all and at a partial probe: code assignment is a pure function
+    of (vector, sidecars), so encoding at build and encoding at search
+    are interchangeable, and both searches probe the same lists."""
     emb = _emb(spark, sf_small)
     q = emb.filter(F.col("vec_id") < 20)
     path = str(tmp_path / "index")
@@ -292,14 +296,16 @@ def test_ivfpq_index_probe_all_equals_residual_operator(spark, sf_small, tmp_pat
     got = sorted(
         map(
             tuple,
-            S.ivfpq_index_topk(spark, path, q, k=5, rerank=4, n_probe=8).collect(),
+            S.ivfpq_index_topk(
+                spark, path, q, k=5, rerank=4, n_probe=n_probe
+            ).collect(),
         )
     )
     twin = sorted(
         map(
             tuple,
             S.ivfpq_residual_topk(
-                emb, q, k=5, rerank=4, n_centroids=8, n_probe=8
+                emb, q, k=5, rerank=4, n_centroids=8, n_probe=n_probe
             ).collect(),
         )
     )

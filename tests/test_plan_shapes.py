@@ -624,8 +624,6 @@ def test_retrain_reencode_is_one_linear_pass(spark, sf_small, tmp_path):
     """The codebook retrain's re-encode must be ONE shuffle-free,
     join-free scan→mapInPandas pass over the layout — 'retrain costs one
     linear pass' is the operator's whole scale promise."""
-    from pyspark.sql import functions as FF
-
     from postgres_etl_pipeline_spark.operators import similarity as S
     from postgres_etl_pipeline_spark.queries import spread, t
 
@@ -634,13 +632,7 @@ def test_retrain_reencode_is_one_linear_pass(spark, sf_small, tmp_path):
     S.write_ivfpq_index(emb, path, n_centroids=8)
     Cc, As, scale = S.read_ivfpq_sidecars(spark, path)
     layout = spark.read.parquet(path)
-    c = layout.select(
-        "neighbor_id", "cv", "cid",
-        S.fixed_point_codes(FF.col("cv"), scale).alias("cd"),
-    )
-    reencoded = S._ivfpq_reencode_codes_pass(
-        c, Cc, As, As.shape[1], As.shape[2]
-    )
+    reencoded = S._ivfpq_encode_pass(layout, Cc, As, scale, keep_cids=True)
     s = plan_summary(reencoded)
     assert s.joins == 0, s
     assert s.shuffles == 0, s
@@ -831,14 +823,10 @@ PYTHON_WORKER_SITES = Counter({
     "operators/multimodal.py:sample_frames": 1,
     "operators/similarity.py:assign_to_centroids": 1,
     "operators/similarity.py:sq8_topk": 1,
-    "operators/similarity.py:pq_topk": 1,
-    "operators/similarity.py:ivfpq_topk": 1,
-    "operators/similarity.py:ivfpq_residual_topk": 1,
+    "operators/similarity.py:_pq_search": 1,
     "operators/similarity.py:_ivfpq_encode_pass": 1,
-    "operators/similarity.py:ivfpq_index_topk": 1,
     "operators/similarity.py:_probe_order": 1,
     "operators/similarity.py:_adc_scores": 1,
-    "operators/similarity.py:_ivfpq_reencode_codes_pass": 1,
     "operators/text.py:ngram_udtf": 1,
     "operators/timeseries.py:grouped_ewma": 1,
     "streaming/jobs.py:stateful_user_totals": 1,

@@ -3,6 +3,7 @@ paths (IVF, sign-LSH) whose correctness is statistical, not hash-exact."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from postgres_etl_pipeline_spark.operators import similarity as S
@@ -529,3 +530,91 @@ def test_zero_norm_vectors_score_null_and_rank_last_in_every_tier(spark):
         (0, 1, None, 1), (0, 2, None, 2), (0, 3, None, 3),
         (3, 5, 0.6667, 2), (3, 8, 1.0, 1), (3, 10, 0.6667, 3),
     ]
+
+
+_IVF_SEARCHES = {
+    "ivf_topk": lambda spark, emb, q, idx, n: S.ivf_topk(
+        emb, q, n_centroids=4, n_probe=n
+    ),
+    "ivf_index_topk": lambda spark, emb, q, idx, n: S.ivf_index_topk(
+        spark, idx["raw"], q, n_probe=n
+    ),
+    "filtered_ivf_topk": lambda spark, emb, q, idx, n: S.filtered_ivf_topk(
+        spark, idx["raw"], q, n_probe=n
+    ),
+    "ivfpq_topk": lambda spark, emb, q, idx, n: S.ivfpq_topk(
+        emb, q, n_centroids=4, n_probe=n
+    ),
+    "ivfpq_residual_topk": lambda spark, emb, q, idx, n: S.ivfpq_residual_topk(
+        emb, q, n_centroids=4, n_probe=n
+    ),
+    "ivfpq_index_topk": lambda spark, emb, q, idx, n: S.ivfpq_index_topk(
+        spark, idx["pq"], q, n_probe=n
+    ),
+    "filtered_ivfpq_topk": lambda spark, emb, q, idx, n: S.filtered_ivfpq_topk(
+        spark, idx["pq"], q, n_probe=n
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_IVF_SEARCHES))
+def test_every_ivf_search_rejects_n_probe_below_one(
+    spark, sf_small, tmp_path, name
+):
+    """``n_probe < 1`` raises the same ValueError in every IVF search
+    (it used to return an empty frame, probe one list, or crash the
+    residual scan's Arrow worker), and an ``n_probe`` above the list
+    count probes every list."""
+    emb = spread(t(spark, sf_small, "embeddings"))
+    q = emb.filter(F.col("vec_id") < 5)
+    idx = {"raw": str(tmp_path / "raw"), "pq": str(tmp_path / "pq")}
+    if name in ("ivf_index_topk", "filtered_ivf_topk"):
+        S.write_ivf_index(
+            emb, idx["raw"], n_centroids=4, kmeans_max_iter=1,
+            kmeans_init="random", extra_cols=("label",),
+        )
+    if name in ("ivfpq_index_topk", "filtered_ivfpq_topk"):
+        S.write_ivfpq_index(emb, idx["pq"], n_centroids=4, extra_cols=("label",))
+    search = _IVF_SEARCHES[name]
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="n_probe must be at least 1"):
+            search(spark, emb, q, idx, bad)
+    if name == "ivfpq_residual_topk":
+        over = sorted(map(tuple, search(spark, emb, q, idx, 9).collect()))
+        assert over == sorted(map(tuple, search(spark, emb, q, idx, 4).collect()))
+
+
+# Spark jobs of one warm call (search + collect) at the parent commit of
+# the shared PQ kernel (sf0.001, jobs_during).
+_PQ_PARENT_JOBS = {
+    "pq_topk": 11, "ivfpq_topk": 17, "ivfpq_residual_topk": 16,
+    "ivfpq_index_topk": 9,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PQ_PARENT_JOBS))
+def test_warm_pq_searches_run_no_more_jobs(
+    spark, sf_small, tmp_path, jobs_during, name
+):
+    """The shared PQ scan keeps every PQ search's Spark job count."""
+    emb = spread(t(spark, sf_small, "embeddings"))
+    q = emb.filter(F.col("vec_id") < 20)
+    path = str(tmp_path / "idx")
+    if name == "ivfpq_index_topk":
+        S.write_ivfpq_index(emb, path, n_centroids=8, coarse="anchor")
+    searches = {
+        "pq_topk": lambda: S.pq_topk(emb, q, k=5, rerank=4),
+        "ivfpq_topk": lambda: S.ivfpq_topk(
+            emb, q, k=5, rerank=4, n_centroids=8, n_probe=2,
+            kmeans_max_iter=2, kmeans_init="random",
+        ),
+        "ivfpq_residual_topk": lambda: S.ivfpq_residual_topk(
+            emb, q, k=5, rerank=4, n_centroids=8, n_probe=2, coarse="anchor"
+        ),
+        "ivfpq_index_topk": lambda: S.ivfpq_index_topk(
+            spark, path, q, k=5, rerank=4, n_probe=2
+        ),
+    }
+    searches[name]().collect()  # warm
+    n = jobs_during(lambda: searches[name]().collect())
+    assert n <= _PQ_PARENT_JOBS[name], n
