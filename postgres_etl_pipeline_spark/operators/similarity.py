@@ -190,17 +190,14 @@ def _write_tiny_sidecar(spark, path: str, rows: list, ddl: str) -> None:
     fs.create(hp(base + "/_SUCCESS"), True).close()
 
 
-class _TinySidecar:
-    """A bounded driver-local sidecar relation (rows + DDL) that
-    :func:`_stage_and_swap_partitions` stages with
+class _TinySidecar(NamedTuple):
+    """A bounded driver-local sidecar relation (rows + DDL) that the
+    layout writers and :func:`_stage_and_swap_partitions` write with
     :func:`_write_tiny_sidecar` instead of a Spark write job — same
     staged files, same rename/recovery protocol, no job."""
 
-    __slots__ = ("rows", "ddl")
-
-    def __init__(self, rows: list, ddl: str):
-        self.rows = rows
-        self.ddl = ddl
+    rows: list
+    ddl: str
 
 
 def _layout_column_names(spark, path: str) -> set[str]:
@@ -247,6 +244,17 @@ def as_double_vec(col: str | Column) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
+def _vectors(df: DataFrame, id_col, vec_col, extra_cols=()) -> DataFrame:
+    """``df`` as (neighbor_id, cv[, extras]), ``cv`` the double vector:
+    the row shape every IVF fit, assignment, layout write and exact
+    re-rank reads."""
+    return df.select(
+        F.col(id_col).alias("neighbor_id"),
+        as_double_vec(vec_col).alias("cv"),
+        *[F.col(x) for x in extra_cols],
+    )
+
+
 def dot(a: Column, b: Column) -> Column:
     """Sequential left-to-right fold — deterministic double summation.
 
@@ -283,6 +291,35 @@ def cosine(
     return F.try_divide(dot(a, b), a_norm * b_norm)
 
 
+_TOPK_DDL = "query_id long, neighbor_id long, cos_sim double, rank int"
+
+
+def _cosine_scores(pairs: DataFrame, *norms: Column) -> DataFrame:
+    """(query_id, neighbor_id, cos_sim) of (query, row) pairs carrying the
+    double vectors ``qv`` and ``cv``: exact cosine scored JVM-side and
+    rounded to 4 dp (``norms`` optionally names their per-row norms)."""
+    return pairs.select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine(F.col("qv"), F.col("cv"), *norms), 4).alias("cos_sim"),
+    )
+
+
+def _top_k(scored: DataFrame, k, order=None, rank: str = "rank"):
+    """Each query's best ``k`` scored neighbors, numbered in a ``rank``
+    column, on the total order (``order``, neighbor_id). The default
+    order is the (cos_sim DESC, neighbor_id) every cosine search ranks
+    its answer by: the 4-dp score absorbs last-ulp engine differences and
+    the id breaks ties; the candidate cuts pass their exact integer
+    score. Spark pushes the ``rank <= k`` filter map-side
+    (WindowGroupLimit)."""
+    order = F.col("cos_sim").desc() if order is None else order
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    return scored.withColumn(rank, F.row_number().over(w)).filter(
+        F.col(rank) <= k
+    )
+
+
 def _exact_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -313,19 +350,8 @@ def _exact_cosine_topk(
     on = F.col("query_id") != F.col("neighbor_id")
     if filter_col:
         on = (F.col("qf") == F.col("cf")) & on
-    scored = c.join(F.broadcast(q), on).select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 4
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    pairs = c.join(F.broadcast(q), on)
+    return _top_k(_cosine_scores(pairs, F.col("qn"), F.col("cn")), k)
 
 
 def brute_force_topk(
@@ -749,9 +775,7 @@ def ivf_topk(
     ``n_probe < 1`` raises ``ValueError``.
     """
     n_probe = _probe_count(n_probe, n_centroids)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_vec(vec_col).alias("cv")
-    )
+    c = _vectors(corpus, id_col, vec_col)
     # degenerate corpora: KMeans needs ≥ k points; tiny/empty inputs fall
     # back to exact search (same contract, no index worth building)
     if c.limit(n_centroids).count() < n_centroids:
@@ -764,34 +788,36 @@ def ivf_topk(
         kmeans_init=kmeans_init,
         fit_sample=fit_sample,
     )
+    q_rows = _query_rows(queries, id_col, vec_col)
     assigned = assign_to_centroids(c, cents)
+    return _top_k(_probe_and_score(assigned, cents, q_rows, n_probe), k)
+
+
+def _probe_and_score(rows: DataFrame, cents, q_rows, n_probe) -> DataFrame:
+    """The raw-vector IVF probe shared by :func:`ivf_topk` and
+    :func:`ivf_index_topk`: each query's ``n_probe`` nearest float
+    centroids (driver argsort over the bounded centroid matrix) become a
+    broadcast (query_id, cid, qv) probe frame; ``rows`` (neighbor_id, cv,
+    cid) keep only the probed cells — on a cid-partitioned layout a
+    partition filter, so only the probed lists' files are read — and are
+    scored against their probing queries (:func:`_cosine_scores`), never
+    against themselves."""
     import numpy as np
 
-    q_rows = queries.select(id_col, vec_col).collect()
     probes = []
     for r in q_rows:
-        qv = np.array(r[1], dtype=np.float64)
+        qv = np.array(r["qv"], dtype=np.float64)
         d = ((cents - qv) ** 2).sum(axis=1)
         for cid in np.argsort(d)[:n_probe]:
-            probes.append((int(r[0]), int(cid), [float(x) for x in qv]))
-    spark = corpus.sparkSession
+            probes.append((r["query_id"], int(cid), qv.tolist()))
     probe_df = local_frame(
-        spark, probes, "query_id long, cid int, qv array<double>"
+        rows.sparkSession, probes, "query_id long, cid int, qv array<double>"
     )
-    scored = (
-        assigned.join(F.broadcast(probe_df), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
+    probed = rows.filter(F.col("cid").isin(sorted({p[1] for p in probes})))
+    return _cosine_scores(
+        probed.join(F.broadcast(probe_df), "cid").filter(
+            F.col("query_id") != F.col("neighbor_id")
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
     )
 
 
@@ -1210,17 +1236,16 @@ def sq8_topk(
     import pandas as pd
 
     spark = corpus.sparkSession
-    empty_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
     scales = sq8_scales(corpus, vec_col)
     if not scales:
-        return local_frame(spark, [], empty_schema)
+        return local_frame(spark, [], _TOPK_DDL)
     q_rows = queries.select(
         F.col(id_col).alias("query_id"),
         as_double_vec(vec_col).alias("qv"),
         sq8_codes(as_double_vec(vec_col), scales).alias("qc"),
     ).collect()
     if not q_rows:
-        return local_frame(spark, [], empty_schema)
+        return local_frame(spark, [], _TOPK_DDL)
     qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
     qcodes = np.array([r["qc"] for r in q_rows], dtype=np.int64)
     bc = spark.sparkContext.broadcast((qids, qcodes))
@@ -1246,17 +1271,14 @@ def sq8_topk(
         F.col(id_col).alias("neighbor_id"),
         sq8_codes(as_double_vec(vec_col), scales).alias("cd"),
     )
-    cand_w = Window.partitionBy("query_id").orderBy(
-        F.col("idot").desc(), F.col("neighbor_id")
+    scored = coded.mapInPandas(
+        iscore, "query_id long, neighbor_id long, idot long"
+    ).filter(F.col("query_id") != F.col("neighbor_id"))
+    cands = _top_k(scored, k * rerank, F.col("idot").desc(), "crank")
+    return _rerank_exact_cosine(
+        cands.select("query_id", "neighbor_id"), corpus, q_rows, k, id_col,
+        vec_col,
     )
-    cands = (
-        coded.mapInPandas(iscore, "query_id long, neighbor_id long, idot long")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("crank", F.row_number().over(cand_w))
-        .filter(F.col("crank") <= k * rerank)
-        .select("query_id", "neighbor_id")
-    )
-    return _rerank_exact_cosine(cands, corpus, q_rows, k, id_col, vec_col)
 
 
 def fixed_point_codes(vec: Column, scale: int = 1000) -> Column:
@@ -1317,9 +1339,6 @@ def pq_anchor_codebook(
     return [list(r["q"]) for r in rows]
 
 
-_TOPK_DDL = "query_id long, neighbor_id long, cos_sim double, rank int"
-
-
 def _probe_count(n_probe, n_cents: int) -> int:
     """Lists each query of an IVF search probes: ``n_probe`` clamped to
     the ``n_cents`` lists there are. Every IVF search over at least one
@@ -1367,13 +1386,17 @@ def _pq_encode(X, As, Cc=None, cids=None):
     return cids, codes
 
 
-def _lattice_queries(queries: DataFrame, id_col, vec_col, scale) -> list:
-    """Collected query rows of a PQ search: ``query_id``, the double
-    vector ``qv`` for the exact re-rank, and its lattice codes ``qq``."""
+def _query_rows(queries: DataFrame, id_col, vec_col, scale=None) -> list:
+    """Collected query rows of an IVF or PQ search: ``query_id`` and the
+    double vector ``qv``; with a lattice ``scale`` also its lattice codes
+    ``qq``."""
+    lattice = [] if scale is None else [
+        fixed_point_codes(as_double_vec(vec_col), scale).alias("qq")
+    ]
     return queries.select(
         F.col(id_col).alias("query_id"),
         as_double_vec(vec_col).alias("qv"),
-        fixed_point_codes(as_double_vec(vec_col), scale).alias("qq"),
+        *lattice,
     ).collect()
 
 
@@ -1473,18 +1496,14 @@ def _pq_search(rows, corpus, q_rows, As, probe_idx, n_cents, k, rerank,
                 }
             )
 
-    cand_w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
+    scored = rows.mapInPandas(
+        adc_candidates, "query_id long, neighbor_id long, adc long"
     )
-    cands = (
-        rows.mapInPandas(
-            adc_candidates, "query_id long, neighbor_id long, adc long"
-        )
-        .withColumn("crank", F.row_number().over(cand_w))
-        .filter(F.col("crank") <= k * rerank)
-        .select("query_id", "neighbor_id")
+    cands = _top_k(scored, k * rerank, F.col("adc").asc(), "crank")
+    return _rerank_exact_cosine(
+        cands.select("query_id", "neighbor_id"), corpus, q_rows, k, id_col,
+        vec_col,
     )
-    return _rerank_exact_cosine(cands, corpus, q_rows, k, id_col, vec_col)
 
 
 def _pq_codebook(corpus, codebook, m, codebook_size, scale, id_col, vec_col,
@@ -1571,7 +1590,7 @@ def pq_topk(
     )
     if As is None:
         return local_frame(spark, [], _TOPK_DDL)
-    q_rows = _lattice_queries(queries, id_col, vec_col, scale)
+    q_rows = _query_rows(queries, id_col, vec_col, scale)
     if not q_rows:
         return local_frame(spark, [], _TOPK_DDL)
     rows = corpus.select(
@@ -1623,10 +1642,7 @@ def pq_train_codebook(
     import numpy as np
 
     sample = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double_vec(vec_col).alias("cv"),
-        )
+        _vectors(corpus, id_col, vec_col)
         .orderBy(F.xxhash64("neighbor_id"), "neighbor_id")
         .limit(int(fit_sample))
         .select("cv")
@@ -1712,9 +1728,7 @@ def ivfpq_topk(
 
     spark = corpus.sparkSession
     n_probe = _probe_count(n_probe, n_centroids)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_vec(vec_col).alias("cv")
-    )
+    c = _vectors(corpus, id_col, vec_col)
     # degenerate corpora: fall back to the unpartitioned PQ scan (same
     # contract ivf_topk uses; no index worth building below k points)
     if c.limit(n_centroids).count() < n_centroids:
@@ -1732,7 +1746,7 @@ def ivfpq_topk(
     )
     if As is None:
         return local_frame(spark, [], _TOPK_DDL)
-    q_rows = _lattice_queries(queries, id_col, vec_col, scale)
+    q_rows = _query_rows(queries, id_col, vec_col, scale)
     if not q_rows:
         return local_frame(spark, [], _TOPK_DDL)
     Qv = np.array([r["qv"] for r in q_rows], dtype=np.float64)
@@ -1792,11 +1806,7 @@ def write_ivf_index(
     import numpy as np
 
     spark = corpus.sparkSession
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double_vec(vec_col).alias("cv"),
-        *[F.col(x) for x in extra_cols],
-    )
+    c = _vectors(corpus, id_col, vec_col, extra_cols)
     # ONE hash-first sample job drives everything bounded below (round
     # 13): the k-clamp, the flat-tier quantizer fit, AND the coarse-drift
     # baseline. The previous shape ran three separate corpus-touching
@@ -1814,17 +1824,14 @@ def write_ivf_index(
     )
     X = np.array(list(sample_pdf["cv"]), dtype=np.float64)
     # degenerate corpora: clamp k to the rows available; an EMPTY corpus
-    # writes an empty index (centroid sidecar only — searches return
-    # empty before ever touching the data directory, and the schema-
-    # explicit sidecar read needs no parquet footer to infer from)
+    # writes an empty index (sidecars only — searches return empty
+    # before ever touching the data directory, and the schema-explicit
+    # sidecar read needs no parquet footer to infer from)
     if len(X) == 0:
-        _write_tiny_sidecar(
-            spark, path + "_centroids", [], "cid int, centroid array<double>"
-        )
-        _write_tiny_sidecar(
-            spark, path + "_meta", [(0.0,)], "train_coarse_err double"
-        )
-        return np.zeros((0, 0))
+        cents = np.zeros((0, 0))
+        _write_layout(spark, path, None, cents, _RAW_CENTROID_DDL,
+                      _TinySidecar([(0.0,)], "train_coarse_err double"))
+        return cents
     if int(fit_sample) >= int(n_centroids):
         # a truncated sample (len < fit_sample) saw EVERY corpus row, so
         # the clamp needs no extra count job
@@ -1839,44 +1846,79 @@ def write_ivf_index(
             c, k, seed=seed, kmeans_max_iter=kmeans_max_iter,
             kmeans_init=kmeans_init, fit_sample=fit_sample,
         )
-    # REBALANCE before the partitioned write (guide §6): without it every
-    # scan task writes one file per cid it touches (T×k files — 225 at
-    # sf0.1 for k=8), and every later lifecycle step pays the listing +
-    # open cost. The AQE rebalance coalesces to advisory-sized output
-    # tasks AND can split a skewed hot cell, so file sizes stay right at
-    # any scale; the cost is one corpus shuffle keyed by cid — the same
-    # trade Iceberg's write.distribution-mode=hash makes.
-    assign_to_centroids(c, cents, extra_cols).hint(
-        "rebalance", "cid"
-    ).write.partitionBy("cid").parquet(path)
-    # sidecar writes are driver-side (round 14): bounded metadata, no job
-    _write_tiny_sidecar(
-        spark,
-        path + "_centroids",
-        [(int(i), [float(x) for x in row]) for i, row in enumerate(cents)],
-        "cid int, centroid array<double>",
-    )
-    if extra_cols:
-        # selectivity sidecars (verdict r09 item 6): per-(cid, value)
-        # match counts for every metadata column, read back from the
-        # just-written layout (one column-pruned scan per column) —
-        # filtered_ivf_topk sizes its first probe set with these
-        _write_ivf_list_stats(
-            spark.read.parquet(path), path, tuple(extra_cols)
-        )
     # coarse-quantization baseline (the global re-cluster trigger's
     # reference point — see measure_ivf_coarse_drift): mean squared
     # nearest-centroid distance over the SAME bounded hash-first sample
     # the fit used (identical rows in identical order as the previous
     # read-back of the written layout — the index holds exactly the
     # input rows, so the float sum is bitwise unchanged)
-    _write_tiny_sidecar(
-        spark,
-        path + "_meta",
-        [(_coarse_error(X, cents),)],
-        "train_coarse_err double",
+    _write_layout(
+        spark, path, assign_to_centroids(c, cents, extra_cols), cents,
+        _RAW_CENTROID_DDL,
+        _TinySidecar([(_coarse_error(X, cents),)], "train_coarse_err double"),
+        extra_cols=extra_cols,
     )
     return cents
+
+
+_RAW_CENTROID_DDL = "cid int, centroid array<double>"
+_LATTICE_CENTROID_DDL = "cid int, centroid array<long>"
+_CODEBOOK_DDL = "code int, s int, sub array<long>"
+
+
+def _centroid_sidecar(cents, ddl: str) -> _TinySidecar:
+    """The ``_centroids`` sidecar of a layout: one (cid, centroid) row
+    per centroid, in cid order."""
+    return _TinySidecar(
+        [(int(i), row.tolist()) for i, row in enumerate(cents)], ddl
+    )
+
+
+def _codebook_sidecar(As) -> _TinySidecar:
+    """The ``_codebook`` sidecar of an IVFADC layout: one (code, s,
+    subvector) row per code word of each of the m subspaces."""
+    return _TinySidecar(
+        [
+            (int(code), int(s), [int(x) for x in As[code, s]])
+            for code in range(len(As))
+            for s in range(As.shape[1])
+        ],
+        _CODEBOOK_DDL,
+    )
+
+
+def _write_layout(
+    spark, path: str, rows, cents, centroid_ddl: str, meta: _TinySidecar,
+    codebook: _TinySidecar | None = None, extra_cols: tuple = (),
+) -> None:
+    """The tail of both layout writers: the encoded ``rows`` (None for an
+    empty corpus, which writes sidecars only) as parquet partitioned by
+    cid, then the ``_centroids``, ``_codebook`` and ``_meta`` sidecars
+    and a ``_stats_<col>`` sidecar per metadata column.
+
+    REBALANCE before the partitioned write (guide §6): without it every
+    scan task writes one file per cid it touches (T×k files — 225 at
+    sf0.1 for k=8), and every later lifecycle step pays the listing +
+    open cost. The AQE rebalance coalesces to advisory-sized output
+    tasks AND can split a skewed hot cell, so file sizes stay right at
+    any scale; the cost is one corpus shuffle keyed by cid — the same
+    trade Iceberg's write.distribution-mode=hash makes. Sidecar writes
+    are driver-side (round 14): bounded metadata, no job. The
+    selectivity sidecars (verdict r09 item 6) are per-(cid, value) match
+    counts read back from the just-written layout (one column-pruned
+    scan per column); filtered search sizes its first probe set with
+    them."""
+    if rows is not None:
+        rows.hint("rebalance", "cid").write.partitionBy("cid").parquet(path)
+    sidecars = {"_centroids": _centroid_sidecar(cents, centroid_ddl),
+                "_codebook": codebook, "_meta": meta}
+    for suffix, side in sidecars.items():
+        if side is not None:
+            _write_tiny_sidecar(spark, path + suffix, side.rows, side.ddl)
+    if rows is not None and extra_cols:
+        _write_ivf_list_stats(
+            spark.read.parquet(path), path, tuple(extra_cols)
+        )
 
 
 def measure_ivf_coarse_drift(
@@ -2319,13 +2361,19 @@ def read_ivf_centroids(spark, path: str):
     writer)."""
     import numpy as np
 
-    tbl = _read_tiny_sidecar(
-        spark, path + "_centroids", "cid int, centroid array<double>"
-    )
+    return _read_centroids(spark, path, _RAW_CENTROID_DDL, np.float64)
+
+
+def _read_centroids(spark, path: str, ddl: str, dtype):
+    """The ``_centroids`` sidecar of a layout as a ``dtype`` matrix in
+    cid order — one driver-side sidecar read, no Spark job."""
+    import numpy as np
+
+    tbl = _read_tiny_sidecar(spark, path + "_centroids", ddl)
     pairs = sorted(
         zip(tbl.column("cid").to_pylist(), tbl.column("centroid").to_pylist())
     )
-    return np.array([c for _, c in pairs], dtype=np.float64)
+    return np.array([c for _, c in pairs], dtype=dtype)
 
 
 def ivf_index_topk(
@@ -2336,56 +2384,68 @@ def ivf_index_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    *,
+    rerank: int | None = None,
+    scale: int | None = None,
 ) -> DataFrame:
-    """Search a PERSISTED :func:`write_ivf_index` layout: per-query probe
-    lists come from the stored centroids (bounded driver metadata), and
-    the corpus read carries ``cid IN (probed)`` — which Spark turns into
-    a PARTITION FILTER on the cid directory layout, so only the probed
-    lists' FILES are ever read (`PartitionFilters` in the scan node,
-    pinned in tests/test_plan_shapes.py). Scoring/ranking arithmetic is
-    identical to :func:`ivf_topk` (broadcast probe join, exact cosine,
-    4-dp + id tie-break total order), so probe-all reproduces exact
-    search and the catalog entry hash-oracles against the brute-force
-    SQL while n_probe < n_centroids is the measured-recall scale path.
-    ``path`` may be a VERSIONED ROOT (see :func:`publish_index_version`)
-    — resolved through the serving pointer, so blue/green rebuilds are
-    invisible to callers. ``n_probe < 1`` raises ``ValueError``.
+    """Search a PERSISTED IVF layout of either cell codec — the codec is
+    the layout's ``_meta`` stamp (:func:`_layout_codec`, a driver-side
+    read, no Spark job). Per-query probe lists come from the stored
+    centroids (bounded driver metadata), and the corpus read carries
+    ``cid IN (probed)`` — which Spark turns into a PARTITION FILTER on
+    the cid directory layout, so only the probed lists' FILES are ever
+    read (`PartitionFilters` in the scan node, pinned in
+    tests/test_plan_shapes.py).
+
+    * Raw :func:`write_ivf_index` layout: scored exactly like
+      :func:`ivf_topk` (:func:`_probe_and_score`), so probe-all
+      reproduces exact search and the catalog entry hash-oracles against
+      the brute-force SQL while n_probe < n_centroids is the
+      measured-recall scale path.
+    * IVFADC :func:`write_ivfpq_index` layout: the shared PQ scan
+      (:func:`_pq_search`) with lattice probe lists
+      (:func:`_lattice_probe_lists`) over ONLY ``(neighbor_id, cid,
+      codes)`` of the probed partitions — column pruning keeps the D×8
+      vector out of the scan — then the exact re-rank of the ≤
+      Q·k·``rerank`` (default 4) candidates against the layout's ``cv``.
+      At any n_probe the output EQUALS :func:`ivfpq_residual_topk` on
+      the same corpus and derivations, which lets the catalog entry
+      share the residual oracle.
+
+    ``rerank`` and ``scale`` apply to IVFADC layouts only and raise
+    ``ValueError`` on a raw one; an explicit ``scale`` must match the
+    stamp. ``path`` may be a VERSIONED ROOT (see
+    :func:`publish_index_version`) — resolved through the serving
+    pointer, so blue/green rebuilds are invisible to callers. An
+    unstamped layout raises, and ``n_probe < 1`` raises ``ValueError``.
     """
     import numpy as np
 
     path = _resolve_maybe_root(spark, path)
-    cents = read_ivf_centroids(spark, path)
+    codec, meta = _layout_codec(
+        spark, path, "ivf_index_topk", scale, rerank=rerank
+    )
+    cents, book = codec.read(spark, path)
     if not len(cents):  # an empty layout: no list to probe
         return local_frame(spark, [], _TOPK_DDL)
     n_probe = _probe_count(n_probe, len(cents))
-    q_rows = queries.select(id_col, vec_col).collect()
+    q_rows = _query_rows(queries, id_col, vec_col, meta["scale"])
     if not q_rows:
         return local_frame(spark, [], _TOPK_DDL)
-    probes = []
-    for r in q_rows:
-        qv = np.array(r[1], dtype=np.float64)
-        d = ((cents - qv) ** 2).sum(axis=1)
-        for cid in np.argsort(d)[:n_probe]:
-            probes.append((int(r[0]), int(cid), [float(x) for x in qv]))
-    probe_df = local_frame(
-        spark, probes, "query_id long, cid int, qv array<double>"
-    )
-    probed_cids = sorted({p[1] for p in probes})
-    scan = spark.read.parquet(path).filter(F.col("cid").isin(probed_cids))
-    scored = (
-        scan.join(F.broadcast(probe_df), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
+    if book is None:
+        scored = _probe_and_score(
+            spark.read.parquet(path), cents, q_rows, n_probe
         )
+        return _top_k(scored, k)
+    probe_idx = _lattice_probe_lists(q_rows, cents, n_probe)
+    rows = (
+        spark.read.parquet(path)
+        .filter(F.col("cid").isin(np.unique(probe_idx).tolist()))
+        .select("neighbor_id", "cid", "codes")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _pq_search(
+        rows, spark.read.parquet(path), q_rows, book, probe_idx, len(cents),
+        k, 4 if rerank is None else rerank, "neighbor_id", "cv", cents,
     )
 
 
@@ -2430,13 +2490,7 @@ def incremental_topk_update(
     # neighbor out of the k). Cost: one shuffle of Q·(k + batch-top-k)
     # rows, bounded metadata. This is what lets the streaming drain
     # (stream_topk_maintenance) inherit the at-least-once contract.
-    merged = merged.distinct()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return merged.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _top_k(merged.distinct(), k)
 
 
 def filtered_topk(
@@ -2566,38 +2620,23 @@ def pq_train_residual_codebook(
     return LatticeCodebook(np.stack(subs, axis=1), scale)
 
 
-def _rerank_exact_cosine(cands, corpus, q_rows, k, id_col, vec_col):
+def _rerank_exact_cosine(cands, corpus, queries, k, id_col, vec_col):
     """Shared exact tail of every PQ-family search: join the ≤ Q·k·rerank
     candidate ids back to the corpus vectors, score exact double cosine
-    JVM-side against the broadcast query matrix, and rank on the 4-dp +
+    JVM-side against the broadcast (query_id, qv) ``queries`` — a
+    relation, or the collected query rows — and rank on the 4-dp +
     neighbor-id total order."""
-    spark = corpus.sparkSession
-    qdf = local_frame(
-        spark,
-        [(int(r["query_id"]), [float(x) for x in r["qv"]]) for r in q_rows],
-        "query_id long, qv array<double>",
-    )
-    exact = (
-        cands.join(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                as_double_vec(vec_col).alias("cv"),
-            ),
-            "neighbor_id",
+    if isinstance(queries, list):
+        queries = local_frame(
+            corpus.sparkSession,
+            [(int(r["query_id"]), [float(x) for x in r["qv"]])
+             for r in queries],
+            "query_id long, qv array<double>",
         )
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("cv"), F.col("qv")), 4).alias("cos_sim"),
-        )
+    pairs = cands.join(_vectors(corpus, id_col, vec_col), "neighbor_id").join(
+        F.broadcast(queries.select("query_id", "qv")), "query_id"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return exact.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _top_k(_cosine_scores(pairs), k)
 
 
 def ivfpq_residual_topk(
@@ -2680,7 +2719,7 @@ def ivfpq_residual_topk(
         kmeans_max_iter=kmeans_max_iter, kmeans_init=kmeans_init,
         fit_sample=fit_sample,
     )
-    q_rows = _lattice_queries(queries, id_col, vec_col, scale)
+    q_rows = _query_rows(queries, id_col, vec_col, scale)
     if quantizers is None or not q_rows:
         return local_frame(spark, [], _TOPK_DDL)
     Cc, As = quantizers
@@ -2788,11 +2827,7 @@ def append_to_ivf_index(
     ``(Cc, As)`` of an IVFADC one."""
     spark = batch.sparkSession
     extra_cols = tuple(extra_cols)
-    rows = batch.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double_vec(vec_col).alias("cv"),
-        *[F.col(x) for x in extra_cols],
-    )
+    rows = _vectors(batch, id_col, vec_col, extra_cols)
     # resolve + lease as one atomic unit (advice r11 #1): an append
     # racing a maintenance swap would interleave with its staged cells,
     # and an append racing a BLUE/GREEN REBUILD would land on the old
@@ -3891,13 +3926,11 @@ def resplit_ivf_cell(
     # the rest at the tail ids (cid order preserved for readers)
     new_cents = np.vstack([cents, sub[1:]])
     new_cents[cid] = sub[0]
-    updated = _TinySidecar(
-        [(int(i), row.tolist()) for i, row in enumerate(new_cents)],
-        codec.centroid_ddl,
-    )
     _stage_and_swap_partitions(
         spark, path, [cid], reassigned, f"{codec.kind}_resplit",
-        sidecars={"_centroids": updated},
+        sidecars={
+            "_centroids": _centroid_sidecar(new_cents, codec.centroid_ddl)
+        },
     )
     _refresh_ivf_list_stats(spark, path, new_ids)
     return new_cents
@@ -3908,11 +3941,8 @@ def read_ivf_list_stats(spark, path: str, filter_col: str):
     sidecar, or None when the index was built without stats for that
     column. The selectivity metadata :func:`filtered_ivf_topk` sizes its
     first probe set with (verdict r09 item 6)."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(
-        path + f"_stats_{filter_col}"
-    )
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm_path):
+    fs, hp = _hadoop_fs(spark, path)
+    if not fs.exists(hp(path + f"_stats_{filter_col}")):
         return None
     return spark.read.parquet(path + f"_stats_{filter_col}")
 
@@ -3932,21 +3962,25 @@ def _write_ivf_list_stats(assigned: DataFrame, path: str, cols: tuple) -> None:
         )
 
 
+def _stats_columns(spark, path: str) -> list[str]:
+    """Metadata columns the layout at ``path`` keeps a ``_stats_<col>``
+    selectivity sidecar for."""
+    fs, hp = _hadoop_fs(spark, path)
+    return [
+        str(st.getPath()).rsplit("_stats_", 1)[1]
+        for st in fs.globStatus(hp(path + "_stats_*")) or []
+    ]
+
+
 def _merge_ivf_list_stats(spark, batch_assigned: DataFrame, path: str) -> None:
     """Fold an appended batch's (cid, value) counts into every existing
     stats sidecar (sum-merge + swap) — appends keep the selectivity
     metadata current (verdict r09 item 6's 'computed at build/append
     time')."""
-    jvm = spark._jvm
-    glob = jvm.org.apache.hadoop.fs.Path(path + "_stats_*")
-    fs = glob.getFileSystem(spark._jsc.hadoopConfiguration())
-    statuses = fs.globStatus(glob)
     from ..connectors.sinks import _swap_into_place  # avoid a module cycle
 
     prefix = path + "_stats_"
-    for st in statuses or []:
-        spath = str(st.getPath())
-        col = spath[spath.rindex("_stats_") + len("_stats_"):]
+    for col in _stats_columns(spark, path):
         delta = batch_assigned.groupBy(
             "cid", F.col(col).alias("value")
         ).agg(F.count(F.lit(1)).alias("n"))
@@ -3968,19 +4002,11 @@ def _refresh_ivf_list_stats(spark, path: str, cids) -> None:
     proof needs TRUE counts, since an overstated count could jump past
     the prefix the fill-driven loop would stop at). O(affected cells)
     per sidecar, same cost class as the maintenance op itself."""
-    jvm = spark._jvm
-    glob = jvm.org.apache.hadoop.fs.Path(path + "_stats_*")
-    fs = glob.getFileSystem(spark._jsc.hadoopConfiguration())
-    statuses = fs.globStatus(glob)
-    if not statuses:
-        return
     from ..connectors.sinks import _swap_into_place  # avoid a module cycle
 
     cids = [int(c) for c in cids]
     prefix = path + "_stats_"
-    for st in statuses:
-        spath = str(st.getPath())
-        col = spath[spath.rindex("_stats_") + len("_stats_"):]
+    for col in _stats_columns(spark, path):
         recount = (
             spark.read.parquet(path)
             .filter(F.col("cid").isin(cids))
@@ -4006,78 +4032,90 @@ def filtered_ivf_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    *,
+    rerank: int | None = None,
+    scale: int | None = None,
 ) -> DataFrame:
-    """FILTERED search over a PERSISTED IVF index (verdict r08 item 3):
-    per-query top-k restricted to corpus vectors matching the query's
-    ``filter_col`` value, with the mask applied INSIDE the probed scan
-    and **per-query probe expansion** — a query whose filter is selective
-    keeps probing further lists (nearest-first) until it has k matches
-    or every list is exhausted, so a selective tenant/language/license
-    still gets k results where post-filtering an unfiltered top-k
-    under-fills (exactly the failure :func:`filtered_topk`'s docstring
-    names; this operator is its index-accelerated tier — the index must
-    have been built with ``extra_cols=(filter_col,)``).
+    """FILTERED search over a PERSISTED IVF layout of either cell codec
+    (verdict r08 item 3): per-query top-k restricted to corpus vectors
+    matching the query's ``filter_col`` value, with the mask applied
+    INSIDE the probed scan and **per-query probe expansion** — a query
+    whose filter is selective keeps probing further lists (nearest-first)
+    until its pool is full or every list is exhausted, so a selective
+    tenant/language/license still gets k results where post-filtering an
+    unfiltered top-k under-fills (exactly the failure
+    :func:`filtered_topk`'s docstring names; this operator is its
+    index-accelerated tier — the index must have been built with
+    ``extra_cols=(filter_col,)``). The codec comes from the layout's
+    ``_meta`` stamp (:func:`_layout_codec`); ``rerank`` and ``scale``
+    apply to IVFADC layouts only and raise ``ValueError`` on a raw one.
 
-    Rounds run in :func:`_filtered_probe_rounds` (shared with
-    :func:`filtered_ivfpq_topk`), entirely as relations: probe orders
-    are a (query_id, probe_rank, cid) relation, fill counts and probed
-    watermarks an aggregated state relation, and the only driver state
-    is each round's ≤ n_centroids probed-cid list. Each round (≤
-    ⌈k₁/n_probe⌉, usually 1) scans only the NEXT ``n_probe`` unexhausted
-    lists of still-unfilled queries — ``cid IN (…)`` is a file-level
-    partition filter on the cid layout — masks on ``filter_col = query
-    value`` (null-rejecting SQL equality, matching the relational
-    oracle), scores exact cosine JVM-side, and merges the per-query
-    top-k with the accumulator (pure scores: top-k of accumulated ∪
-    round candidates is exact over every list scanned so far — the
-    :func:`incremental_topk_update` theorem).
+    Rounds run in :func:`_filtered_probe_rounds`, entirely as relations;
+    each scans only the next ``n_probe`` unexhausted lists of
+    still-unfilled queries (``cid IN (…)``, a file-level partition
+    filter), masks on ``filter_col = query value`` (null-rejecting SQL
+    equality, matching the relational oracle), scores the masked pairs
+    and merges the per-query best with the accumulator — exact over
+    every list scanned so far, since scores are pure (the
+    :func:`incremental_topk_update` theorem). A
+    ``<path>_stats_<filter_col>`` sidecar sizes the first probe set
+    (:func:`_attach_probe_jump`) without changing any output. The codecs
+    differ only in the scorer:
 
-    When the index carries a ``<path>_stats_<filter_col>`` sidecar
-    (written at build, merged on append), the first probe set is
-    SELECTIVITY-SIZED (verdict r09 item 6): a query jumps straight to
-    the first ``n_probe``-multiple prefix whose cumulative (cid, value)
-    match count reaches k. Because fill(p) ≤ cum(p), the fill-driven
-    loop can never stop BEFORE that prefix, so the jump changes no
-    output — it only collapses the first ⌈p₁/n_probe⌉ round trips into
-    one (pinned: identical output + fewer rounds on a selective corpus).
+    * raw — exact cosine JVM-side (:func:`_cosine_scores`) with float
+      probe orders; the pool is the k results themselves;
+    * IVFADC — probe orders from the exact int64 lattice distances, ADC
+      per masked pair in one Arrow pass against the broadcast sidecars
+      (:func:`_adc_scores`, the scan reads ``(neighbor_id, cid, codes,
+      filter_col)``), a pool of the per-query best ``k·rerank`` (default
+      4) by the exact (adc, neighbor_id) order, and the exact re-rank of
+      that pool against the layout's ``cv``
+      (:func:`_rerank_exact_cosine`).
 
     Fill-vs-recall semantics (the FAISS convention): expansion is for
-    FILLING k, not for recall — a query stops expanding once k matches
-    exist, so its results are exact over its probed prefix of lists. At
-    probe-all (``n_probe = n_centroids``) one round scans everything and
-    the output equals the filtered brute force — the hash-oracled
-    catalog configuration.
+    FILLING the pool, not for recall — a query stops expanding once its
+    pool is full, so its results are exact over its probed prefix of
+    lists. At probe-all (``n_probe = n_centroids``) one round scans
+    everything: a raw layout then answers the filtered brute force, an
+    IVFADC one the residual pipeline restricted to matching labels — the
+    hash-oracled catalog configurations.
     """
     path = _resolve_maybe_root(spark, path)
-    cents = read_ivf_centroids(spark, path)
+    codec, meta = _layout_codec(
+        spark, path, "filtered_ivf_topk", scale, rerank=rerank
+    )
+    cents, book = codec.read(spark, path)
     if not len(cents):
-        return local_frame(
-            spark, [], "query_id long, neighbor_id long, cos_sim double, rank int"
-        )
+        return local_frame(spark, [], _TOPK_DDL)
+    lattice = [] if book is None else [
+        fixed_point_codes(as_double_vec(vec_col), meta["scale"]).alias("qq")
+    ]
     qdf = (
         queries.select(
             F.col(id_col).alias("query_id"),
             as_double_vec(vec_col).alias("qv"),
+            *lattice,
             F.col(filter_col).alias("qval"),
         )
         .filter(F.col("qval").isNotNull())
         .localCheckpoint(eager=True)
     )
+    if book is None:
+        acc = _filtered_probe_rounds(
+            spark, path, qdf, "qv", cents, filter_col, k, n_probe,
+            score=_cosine_scores, order=F.col("cos_sim").desc(),
+            score_ddl="cos_sim double",
+        )
+        return _top_k(acc, k)
     acc = _filtered_probe_rounds(
-        spark, path, qdf, "qv", cents, filter_col, k, n_probe,
-        score=lambda pairs: pairs.select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
-        ),
-        order=F.col("cos_sim").desc(),
-        score_ddl="cos_sim double",
+        spark, path, qdf, "qq", cents, filter_col,
+        k * (4 if rerank is None else rerank), n_probe,
+        score=lambda pairs: _adc_scores(pairs, cents, book),
+        order=F.col("adc").asc(), score_ddl="adc long",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return acc.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _rerank_exact_cosine(
+        acc.select("query_id", "neighbor_id"), spark.read.parquet(path), qdf,
+        k, "neighbor_id", "cv",
     )
 
 
@@ -4149,14 +4187,9 @@ def _filtered_probe_rounds(
     acc = local_frame(
         spark, [], f"query_id long, neighbor_id long, {score_ddl}"
     )
-    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
 
     def best(df):
-        return (
-            df.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= target)
-            .drop("_r")
-        )
+        return _top_k(df, target, order, "_r").drop("_r")
 
     unfilled = (F.col("filled") < target) & (F.col("upto") < n_cents)
     # exclusive probe_rank bound of a query's CURRENT round: the
@@ -4222,7 +4255,10 @@ def _attach_probe_jump(
     first covering prefix (cum ≥ ``target``), rounded up to the n_probe
     grid; a value the stats can't cover jumps straight to exhaustion
     (probe everything in round 1 — what fill-driven expansion would
-    reach anyway). Without stats, jump = n_probe (plain chunks)."""
+    reach anyway). Without stats, jump = n_probe (plain chunks). The jump
+    changes no output: fill(p) ≤ cum(p), so the fill-driven loop can
+    never stop BEFORE that prefix — it only collapses the first
+    ⌈p₁/n_probe⌉ round trips into one."""
     stats = read_ivf_list_stats(spark, path, filter_col)
     if stats is None:
         return state.withColumn("jump", F.lit(int(n_probe)))
@@ -4473,11 +4509,7 @@ def write_ivfpq_index(
     Returns (Cc, As). Raises on an empty corpus (nothing to derive a
     codebook from — mirror of the untrained-append guard)."""
     spark = corpus.sparkSession
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double_vec(vec_col).alias("cv"),
-        *[F.col(x) for x in extra_cols],
-    )
+    c = _vectors(corpus, id_col, vec_col, extra_cols)
     quantizers = _ivfadc_quantizers(
         corpus, m, codebook_size, scale, n_centroids, coarse, coarse_cents,
         codebook, "write_ivfpq_index", id_col, vec_col, seed=seed,
@@ -4487,29 +4519,6 @@ def write_ivfpq_index(
     if quantizers is None:
         raise ValueError("cannot build an IVFADC index over an empty corpus")
     Cc, As = quantizers
-    d = As.shape[2]
-    # REBALANCE before the partitioned write (guide §6) — same file-count
-    # rationale as write_ivf_index
-    _ivfpq_encode_pass(c, Cc, As, scale, extra_cols).hint(
-        "rebalance", "cid"
-    ).write.partitionBy("cid").parquet(path)
-    # sidecar writes are driver-side (round 14): bounded metadata, no jobs
-    _write_tiny_sidecar(
-        spark,
-        path + "_centroids",
-        [(int(i), [int(x) for x in row]) for i, row in enumerate(Cc)],
-        "cid int, centroid array<long>",
-    )
-    _write_tiny_sidecar(
-        spark,
-        path + "_codebook",
-        [
-            (int(code), int(s), [int(x) for x in As[code, s]])
-            for code in range(len(As))
-            for s in range(m)
-        ],
-        "code int, s int, sub array<long>",
-    )
     # the lattice-scale stamp, PERSISTED (advice r09 #1): the in-memory
     # LatticeCodebook stamp was lost at this boundary, so an index built
     # with a non-default scale and later maintained/served with the
@@ -4525,21 +4534,16 @@ def write_ivfpq_index(
     sample_X = _hash_first_sample(
         corpus, scale, fit_sample, id_col, vec_col
     )
-    train_err = _lattice_quantization_error(sample_X, Cc, As)
-    train_coarse_err = _coarse_error(sample_X, Cc)
-    _write_tiny_sidecar(
-        spark,
-        path + "_meta",
-        [(int(scale), int(m), int(d), float(train_err),
-          float(train_coarse_err))],
-        "scale int, m int, d int, train_err double, train_coarse_err double",
+    meta = _TinySidecar(
+        [(int(scale), int(m), int(As.shape[2]),
+          float(_lattice_quantization_error(sample_X, Cc, As)),
+          float(_coarse_error(sample_X, Cc)))],
+        _META_DDL,
     )
-    if extra_cols:
-        # selectivity sidecars for the filtered ADC tier (verdict r09
-        # item 6) — same shape and maintenance story as the raw tier's
-        _write_ivf_list_stats(
-            spark.read.parquet(path), path, tuple(extra_cols)
-        )
+    _write_layout(
+        spark, path, _ivfpq_encode_pass(c, Cc, As, scale, extra_cols), Cc,
+        _LATTICE_CENTROID_DDL, meta, _codebook_sidecar(As), extra_cols,
+    )
     return Cc, As
 
 
@@ -4582,11 +4586,9 @@ def _ivfadc_quantizers(
                 corpus, n_centroids, id_col, vec_col, scale
             )
     elif coarse == "lloyd":
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double_vec(vec_col).alias("cv"),
+        cents = _fit_ivf_quantizer(
+            _vectors(corpus, id_col, vec_col), n_centroids, **fit_kw
         )
-        cents = _fit_ivf_quantizer(c, n_centroids, **fit_kw)
         Cc = np.floor(cents * scale + 0.5).astype(np.int64)
     else:
         raise ValueError(
@@ -4651,23 +4653,6 @@ def _read_ivfpq_meta(spark, path: str) -> dict:
     return meta
 
 
-def _resolve_index_scale(stored: int, given, caller: str) -> int:
-    """The persisted-scale trust rule: ``given=None`` means 'use the
-    stored stamp'; an EXPLICIT value must agree with the stamp or the
-    call dies loudly — the persistence-boundary half of the
-    :class:`LatticeCodebook` contract."""
-    if given is None:
-        return int(stored)
-    if int(given) != int(stored):
-        raise ValueError(
-            f"{caller}: index was built on the scale={stored} integer "
-            f"lattice but this call passed scale={given} — omit scale "
-            "(the _meta sidecar is authoritative) or pass the build's "
-            "value (shared-scale contract)"
-        )
-    return int(stored)
-
-
 def read_ivfpq_sidecars(spark, path: str):
     """(lattice centroid matrix, scale-stamped residual codebook, lattice
     scale) of a :func:`write_ivfpq_index` layout — the bounded search
@@ -4677,16 +4662,8 @@ def read_ivfpq_sidecars(spark, path: str):
 
     meta = _read_ivfpq_meta(spark, path)
     # driver-side sidecar reads (round 14): bounded metadata, no jobs
-    ct = _read_tiny_sidecar(
-        spark, path + "_centroids", "cid int, centroid array<long>"
-    )
-    cents = sorted(
-        zip(ct.column("cid").to_pylist(), ct.column("centroid").to_pylist())
-    )
-    Cc = np.array([c for _, c in cents], dtype=np.int64)
-    bt = _read_tiny_sidecar(
-        spark, path + "_codebook", "code int, s int, sub array<long>"
-    )
+    Cc = _read_centroids(spark, path, _LATTICE_CENTROID_DDL, np.int64)
+    bt = _read_tiny_sidecar(spark, path + "_codebook", _CODEBOOK_DDL)
     rows = bt.to_pylist()
     n_codes = max(r["code"] for r in rows) + 1
     m = max(r["s"] for r in rows) + 1
@@ -4749,23 +4726,27 @@ def _lattice_rebuild_defaults(spark, path, meta):
 
 
 def _layout_codec(
-    spark, path: str, caller: str, scale=None, split_mode=None
+    spark, path: str, caller: str, scale=None, **ivfadc_only
 ) -> tuple[_CellCodec, dict]:
     """(cell codec, ``_meta`` row) of a persisted IVF layout — the codec
     IS the stamp: a non-null lattice ``scale`` means IVFADC. One
     driver-side sidecar read, no Spark job; an unstamped layout raises
-    (:func:`_read_layout_meta`). ``scale``/``split_mode`` are the
-    caller's IVFADC-only arguments: passing either for a raw layout
-    raises, and an explicit ``scale`` must match the stamp
-    (:func:`_resolve_index_scale`)."""
+    (:func:`_read_layout_meta`). ``scale`` and ``ivfadc_only`` (e.g.
+    ``split_mode``, ``rerank``) are the caller's IVFADC-only arguments:
+    passing any of them for a raw layout raises, and an explicit
+    ``scale`` must match the stamp."""
     meta = _read_layout_meta(spark, path)
     # built per call, so the module functions are looked up when used
     # (tests swap them to inject crashes)
     if meta["scale"] is None:
-        if scale is not None or split_mode is not None:
+        given = [
+            name for name, value in {"scale": scale, **ivfadc_only}.items()
+            if value is not None
+        ]
+        if given:
             raise ValueError(
-                f"{caller}: scale and split_mode apply only to IVFADC "
-                f"layouts, but {path!r} is a raw-vector IVF layout"
+                f"{caller}: the IVFADC-only {' and '.join(given)} cannot "
+                f"apply to {path!r}, a raw-vector IVF layout"
             )
         return _CellCodec(
             kind="ivf",
@@ -4775,163 +4756,30 @@ def _layout_codec(
                 assign_to_centroids(rows, cents, extra_cols)
             ),
             fit_children=_fit_raw_children,
-            centroid_ddl="cid int, centroid array<double>",
+            centroid_ddl=_RAW_CENTROID_DDL,
             writer=write_ivf_index,
             rebuild_defaults=lambda spark, path, meta: {},
         ), meta
-    _resolve_index_scale(meta["scale"], scale, caller)
+    # the persisted-scale trust rule: no scale means the stamp; an
+    # EXPLICIT one must agree or the call dies loudly — the
+    # persistence-boundary half of the LatticeCodebook contract
+    if scale is not None and int(scale) != int(meta["scale"]):
+        raise ValueError(
+            f"{caller}: index was built on the scale={meta['scale']} "
+            f"integer lattice but this call passed scale={scale} — omit "
+            "scale (the _meta sidecar is authoritative) or pass the "
+            "build's value (shared-scale contract)"
+        )
     return _CellCodec(
         kind="ivfpq",
         layout_cols=("neighbor_id", "cv", "codes", "cid"),
         read=lambda spark, path: read_ivfpq_sidecars(spark, path)[:2],
         encode=_ivfpq_encode_pass,
         fit_children=_fit_lattice_children,
-        centroid_ddl="cid int, centroid array<long>",
+        centroid_ddl=_LATTICE_CENTROID_DDL,
         writer=write_ivfpq_index,
         rebuild_defaults=_lattice_rebuild_defaults,
     ), meta
-
-
-def ivfpq_index_topk(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    rerank: int = 4,
-    n_probe: int = 4,
-    scale: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Serve ANN from a persisted IVFADC layout: the shared PQ scan
-    (:func:`_pq_search`) with probe lists (:func:`_lattice_probe_lists`)
-    and per-(query, probed-list) residual LUTs from the sidecars
-    (bounded driver metadata, :func:`ivfpq_residual_topk`'s compact
-    slot-keyed shape); the candidate scan reads ONLY ``(neighbor_id,
-    cid, codes)`` of the PROBED partitions — partition pruning bounds
-    WHICH rows are read and column pruning bounds HOW MANY BYTES per
-    row (m×4 code bytes, never the D×8 vector) — and ADC is a pure LUT
-    gather per batch (codes were assigned at build). The exact re-rank
-    joins the ≤ Q·k·rerank candidates back to the layout's ``cv``
-    column. At any n_probe the output EQUALS :func:`ivfpq_residual_topk`
-    on the same corpus and derivations (the same probe lists and codes)
-    — which is what lets the catalog entry share the residual oracle.
-    ``path`` may be a versioned root (resolved through the serving
-    pointer, as the raw tier). ``n_probe < 1`` raises ``ValueError``."""
-    import numpy as np
-
-    path = _resolve_maybe_root(spark, path)
-    Cc, As, stored_scale = read_ivfpq_sidecars(spark, path)
-    scale = _resolve_index_scale(stored_scale, scale, "ivfpq_index_topk")
-    if not len(Cc):  # an empty layout: no list to probe
-        return local_frame(spark, [], _TOPK_DDL)
-    n_probe = _probe_count(n_probe, len(Cc))
-    q_rows = _lattice_queries(queries, id_col, vec_col, scale)
-    if not q_rows:
-        return local_frame(spark, [], _TOPK_DDL)
-    probe_idx = _lattice_probe_lists(q_rows, Cc, n_probe)
-    rows = (
-        spark.read.parquet(path)
-        .filter(F.col("cid").isin(np.unique(probe_idx).tolist()))
-        .select("neighbor_id", "cid", "codes")
-    )
-    stored = spark.read.parquet(path).select(
-        F.col("neighbor_id").alias(id_col), F.col("cv").alias(vec_col)
-    )
-    return _pq_search(
-        rows, stored, q_rows, As, probe_idx, len(Cc), k, rerank,
-        id_col, vec_col, Cc,
-    )
-
-
-def filtered_ivfpq_topk(
-    spark,
-    path: str,
-    queries: DataFrame,
-    filter_col: str = "label",
-    k: int = 5,
-    rerank: int = 4,
-    n_probe: int = 4,
-    scale: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """FILTERED search over a persisted IVFADC layout — the compressed
-    tier of :func:`filtered_ivf_topk`: the metadata mask is applied to
-    the (corpus row ⋈ probing query) pairs BEFORE ADC scoring, so the
-    candidate scan still reads only ``(neighbor_id, cid, codes,
-    filter_col)`` of probed partitions, and per-query probe EXPANSION
-    keeps scanning nearest-first lists until the query has ``k·rerank``
-    matched ADC candidates (the full re-rank pool) or every list is
-    exhausted — a selective filter cannot under-fill the way
-    post-filtering the unfiltered candidate list does.
-
-    Rounds run in the same relation-driven loop as
-    :func:`filtered_ivf_topk` (:func:`_filtered_probe_rounds`): probe
-    orders from the exact int64 lattice distances, ADC computed per
-    masked pair in one Arrow pass against the broadcast sidecars
-    (:func:`_adc_scores`), and the per-round candidate merge keeps the
-    per-query top-``k·rerank`` by the exact int64 (adc, neighbor_id)
-    order — ADC scores are a pure function of (row codes, query, row's
-    list), so the merged pool is exact over every list scanned so far
-    (the :func:`incremental_topk_update` argument, ADC flavor). A
-    ``<path>_stats_<filter_col>`` sidecar sizes the first probe set
-    (jump target = the k·rerank pool), changing no output by the same
-    fill(p) ≤ cum(p) argument. The final exact re-rank joins the pool
-    back to the layout's ``cv`` and the query relation.
-
-    At probe-all one round scans everything and the output equals the
-    residual pipeline restricted to matching labels — the hash-oracled
-    catalog configuration. NULL filter values match nothing on either
-    side (null-rejecting equality, the relational-oracle convention).
-    The layout must have been built with ``extra_cols=(filter_col,)``.
-    """
-    path = _resolve_maybe_root(spark, path)
-    Cc, As, stored_scale = read_ivfpq_sidecars(spark, path)
-    scale = _resolve_index_scale(stored_scale, scale, "filtered_ivfpq_topk")
-    if not len(Cc):
-        return local_frame(
-            spark, [], "query_id long, neighbor_id long, cos_sim double, rank int"
-        )
-    qdf = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            as_double_vec(vec_col).alias("qv"),
-            fixed_point_codes(as_double_vec(vec_col), scale).alias("qq"),
-            F.col(filter_col).alias("qval"),
-        )
-        .filter(F.col("qval").isNotNull())
-        .localCheckpoint(eager=True)
-    )
-    acc = _filtered_probe_rounds(
-        spark, path, qdf, "qq", Cc, filter_col, k * rerank, n_probe,
-        score=lambda pairs: _adc_scores(pairs, Cc, As),
-        order=F.col("adc").asc(),
-        score_ddl="adc long",
-    )
-    # exact re-rank: same arithmetic as _rerank_exact_cosine, with the
-    # query side joined as a relation instead of collected
-    exact = (
-        acc.select("query_id", "neighbor_id")
-        .join(
-            spark.read.parquet(path).select(
-                "neighbor_id", F.col("cv").alias("_cv")
-            ),
-            "neighbor_id",
-        )
-        .join(qdf.select("query_id", "qv"), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("_cv"), F.col("qv")), 4).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return exact.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
 
 
 def _adc_scores(pairs: DataFrame, Cc, As) -> DataFrame:
@@ -5095,14 +4943,6 @@ def retrain_ivfpq_codebook(
     live_cids = sorted(
         int(r["cid"]) for r in layout.select("cid").distinct().collect()
     )
-    book_df = _TinySidecar(
-        [
-            (int(code), int(s), [int(x) for x in As_new[code, s]])
-            for code in range(len(As_new))
-            for s in range(m)
-        ],
-        "code int, s int, sub array<long>",
-    )
     # re-baseline the drift trigger to the NEW codebook's error — on a
     # PRE-swap sample (vectors are unchanged by a codes-only re-encode,
     # so the sample is the same relation either way) so the codebook,
@@ -5123,11 +4963,11 @@ def retrain_ivfpq_codebook(
     meta_df = _TinySidecar(
         [(int(scale), int(m), int(d), float(new_train_err),
           None if old_coarse is None else float(old_coarse))],
-        "scale int, m int, d int, train_err double, train_coarse_err double",
+        _META_DDL,
     )
     _stage_and_swap_partitions(
         spark, path, live_cids, reencoded, "ivfpq_retrain",
-        sidecars={"_codebook": book_df, "_meta": meta_df},
+        sidecars={"_codebook": _codebook_sidecar(As_new), "_meta": meta_df},
     )
     return True
 

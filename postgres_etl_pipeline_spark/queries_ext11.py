@@ -188,7 +188,7 @@ def ivfpq_maintenance_tick_search(spark, sf_dir):
         # ADC cut, so the exact re-rank IS brute force (bounded driver
         # arithmetic — one count, computed above)
         k = 5
-        out = S.ivfpq_index_topk(
+        out = S.ivf_index_topk(
             spark, root, emb.filter(F.col("vec_id") < 20),
             # n_probe clamps to the live centroid count -> probe-all
             k=k, rerank=-(-int(n_corpus) // k), n_probe=1_000_000,

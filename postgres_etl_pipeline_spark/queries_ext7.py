@@ -418,7 +418,7 @@ def ivfpq_index_search(spark, sf_dir):
                 spark, [], "query_id long, neighbor_id long, cos_sim double, rank int"
             )
         S.write_ivfpq_index(emb, path, n_centroids=8, coarse="anchor")
-        out = S.ivfpq_index_topk(
+        out = S.ivf_index_topk(
             spark, path, emb.filter(F.col("vec_id") < 20),
             k=5, rerank=4, n_probe=8,
         )
@@ -442,15 +442,16 @@ def ivfpq_index_search(spark, sf_dir):
     "the ADC cut, never post-filtered), the scan reads only "
     "(neighbor_id, cid, codes, label) of probed partitions, and "
     "per-query probe expansion refills the k·rerank candidate pool for "
-    "selective filters through the same relation-driven rounds as "
-    "filtered_ivf_topk; probe-all hash-oracled against the residual "
+    "selective filters (filtered_ivf_topk reads the codec from the "
+    "layout and runs the raw codec's relation-driven rounds with the ADC "
+    "scorer); probe-all hash-oracled against the residual "
     "pipeline SQL with the label join",
     tags=("ext", "similarity"),
 )
 def filtered_ivfpq_search(spark, sf_dir):
     """Build the IVFADC layout with the label column persisted, search
-    probe-all with the same-label constraint — the compressed twin of
-    filtered_ivf_topk (scratch lifecycle as its siblings). The
+    it probe-all with filtered_ivf_topk, which reads the codec from the
+    layout (scratch lifecycle as its siblings). The
     probe-expansion fill path is pinned in tests/test_ivf_maintenance.py
     with a selective-label corpus at n_probe=1."""
     import shutil
@@ -469,7 +470,7 @@ def filtered_ivfpq_search(spark, sf_dir):
         S.write_ivfpq_index(
             emb, path, n_centroids=8, coarse="anchor", extra_cols=("label",)
         )
-        out = S.filtered_ivfpq_topk(
+        out = S.filtered_ivf_topk(
             spark, path, emb.filter(F.col("vec_id") < 20),
             filter_col="label", k=5, rerank=4, n_probe=8,
         )

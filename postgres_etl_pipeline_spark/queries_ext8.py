@@ -130,7 +130,7 @@ def ivfpq_delete_search(spark, sf_dir):
         S.delete_from_ivf_index(
             spark, path, emb.filter(F.col("vec_id") % 7 == 3)
         )
-        out = S.ivfpq_index_topk(
+        out = S.ivf_index_topk(
             spark, path, emb.filter(F.col("vec_id") < 20),
             k=5, rerank=4, n_probe=8,
         )
@@ -199,7 +199,7 @@ def ivfpq_drift_retrain(spark, sf_dir):
         S.retrain_ivfpq_codebook(
             spark, path, drift_threshold=0.0, mode="anchor"
         )
-        out = S.ivfpq_index_topk(
+        out = S.ivf_index_topk(
             spark, path, emb.filter(F.col("vec_id") < 20),
             k=5, rerank=4, n_probe=8,
         )
@@ -433,7 +433,7 @@ def ivfpq_append_resplit_search(spark, sf_dir):
         new_cents = S.resplit_ivf_cell(
             spark, path, n_sub=2, split_mode="anchor"
         )
-        out = S.ivfpq_index_topk(
+        out = S.ivf_index_topk(
             spark, path, emb.filter(F.col("vec_id") < 20),
             k=5, rerank=4, n_probe=len(new_cents),
         )

@@ -2,10 +2,10 @@
 layer — blue/green rebuilds become DEPLOYABLE (verdict r10 items 1 & 2).
 A `_current` pointer at an index ROOT names the live version; rebuilds
 write the next version dir and flip the pointer with ONE atomic
-create; readers (`ivf_index_topk` / `ivfpq_index_topk` / the filtered
-tiers) resolve through the root, so a rebuild is invisible to serving;
-`gc_retired_versions` bounds the rollback window and removes crashed
-half-built subtrees. The compressed tier gains the coarse-drift trigger
+create; readers (`ivf_index_topk` and `filtered_ivf_topk`, each serving
+both cell codecs) resolve through the root, so a rebuild is invisible
+to serving; `gc_retired_versions` bounds the rollback window and
+removes crashed half-built subtrees. The compressed tier gains the coarse-drift trigger
 the raw tier got in round 10 (`measure_ivf_coarse_drift` on an IVFADC
 layout — residual drift with cells fixed cannot see wholesale structure
 drift).
@@ -136,7 +136,7 @@ def ivfpq_coarse_rebuild_search(spark, sf_dir):
         vpath = S.rebuild_ivf_index_versioned(spark, root, force=True)
         assert vpath == S.resolve_index_path(spark, root)
         S.gc_retired_versions(spark, root, keep=1, min_age_sec=0.0)
-        out = S.ivfpq_index_topk(
+        out = S.ivf_index_topk(
             spark, root, emb.filter(F.col("vec_id") < 20),
             k=5, rerank=4, n_probe=8,
         )

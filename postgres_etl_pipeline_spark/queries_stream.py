@@ -741,7 +741,7 @@ def stream_ivfpq_maintenance(spark, sf_dir):
     from .operators.similarity import (
         LatticeCodebook,
         anchor_residual_codebook,
-        ivfpq_index_topk,
+        ivf_index_topk,
         lattice_anchor_centroids,
         write_ivfpq_index,
     )
@@ -765,7 +765,7 @@ def stream_ivfpq_maintenance(spark, sf_dir):
             spark, f"{sf_dir}/embeddings.parquet", _EMB_SCHEMA
         ).filter(F.col("vec_id") % 5 == 4)
         runner.run_ivf_maintenance_sink(st, path, checkpoint=scratch + "/ckpt")
-        out = ivfpq_index_topk(spark, path, queries, k=5, rerank=4, n_probe=8)
+        out = ivf_index_topk(spark, path, queries, k=5, rerank=4, n_probe=8)
         rows = out.collect()
         schema = out.schema
     finally:

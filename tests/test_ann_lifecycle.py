@@ -74,14 +74,14 @@ def test_scale_stamp_survives_persistence(spark, sf_small, tmp_path):
     S.write_ivfpq_index(emb, full, coarse_cents=Cc,
                         codebook=S.LatticeCodebook(As, 500), scale=500)
     q = _q(emb)
-    assert _rows(S.ivfpq_index_topk(spark, path, q, k=5, n_probe=8)) == _rows(
-        S.ivfpq_index_topk(spark, full, q, k=5, n_probe=8)
+    assert _rows(S.ivf_index_topk(spark, path, q, k=5, n_probe=8)) == _rows(
+        S.ivf_index_topk(spark, full, q, k=5, n_probe=8)
     )
     # explicit mismatch: every maintenance/serving surface dies loudly
     for fn in (
         lambda: S.append_to_ivf_index(emb.limit(1), path, scale=1000),
-        lambda: S.ivfpq_index_topk(spark, path, q, scale=1000),
-        lambda: S.filtered_ivfpq_topk(spark, path, q, scale=1000),
+        lambda: S.ivf_index_topk(spark, path, q, scale=1000),
+        lambda: S.filtered_ivf_topk(spark, path, q, scale=1000),
         lambda: S.resplit_ivf_cell(spark, path, scale=1000),
     ):
         with pytest.raises(ValueError, match="shared-scale"):
@@ -264,8 +264,8 @@ def test_ivfpq_delete_twin(spark, sf_small, tmp_path):
         emb.filter(F.col("vec_id") % 7 != 3), rebuilt,
         coarse_cents=Cc, codebook=S.LatticeCodebook(As, 1000),
     )
-    assert _rows(S.ivfpq_index_topk(spark, path, q, k=5, n_probe=8)) == _rows(
-        S.ivfpq_index_topk(spark, rebuilt, q, k=5, n_probe=8)
+    assert _rows(S.ivf_index_topk(spark, path, q, k=5, n_probe=8)) == _rows(
+        S.ivf_index_topk(spark, rebuilt, q, k=5, n_probe=8)
     )
 
 
@@ -293,8 +293,8 @@ def test_retrain_equals_one_shot_build(spark, sf_small, tmp_path):
     assert S.retrain_ivfpq_codebook(
         spark, split, drift_threshold=0.0, mode="anchor"
     ) is True
-    assert _rows(S.ivfpq_index_topk(spark, split, q, k=5, n_probe=8)) == _rows(
-        S.ivfpq_index_topk(spark, full, q, k=5, n_probe=8)
+    assert _rows(S.ivf_index_topk(spark, split, q, k=5, n_probe=8)) == _rows(
+        S.ivf_index_topk(spark, full, q, k=5, n_probe=8)
     )
 
 
@@ -562,9 +562,9 @@ def test_compaction_works_on_the_ivfpq_layout_too(spark, sf_small, tmp_path):
     )
     for r in range(1, 5):
         S.append_to_ivf_index(emb.filter(F.col("vec_id") % 5 == r), path)
-    before = _rows(S.ivfpq_index_topk(spark, path, q, k=5, n_probe=8))
+    before = _rows(S.ivf_index_topk(spark, path, q, k=5, n_probe=8))
     assert S.compact_ivf_cells(spark, path, target_bytes=1 << 30)
-    assert _rows(S.ivfpq_index_topk(spark, path, q, k=5, n_probe=8)) == before
+    assert _rows(S.ivf_index_topk(spark, path, q, k=5, n_probe=8)) == before
     # sidecars untouched by compaction
     Cc2, As2, scale2 = S.read_ivfpq_sidecars(spark, path)
     import numpy as np
@@ -751,8 +751,8 @@ def test_ivfpq_coarse_drift_trigger_and_versioned_rebuild(
     # full (old + drifted) corpus
     full = emb.unionByName(drifted)
     q = drifted.filter(F.col("vec_id") < 1_000_005)
-    got = _rows(S.ivfpq_index_topk(spark, root, q, k=5,
-                                   rerank=10_000, n_probe=16))
+    got = _rows(S.ivf_index_topk(spark, root, q, k=5,
+                                 rerank=10_000, n_probe=16))
     assert got == _rows(S.brute_force_topk(full, q, k=5))
 
 
@@ -985,10 +985,11 @@ def _has_codes(spark, path):
 def test_lifecycle_ops_read_the_codec_from_the_layout(
     spark, sf_small, tmp_path
 ):
-    """The same entry points run the raw-vector path on a write_ivf_index
-    layout and the IVFADC path on a write_ivfpq_index layout; an
-    unstamped layout raises the _meta ValueError before anything is
-    written, and the IVFADC-only arguments raise on a raw layout."""
+    """The same entry points — maintenance ops and both searches — run
+    the raw-vector path on a write_ivf_index layout and the IVFADC path
+    on a write_ivfpq_index layout; an unstamped layout raises the _meta
+    ValueError before anything is written or read, and the IVFADC-only
+    arguments raise on a raw layout."""
     import numpy as np
 
     emb = _emb(spark, sf_small)
@@ -1050,6 +1051,11 @@ def test_lifecycle_ops_read_the_codec_from_the_layout(
         S.resplit_ivf_cell(spark, raw, split_mode="anchor")
     with pytest.raises(ValueError, match="scale"):
         S.append_to_ivf_index(more, raw, scale=1000)
+    q = _q(emb)
+    for search in (S.ivf_index_topk, S.filtered_ivf_topk):
+        for kw in ({"rerank": 4}, {"scale": 1000}):
+            with pytest.raises(ValueError, match=next(iter(kw))):
+                search(spark, raw, q, **kw)
 
     # unstamped: no op may guess a codec
     import shutil
@@ -1063,6 +1069,8 @@ def test_lifecycle_ops_read_the_codec_from_the_layout(
             lambda: S.measure_ivf_coarse_drift(spark, path),
             lambda: S.rebuild_ivf_index(spark, path, path + "_new"),
             lambda: S.delete_from_ivf_index(spark, path, tombs),
+            lambda: S.ivf_index_topk(spark, path, q),
+            lambda: S.filtered_ivf_topk(spark, path, q),
         ):
             with pytest.raises(ValueError, match="_meta sidecar"):
                 op()

@@ -224,13 +224,13 @@ def test_ivfpq_probe_jump_same_output(spark, tmp_path):
     )
     assert S.read_ivf_list_stats(spark, path, "label") is not None
     with_stats = _rows(
-        S.filtered_ivfpq_topk(
+        S.filtered_ivf_topk(
             spark, path, q, filter_col="label", k=5, rerank=1, n_probe=1
         )
     )
     shutil.rmtree(path + "_stats_label")
     no_stats = _rows(
-        S.filtered_ivfpq_topk(
+        S.filtered_ivf_topk(
             spark, path, q, filter_col="label", k=5, rerank=1, n_probe=1
         )
     )
@@ -264,7 +264,7 @@ def test_distributed_tiers_take_the_selectivity_jump(spark, tmp_path):
         extra_cols=("label",),
     )
     got2 = _rows(
-        S.filtered_ivfpq_topk(
+        S.filtered_ivf_topk(
             spark, pq, q, filter_col="label", k=5, rerank=1, n_probe=1,
         )
     )
@@ -275,7 +275,7 @@ def test_distributed_tiers_take_the_selectivity_jump(spark, tmp_path):
 
     shutil.rmtree(pq + "_stats_label")
     assert got2 == _rows(
-        S.filtered_ivfpq_topk(
+        S.filtered_ivf_topk(
             spark, pq, q, filter_col="label", k=5, rerank=1, n_probe=1,
         )
     )
@@ -307,8 +307,8 @@ def test_stats_stay_true_through_codebook_retrain(spark, tmp_path):
     path = str(tmp_path / "pq")
     S.write_ivfpq_index(emb, path, n_centroids=4, extra_cols=("label",))
     want = _rows(
-        S.filtered_ivfpq_topk(spark, path, q, filter_col="label",
-                              k=5, n_probe=1)
+        S.filtered_ivf_topk(spark, path, q, filter_col="label",
+                            k=5, n_probe=1)
     )
     assert S.retrain_ivfpq_codebook(spark, path, force=True, mode="anchor")
     assert S.read_ivf_list_stats(spark, path, "label") is not None
@@ -316,8 +316,8 @@ def test_stats_stay_true_through_codebook_retrain(spark, tmp_path):
         spark, path
     )
     got = _rows(
-        S.filtered_ivfpq_topk(spark, path, q, filter_col="label",
-                              k=5, n_probe=1)
+        S.filtered_ivf_topk(spark, path, q, filter_col="label",
+                            k=5, n_probe=1)
     )
     assert got == want
 

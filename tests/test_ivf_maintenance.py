@@ -288,18 +288,16 @@ def test_ivfpq_index_probe_all_equals_residual_operator(
     """Persisted-codes search == the in-memory residual operator at
     probe-all and at a partial probe: code assignment is a pure function
     of (vector, sidecars), so encoding at build and encoding at search
-    are interchangeable, and both searches probe the same lists."""
+    are interchangeable, and both searches probe the same lists. The
+    search is ivf_index_topk with its defaults: it must read the IVFADC
+    codec from the layout (a raw search would probe by float distance to
+    the lattice centroids and score without the ADC pool)."""
     emb = _emb(spark, sf_small)
     q = emb.filter(F.col("vec_id") < 20)
     path = str(tmp_path / "index")
     S.write_ivfpq_index(emb, path, n_centroids=8, coarse="anchor")
     got = sorted(
-        map(
-            tuple,
-            S.ivfpq_index_topk(
-                spark, path, q, k=5, rerank=4, n_probe=n_probe
-            ).collect(),
-        )
+        map(tuple, S.ivf_index_topk(spark, path, q, n_probe=n_probe).collect())
     )
     twin = sorted(
         map(
@@ -327,10 +325,10 @@ def test_ivfpq_index_append_equals_one_shot_build(spark, sf_small, tmp_path):
     )
     S.append_to_ivf_index(emb.filter(F.col("vec_id") % 5 == 4), split)
     a = sorted(
-        map(tuple, S.ivfpq_index_topk(spark, full, q, k=5, n_probe=8).collect())
+        map(tuple, S.ivf_index_topk(spark, full, q, k=5, n_probe=8).collect())
     )
     b = sorted(
-        map(tuple, S.ivfpq_index_topk(spark, split, q, k=5, n_probe=8).collect())
+        map(tuple, S.ivf_index_topk(spark, split, q, k=5, n_probe=8).collect())
     )
     assert a == b
     # the appended rows' STORED codes are bit-identical to the full
@@ -409,7 +407,7 @@ def test_filtered_ivfpq_expansion_fills_pool_for_selective_label(spark, tmp_path
         emb, path, m=4, n_centroids=4, coarse="lloyd", kmeans_max_iter=5,
         extra_cols=("label",),
     )
-    out = S.filtered_ivfpq_topk(
+    out = S.filtered_ivf_topk(
         spark, path, q, filter_col="label", k=5, rerank=4, n_probe=1
     )
     got = sorted(map(tuple, out.collect()))
@@ -500,7 +498,7 @@ def test_ivfpq_resplit_invariants(spark, sf_small, tmp_path):
         for s in range(As.shape[1]):
             g = res[s] @ As[:, s, :].T
             assert r["codes"][s] == int(np.argmin(a_sq[:, s] - 2 * g)), r
-    out = S.ivfpq_index_topk(spark, path, q, k=5, rerank=4, n_probe=9)
+    out = S.ivf_index_topk(spark, path, q, k=5, rerank=4, n_probe=9)
     got = {}
     for row in out.collect():
         got.setdefault(row.query_id, set()).add(row.neighbor_id)

@@ -867,16 +867,18 @@ IVF_LIFECYCLE_OPS = (
     "append_to_ivf_index", "resplit_ivf_cell", "measure_ivf_coarse_drift",
     "rebuild_ivf_index", "build_ivf_index_versioned",
     "rebuild_ivf_index_versioned", "delete_from_ivf_index", "maintain_index",
+    "ivf_index_topk", "filtered_ivf_topk",
 )
 
 
 def test_ivf_lifecycle_ops_are_defined_once_for_both_codecs():
-    """Tooling guard: each IVF maintenance op is ONE function serving
-    both cell codecs (the codec comes from the layout's _meta stamp), so
-    no per-codec ``*_ivfpq_*`` twin of append, re-split, coarse drift,
-    rebuild, versioned build/rebuild or delete may reappear, and neither
-    the ANN module nor the streaming runner takes a ``kind`` /
-    ``index_kind`` option that the stamp already determines."""
+    """Tooling guard: each IVF maintenance op and persisted-index search
+    is ONE function serving both cell codecs (the codec comes from the
+    layout's _meta stamp), so no per-codec ``*_ivfpq_*`` twin of append,
+    re-split, coarse drift, rebuild, versioned build/rebuild, delete,
+    search or filtered search may reappear, and neither the ANN module
+    nor the streaming runner takes a ``kind`` / ``index_kind`` option
+    that the stamp already determines."""
     root = Path(__file__).resolve().parent.parent / "postgres_etl_pipeline_spark"
     tree = ast.parse((root / "operators/similarity.py").read_text())
     defs = Counter(
@@ -884,8 +886,10 @@ def test_ivf_lifecycle_ops_are_defined_once_for_both_codecs():
     )
     assert all(defs[op] == 1 for op in IVF_LIFECYCLE_OPS), defs
     twin = re.compile(
-        r".*ivfpq.*(append|resplit|coarse_drift|rebuild|versioned|delete).*"
-        r"|.*(append|resplit|coarse_drift|rebuild|versioned|delete).*ivfpq.*"
+        r".*ivfpq.*(append|resplit|coarse_drift|rebuild|versioned|delete"
+        r"|index_topk).*"
+        r"|.*(append|resplit|coarse_drift|rebuild|versioned|delete"
+        r"|filtered).*ivfpq.*"
     )
     assert not [name for name in defs if twin.fullmatch(name)]
     for rel in ("operators/similarity.py", "streaming/runner.py"):

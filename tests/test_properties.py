@@ -842,7 +842,7 @@ def test_ivfpq_append_delete_commute(spark, sf_small, order):
             _pq_maint_ref["ref"] = sorted(
                 map(
                     tuple,
-                    S.ivfpq_index_topk(
+                    S.ivf_index_topk(
                         spark, ref_path, q, k=5, rerank=4, n_probe=8
                     ).collect(),
                 )
@@ -861,7 +861,7 @@ def test_ivfpq_append_delete_commute(spark, sf_small, order):
         got = sorted(
             map(
                 tuple,
-                S.ivfpq_index_topk(
+                S.ivf_index_topk(
                     spark, path, q, k=5, rerank=4, n_probe=8
                 ).collect(),
             )
@@ -961,7 +961,7 @@ def test_ivfpq_resplit_interleavings_commute_at_exactness(
         got = sorted(
             map(
                 tuple,
-                S.ivfpq_index_topk(
+                S.ivf_index_topk(
                     spark, path, q, k=5, rerank=10_000,
                     n_probe=len(Cc2),
                 ).collect(),

@@ -477,7 +477,7 @@ def test_retrain_repairs_recall_after_synthetic_drift(spark, sf_small, tmp_path)
     exact = _topk_sets(S.brute_force_topk(full, queries, k=5))
     def recall():
         got = _topk_sets(
-            S.ivfpq_index_topk(spark, path, queries, k=5, rerank=2, n_probe=8)
+            S.ivf_index_topk(spark, path, queries, k=5, rerank=2, n_probe=8)
         )
         return sum(len(got.get(q, set()) & exact[q]) / 5 for q in exact) / len(exact)
     r_before = recall()
@@ -532,6 +532,8 @@ def test_zero_norm_vectors_score_null_and_rank_last_in_every_tier(spark):
     ]
 
 
+# "ivfpq_index_topk" and "filtered_ivfpq_topk" name the persisted searches
+# on an IVFADC layout
 _IVF_SEARCHES = {
     "ivf_topk": lambda spark, emb, q, idx, n: S.ivf_topk(
         emb, q, n_centroids=4, n_probe=n
@@ -548,10 +550,10 @@ _IVF_SEARCHES = {
     "ivfpq_residual_topk": lambda spark, emb, q, idx, n: S.ivfpq_residual_topk(
         emb, q, n_centroids=4, n_probe=n
     ),
-    "ivfpq_index_topk": lambda spark, emb, q, idx, n: S.ivfpq_index_topk(
+    "ivfpq_index_topk": lambda spark, emb, q, idx, n: S.ivf_index_topk(
         spark, idx["pq"], q, n_probe=n
     ),
-    "filtered_ivfpq_topk": lambda spark, emb, q, idx, n: S.filtered_ivfpq_topk(
+    "filtered_ivfpq_topk": lambda spark, emb, q, idx, n: S.filtered_ivf_topk(
         spark, idx["pq"], q, n_probe=n
     ),
 }
@@ -584,11 +586,16 @@ def test_every_ivf_search_rejects_n_probe_below_one(
         assert over == sorted(map(tuple, search(spark, emb, q, idx, 4).collect()))
 
 
-# Spark jobs of one warm call (search + collect) at the parent commit of
-# the shared PQ kernel (sf0.001, jobs_during).
+# Spark jobs of one warm call (search + collect, sf0.001, jobs_during) at
+# the parent commit of the shared PQ kernel; the persisted-index searches
+# (ivf_index_topk / filtered_ivf_topk on a raw or an IVFADC layout, the
+# "ivfpq_index_topk" key being the former on an IVFADC layout) at the
+# parent of their codec dispatch, where each codec had its own search.
 _PQ_PARENT_JOBS = {
     "pq_topk": 11, "ivfpq_topk": 17, "ivfpq_residual_topk": 16,
-    "ivfpq_index_topk": 9,
+    "ivfpq_index_topk": 9, "ivf_index_topk_raw": 6,
+    "filtered_ivf_topk_raw": 27,
+    "filtered_ivf_topk_ivfadc": 30,
 }
 
 
@@ -596,12 +603,23 @@ _PQ_PARENT_JOBS = {
 def test_warm_pq_searches_run_no_more_jobs(
     spark, sf_small, tmp_path, jobs_during, name
 ):
-    """The shared PQ scan keeps every PQ search's Spark job count."""
+    """The shared PQ scan keeps every PQ search's Spark job count, and
+    the codec dispatch of the persisted-index searches adds no job on
+    either codec."""
     emb = spread(t(spark, sf_small, "embeddings"))
     q = emb.filter(F.col("vec_id") < 20)
     path = str(tmp_path / "idx")
     if name == "ivfpq_index_topk":
         S.write_ivfpq_index(emb, path, n_centroids=8, coarse="anchor")
+    elif name.endswith("_raw"):
+        S.write_ivf_index(
+            emb, path, n_centroids=8, kmeans_max_iter=2,
+            kmeans_init="random", extra_cols=("label",),
+        )
+    elif name.endswith("_ivfadc"):
+        S.write_ivfpq_index(
+            emb, path, n_centroids=8, coarse="anchor", extra_cols=("label",)
+        )
     searches = {
         "pq_topk": lambda: S.pq_topk(emb, q, k=5, rerank=4),
         "ivfpq_topk": lambda: S.ivfpq_topk(
@@ -611,7 +629,16 @@ def test_warm_pq_searches_run_no_more_jobs(
         "ivfpq_residual_topk": lambda: S.ivfpq_residual_topk(
             emb, q, k=5, rerank=4, n_centroids=8, n_probe=2, coarse="anchor"
         ),
-        "ivfpq_index_topk": lambda: S.ivfpq_index_topk(
+        "ivfpq_index_topk": lambda: S.ivf_index_topk(
+            spark, path, q, k=5, rerank=4, n_probe=2
+        ),
+        "ivf_index_topk_raw": lambda: S.ivf_index_topk(
+            spark, path, q, k=5, n_probe=2
+        ),
+        "filtered_ivf_topk_raw": lambda: S.filtered_ivf_topk(
+            spark, path, q, k=5, n_probe=2
+        ),
+        "filtered_ivf_topk_ivfadc": lambda: S.filtered_ivf_topk(
             spark, path, q, k=5, rerank=4, n_probe=2
         ),
     }

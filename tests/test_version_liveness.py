@@ -529,5 +529,5 @@ def test_maintain_index_tick_on_ivfpq_root(spark, sf_small, tmp_path):
     rep = S.maintain_index(spark, root, gc_min_age_sec=0.0)
     assert rep["rebuilt_to"] is None and rep["retrained"] is False
     assert rep["coarse_baseline"] > 0
-    out = S.ivfpq_index_topk(spark, root, _q(emb), k=5, n_probe=4)
+    out = S.ivf_index_topk(spark, root, _q(emb), k=5, n_probe=4)
     assert out.count() > 0
