@@ -149,10 +149,10 @@ def stream_dedup_lineitem(spark, sf_dir):
 # the running totals state, so the totals entry is a projection of the same
 # drained stream — Structured Streaming startup/drain is the dominant cost
 # of every stream_* entry and this halves it for the stateful pair. The
-# totals-specific operator (jobs.stateful_user_totals) keeps its own
-# multi-batch semantics coverage in tests/test_streaming.py. The drained
-# result is localCheckpoint'd so later memory-sink runs can't mutate it;
-# the cache is keyed by (Spark application, sf_dir).
+# profile operator's multi-batch running totals are pinned in
+# tests/test_streaming.py. The drained result is localCheckpoint'd so
+# later memory-sink runs can't mutate it; the cache is keyed by (Spark
+# application, sf_dir).
 _PROFILE_DRAIN: dict[tuple[str, str], "object"] = {}
 
 
@@ -199,9 +199,8 @@ def _profile_final(spark, sf_dir):
     """,
     survey="§2.9/§2.8: custom stateful op (applyInPandasWithState) — running"
     " per-user totals as a projection of the shared profile drain (the"
-    " profile state strictly refines the totals state); the dedicated"
-    " totals operator's multi-batch semantics are pinned in"
-    " tests/test_streaming.py",
+    " profile state strictly refines the totals state); its multi-batch"
+    " running totals are pinned in tests/test_streaming.py",
     tags=("streaming",),
 )
 def stream_stateful_user_totals(spark, sf_dir):

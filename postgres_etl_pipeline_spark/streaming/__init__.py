@@ -20,7 +20,6 @@ from .jobs import (
     session_window_agg,
     sliding_counts,
     stateful_user_profile,
-    stateful_user_totals,
     static_enrich,
     tumbling_counts,
 )
@@ -33,7 +32,6 @@ __all__ = [
     "session_window_agg",
     "sliding_counts",
     "stateful_user_profile",
-    "stateful_user_totals",
     "static_enrich",
     "tumbling_counts",
     "run_cdc_sink",

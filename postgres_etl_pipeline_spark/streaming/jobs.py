@@ -164,53 +164,6 @@ def daily_mart_stream(
     )
 
 
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
-_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
-
-
-def _user_totals_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (n, total) = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    # inputs are 2-dp measures: re-round so the running float total stays
-    # exactly representable (oracle computes it in DECIMAL)
-    total = round(total, 2)
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-    )
-
-
-def stateful_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator: running per-user event count + value total
-    via ``applyInPandasWithState`` (SURVEY §7: the escape hatch for
-    semantics no built-in stateful op expresses; here the semantics *are*
-    expressible as a windowless agg, which is exactly what makes the op
-    oracle-checkable — each trigger emits the updated running totals).
-    """
-    return events.groupBy("user_id").applyInPandasWithState(
-        _user_totals_fn,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 _PROFILE_STATE_SCHEMA = T.StructType(
     [
         T.StructField("n_events", T.LongType()),

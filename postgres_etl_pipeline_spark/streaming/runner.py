@@ -8,7 +8,7 @@ results queryable as a table, which is how streaming queries plug into the
 driver's DuckDB-oracle harness.
 
 At 100 TB the same jobs run with ``trigger(processingTime=...)`` writing to
-parquet/Delta via foreachBatch (connectors.sinks.merge_upsert for the
+parquet/Delta via foreachBatch (connectors.sinks.upsert_parquet for the
 idempotent keyed-upsert path); only the sink/trigger choice changes, never
 the transformation.
 """
@@ -41,17 +41,20 @@ item 8): the tmpfs fast path below is a local-mode assumption, so a
 production deployment sets this to a durable location (an HDFS/S3 URI or
 a mounted path) and every drain that did not pass an explicit
 ``checkpoint=`` lands its checkpoint under it. Explicit ``checkpoint``
-arguments always win — this only replaces the *default*."""
+arguments always win — this only replaces the *default*. A default
+checkpoint is scratch wherever it lives: the drain deletes it once the
+query has stopped, so a drain that must resume where it left off passes
+``checkpoint=``."""
 
 
 def _scratch_checkpoint(prefix: str) -> str:
-    """Checkpoint dir for a BOUNDED drain whose sink is already
-    non-durable (memory table / idempotent keyed upsert): prefer tmpfs
+    """Scratch checkpoint dir for one BOUNDED drain that was given no
+    ``checkpoint``: a fresh random path that no later drain can find, so
+    :func:`_drain` deletes it after the query stops. Prefers tmpfs
     (/dev/shm) so the per-batch WAL+offset fsyncs don't pay disk latency —
-    measured ~0.2-0.4s per drain locally. Durable pipelines pass their own
-    ``checkpoint`` on real storage, or set ``SPARK_GRAFT_STREAM_CKPT_BASE``
-    to re-point this default at durable storage fleet-wide; the tmpfs
-    default is only for the ephemeral-by-construction local case."""
+    measured ~0.2-0.4s per drain locally. ``SPARK_GRAFT_STREAM_CKPT_BASE``
+    re-points it at other storage; a restartable drain passes its own
+    ``checkpoint`` on real storage, which is never deleted."""
     base = os.environ.get(STREAM_CHECKPOINT_BASE_ENV)
     if base:
         if "://" in base:
@@ -87,6 +90,54 @@ def _maybe_state_partitions(spark, state_partitions: int | None):
     )
 
 
+def _hadoop_path(spark, path: str):
+    """(FileSystem, Path) for ``path`` through Hadoop, so local dirs and
+    remote URIs take the same code."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _drain(
+    stream_df: DataFrame,
+    checkpoint: str | None,
+    prefix: str,
+    label: str,
+    timeout_s: float,
+    foreach_batch=None,
+    memory: tuple[str, str] | None = None,
+) -> None:
+    """The one availableNow drain behind every sink below: run
+    ``stream_df`` through ``foreach_batch`` — or into the memory table
+    ``memory`` = (query name, output mode) — until the source is drained,
+    raise ``TimeoutError`` after ``timeout_s``, and stop the query
+    whatever happened. Without ``checkpoint`` the drain runs on a
+    ``prefix``-named scratch checkpoint and deletes it after the query
+    stops (success, timeout or failed batch alike)."""
+    writer = stream_df.writeStream
+    if foreach_batch is not None:
+        writer = writer.foreachBatch(foreach_batch)
+    else:
+        writer = writer.format("memory").queryName(memory[0]).outputMode(memory[1])
+    ckpt = checkpoint or _scratch_checkpoint(prefix)
+    try:
+        q = (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            # awaitTermination returns False on timeout — a PARTIAL result
+            # must surface as a timeout, never as silently-wrong data
+            if not q.awaitTermination(timeout_s):
+                raise TimeoutError(f"{label} did not finish within {timeout_s}s")
+        finally:
+            q.stop()
+    finally:
+        if not checkpoint:
+            fs, jpath = _hadoop_path(stream_df.sparkSession, ckpt)
+            fs.delete(jpath, True)
+
+
 def run_to_memory(
     stream_df: DataFrame,
     name: str | None = None,
@@ -103,27 +154,12 @@ def run_to_memory(
     callers own the batch-count semantics (see tests).
     """
     qname = name or f"q_{uuid.uuid4().hex[:12]}"
-    ckpt = checkpoint or _scratch_checkpoint(f"ckpt_{qname}_")
     with _maybe_state_partitions(stream_df.sparkSession, state_partitions):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _drain(
+            stream_df, checkpoint, f"ckpt_{qname}_",
+            f"streaming drain '{qname}'", timeout_s,
+            memory=(qname, output_mode),
         )
-        try:
-            # awaitTermination returns False on timeout — a PARTIAL memory
-            # table must surface as a timeout, never as silently-wrong data
-            finished = q.awaitTermination(timeout_s)
-            if not finished:
-                raise TimeoutError(
-                    f"streaming drain '{qname}' did not finish within {timeout_s}s"
-                )
-        finally:
-            if q.isActive:
-                q.stop()
     return stream_df.sparkSession.table(qname)
 
 
@@ -148,8 +184,6 @@ def run_upsert_sink(
 
     from ..connectors.sinks import upsert_parquet
 
-    ckpt = checkpoint or _scratch_checkpoint("ckpt_upsert_")
-
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         # last-write-wins: order_by columns rank DESCENDING (newest first;
         # upsert_parquet keeps rank 1, incoming beating existing on ties)
@@ -161,21 +195,10 @@ def run_upsert_sink(
             [F.col(c).desc() for c in order_by],
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream_df, checkpoint, "ckpt_upsert_",
+        f"upsert drain to '{target_path}'", timeout_s, _apply,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"upsert drain to '{target_path}' did not finish within {timeout_s}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 def run_cdc_sink(
@@ -200,8 +223,6 @@ def run_cdc_sink(
     """
     from ..connectors.sinks import cdc_merge_parquet
 
-    ckpt = checkpoint or _scratch_checkpoint("ckpt_cdc_")
-
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         cdc_merge_parquet(
             batch_df.sparkSession,
@@ -213,21 +234,10 @@ def run_cdc_sink(
             delete_op=delete_op,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream_df, checkpoint, "ckpt_cdc_",
+        f"cdc drain to '{target_path}'", timeout_s, _apply,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"cdc drain to '{target_path}' did not finish within {timeout_s}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 def run_cdc_jdbc_sink(
@@ -258,8 +268,6 @@ def run_cdc_jdbc_sink(
     """
     from ..connectors.sinks import drain_changelog_jdbc
 
-    ckpt = checkpoint or _scratch_checkpoint("ckpt_cdc_jdbc_")
-
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         drain_changelog_jdbc(
             batch_df.sparkSession,
@@ -274,21 +282,10 @@ def run_cdc_jdbc_sink(
             write_options=write_options,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream_df, checkpoint, "ckpt_cdc_jdbc_",
+        f"cdc jdbc drain to '{target}'", timeout_s, _apply,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"cdc jdbc drain to '{target}' did not finish within {timeout_s}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 def read_state_or_empty(spark, path: str, schema: str) -> DataFrame:
@@ -303,9 +300,7 @@ def read_state_or_empty(spark, path: str, schema: str) -> DataFrame:
     indistinguishable from a first increment, and the very next
     state-rewrite would persist the truncated relation, silently
     discarding all accumulated state (advice r08 #2)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _hadoop_path(spark, path)
     if not fs.exists(jpath):
         return local_frame(spark, [], schema)
     return spark.read.schema(schema).parquet(path)
@@ -365,7 +360,6 @@ def run_minhash_admission_sink(
     bands_path = os.path.join(state_dir, "bands")
     seen_path = os.path.join(state_dir, "seen")
     admitted_path = os.path.join(state_dir, "admitted")
-    ckpt = checkpoint or _scratch_checkpoint("ckpt_minhash_adm_")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -404,22 +398,31 @@ def run_minhash_admission_sink(
         )
         upsert_parquet(spark, batch, seen_path, ["doc_id"], [F.col("doc_id")])
 
-    q = (
-        stream_docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream_docs, checkpoint, "ckpt_minhash_adm_",
+        f"minhash admission drain to '{state_dir}'", timeout_s, _apply,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"minhash admission drain to '{state_dir}' did not finish "
-                f"within {timeout_s}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+
+
+def _merge_topk_state(
+    batch_df: DataFrame, topk_path: str, q_static: DataFrame, k: int,
+    id_col: str, vec_col: str,
+) -> None:
+    """Fold one micro-batch of vectors into the served per-query top-k
+    state at ``topk_path`` (query_id, neighbor_id, cos_sim) and
+    sibling-swap it into place."""
+    from ..connectors.sinks import _swap_into_place
+    from ..operators.similarity import incremental_topk_update
+
+    spark = batch_df.sparkSession
+    state = read_state_or_empty(
+        spark, topk_path, "query_id long, neighbor_id long, cos_sim double"
+    )
+    updated = incremental_topk_update(
+        state, batch_df, q_static, k=k, id_col=id_col, vec_col=vec_col
+    ).select("query_id", "neighbor_id", "cos_sim")
+    # cut lineage before the swap deletes the directory the plan reads
+    _swap_into_place(spark, updated.localCheckpoint(eager=True), topk_path, "topk")
 
 
 def run_topk_maintenance_sink(
@@ -446,43 +449,16 @@ def run_topk_maintenance_sink(
     Seed it with the historical corpus's top-k (or leave absent for a
     cold start — the first batch creates it).
     """
-    from pyspark.sql import functions as F  # noqa: F401 (parity w/ siblings)
-
-    from ..connectors.sinks import _swap_into_place
-    from ..operators.similarity import incremental_topk_update
-
     topk_path = os.path.join(state_dir, "topk")
-    ckpt = checkpoint or _scratch_checkpoint("ckpt_topk_maint_")
     q_static = queries.select(id_col, vec_col).localCheckpoint(eager=True)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        state = read_state_or_empty(
-            spark, topk_path, "query_id long, neighbor_id long, cos_sim double"
-        )
-        updated = incremental_topk_update(
-            state, batch_df, q_static, k=k, id_col=id_col, vec_col=vec_col
-        ).select("query_id", "neighbor_id", "cos_sim")
-        # cut lineage before the swap deletes the directory the plan reads
-        updated = updated.localCheckpoint(eager=True)
-        _swap_into_place(spark, updated, topk_path, "topk")
+        _merge_topk_state(batch_df, topk_path, q_static, k, id_col, vec_col)
 
-    q = (
-        stream_vectors.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream_vectors, checkpoint, "ckpt_topk_maint_",
+        f"top-k maintenance drain to '{state_dir}'", timeout_s, _apply,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"top-k maintenance drain to '{state_dir}' did not finish "
-                f"within {timeout_s}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 def run_ivf_maintenance_sink(
@@ -567,12 +543,15 @@ def run_ivf_maintenance_sink(
     cadence (the stream_maintenance_tick catalog entry pins exactly
     that)."""
     from ..operators.similarity import (
+        WriterLeaseHeld,
+        _resolve_maybe_root,
         append_to_ivf_index,
         delete_from_ivf_index,
-        incremental_topk_update,
         maintain_index,
+        recover_interrupted_partition_swap,
     )
 
+    spark = stream_vectors.sparkSession
     if op_col is not None and queries is not None:
         raise ValueError(
             "op_col (tombstone deletes) cannot be combined with queries "
@@ -600,15 +579,8 @@ def run_ivf_maintenance_sink(
     # lease, so a rebuild mid-drain flips the next batch to the new
     # version instead of silently losing it); recovery runs on the
     # currently-live layout
-    from ..operators.similarity import (
-        _resolve_maybe_root,
-        recover_interrupted_partition_swap,
-    )
-
-    recover_interrupted_partition_swap(
-        stream_vectors.sparkSession,
-        _resolve_maybe_root(stream_vectors.sparkSession, index_path),
-    )
+    live = _resolve_maybe_root(spark, index_path)
+    recover_interrupted_partition_swap(spark, live)
     if maintenance_every_n_batches is not None or final_maintenance_kw is not None:
         if (
             maintenance_every_n_batches is not None
@@ -623,10 +595,7 @@ def run_ivf_maintenance_sink(
         # foreachBatch (the advice-r09-#4 call-time-validation rule);
         # _resolve_maybe_root returns the path UNCHANGED iff it is not a
         # published versioned root
-        if (
-            _resolve_maybe_root(stream_vectors.sparkSession, index_path)
-            == index_path
-        ):
+        if live == index_path:
             raise ValueError(
                 "maintenance ticks require index_path to be a VERSIONED "
                 f"ROOT (got the plain layout path {index_path!r}) — "
@@ -638,24 +607,14 @@ def run_ivf_maintenance_sink(
         # own slot (no self-race), but an EXTERNAL maintenance writer
         # can legitimately hold the lease — back off and retry, then
         # re-raise loudly
-        from ..operators.similarity import WriterLeaseHeld
-
-        last: Exception | None = None
         for attempt in range(_TICK_RETRIES):
             try:
-                return maintain_index(
-                    stream_vectors.sparkSession, index_path, **(kw or {})
-                )
-            except WriterLeaseHeld as e:
-                last = e
+                return maintain_index(spark, index_path, **(kw or {}))
+            except WriterLeaseHeld:
+                if attempt == _TICK_RETRIES - 1:
+                    raise
                 time.sleep(_TICK_BACKOFF_S * (attempt + 1))
-        assert last is not None
-        raise last
 
-    def _append(df: DataFrame) -> None:
-        append_to_ivf_index(df, index_path, id_col, vec_col, extra_cols)
-
-    ckpt = checkpoint or _scratch_checkpoint("ckpt_ivf_maint_")
     topk_path = os.path.join(state_dir, "topk") if state_dir else None
     q_static = (
         queries.select(id_col, vec_col).localCheckpoint(eager=True)
@@ -665,8 +624,17 @@ def run_ivf_maintenance_sink(
 
     n_done = {"batches": 0}
 
-    def _process(batch_df: DataFrame, spark) -> None:
-        if op_col is not None:
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            # availableNow emits one empty batch on an empty source; an
+            # empty append is a no-op by definition and must not trip the
+            # untrained-index guard (or rewrite the topk state)
+            return
+        if op_col is None:
+            append_to_ivf_index(batch_df, index_path, id_col, vec_col, extra_cols)
+            if q_static is not None:
+                _merge_topk_state(batch_df, topk_path, q_static, k, id_col, vec_col)
+        else:
             from pyspark.sql import functions as F
 
             inserts = batch_df.filter(F.col(op_col) != "D").drop(op_col)
@@ -675,32 +643,11 @@ def run_ivf_maintenance_sink(
             # (same empty-batch discipline as above), and deletes run
             # LAST so a same-batch insert+delete nets to absent
             if not inserts.isEmpty():
-                _append(inserts)
+                append_to_ivf_index(inserts, index_path, id_col, vec_col, extra_cols)
             if not tombs.isEmpty():
-                delete_from_ivf_index(spark, index_path, tombs, id_col)
-            return
-        _append(batch_df)
-        if q_static is None:
-            return
-        from ..connectors.sinks import _swap_into_place
-
-        state = read_state_or_empty(
-            spark, topk_path, "query_id long, neighbor_id long, cos_sim double"
-        )
-        updated = incremental_topk_update(
-            state, batch_df, q_static, k=k, id_col=id_col, vec_col=vec_col
-        ).select("query_id", "neighbor_id", "cos_sim")
-        updated = updated.localCheckpoint(eager=True)  # cut lineage pre-swap
-        _swap_into_place(spark, updated, topk_path, "topk")
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            # availableNow emits one empty batch on an empty source; an
-            # empty append is a no-op by definition and must not trip the
-            # untrained-index guard (or rewrite the topk state)
-            return
-        _process(batch_df, spark)
+                delete_from_ivf_index(
+                    batch_df.sparkSession, index_path, tombs, id_col
+                )
         n_done["batches"] += 1
         if (
             maintenance_every_n_batches is not None
@@ -711,22 +658,10 @@ def run_ivf_maintenance_sink(
             # only possible lease conflict is an external writer
             _tick(maintenance_kw)
 
-    q = (
-        stream_vectors.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream_vectors, checkpoint, "ckpt_ivf_maint_",
+        f"ivf maintenance drain to '{index_path}'", timeout_s, _apply,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"ivf maintenance drain to '{index_path}' did not finish "
-                f"within {timeout_s}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
     if final_maintenance_kw is not None:
         # the post-drain tick (e.g. a forced blue/green rebuild + GC
         # once the backlog is in) — same retry discipline
@@ -772,7 +707,6 @@ def run_nb_scoring_sink(
     nb = n_buckets or C.DEFAULT_N_BUCKETS
     model = model.localCheckpoint(eager=True)
     prior = prior.localCheckpoint(eager=True)
-    ckpt = checkpoint or _scratch_checkpoint("ckpt_nb_score_")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -782,19 +716,7 @@ def run_nb_scoring_sink(
         ).localCheckpoint(eager=True)  # pin before the state swap below
         upsert_parquet(spark, scored, out_path, [id_col], [F.col(id_col)])
 
-    q = (
-        stream_docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream_docs, checkpoint, "ckpt_nb_score_",
+        f"nb scoring drain to '{out_path}'", timeout_s, _apply,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"nb scoring drain to '{out_path}' did not finish "
-                f"within {timeout_s}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()

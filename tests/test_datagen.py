@@ -211,6 +211,9 @@ def test_stream_drain_consumes_every_arrived_run(spark, tmp_path):
             stream, target, ["run_id", "txn_id"], ["event_time"],
             checkpoint=str(tmp_path / "ckpt"),
         )
+        # an explicit checkpoint is kept: the keyed upsert is idempotent,
+        # so the row counts alone would not notice a replay from scratch
+        assert (tmp_path / "ckpt" / "offsets").is_dir()
         rows = spark.read.parquet(target).select("run_id").collect()
         return len(rows), {r.run_id for r in rows}
 

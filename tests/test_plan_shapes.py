@@ -829,7 +829,6 @@ PYTHON_WORKER_SITES = Counter({
     "operators/similarity.py:_adc_scores": 1,
     "operators/text.py:ngram_udtf": 1,
     "operators/timeseries.py:grouped_ewma": 1,
-    "streaming/jobs.py:stateful_user_totals": 1,
     "streaming/jobs.py:stateful_user_profile": 1,
     "streaming/jobs.py:stateful_user_profile_tws": 1,
 })
@@ -861,6 +860,36 @@ def test_python_worker_call_sites_are_pinned():
         rel = path.relative_to(root).as_posix()
         visit(ast.parse(path.read_text(), filename=str(path)), rel, None)
     assert found == PYTHON_WORKER_SITES
+
+
+STREAM_DRAIN_CALLS = ("writeStream", "trigger", "awaitTermination")
+
+
+def test_stream_drain_is_written_once():
+    """Tooling guard: every availableNow drain in the package starts,
+    awaits and stops its query through the one helper
+    ``streaming/runner.py:_drain``, the only place that builds a
+    ``writeStream``, sets a ``trigger`` or calls ``awaitTermination``,
+    so a second drain cannot bypass its timeout and scratch-checkpoint
+    cleanup."""
+    root = Path(__file__).resolve().parent.parent / "postgres_etl_pipeline_spark"
+    found = Counter()
+
+    def visit(node, rel, fn):
+        for child in ast.iter_child_nodes(node):
+            inner = fn
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            if isinstance(child, ast.Attribute) and child.attr in STREAM_DRAIN_CALLS:
+                found[f"{rel}:{fn}.{child.attr}"] += 1
+            visit(child, rel, inner)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        visit(ast.parse(path.read_text(), filename=str(path)), rel, None)
+    assert found == Counter(
+        {f"streaming/runner.py:_drain.{call}": 1 for call in STREAM_DRAIN_CALLS}
+    )
 
 
 IVF_LIFECYCLE_OPS = (

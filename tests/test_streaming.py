@@ -17,7 +17,7 @@ from postgres_etl_pipeline_spark.streaming import (
     daily_mart_stream,
     dedup_within_watermark,
     run_to_memory,
-    stateful_user_totals,
+    stateful_user_profile,
     stream_ndjson_txns,
     tumbling_counts,
 )
@@ -184,8 +184,10 @@ def test_stateful_user_totals_accumulates_across_batches(spark, tmp_path):
         str(tmp_path / "b.ndjson"),
         [{"ts": "2024-01-01T09:10:00Z", "user_id": 1, "event_type": "view", "value": 6.0}],
     )
-    ev = _events_stream(spark, tmp_path).select("user_id", "value")
-    res = run_to_memory(stateful_user_totals(ev), "t_stateful", "update")
+    ev = _events_stream(spark, tmp_path).select("user_id", "event_type", "value")
+    res = run_to_memory(stateful_user_profile(ev), "t_stateful", "update").select(
+        "user_id", "n_events", "total_value"
+    )
     # update mode emitted user 1 twice (n=2 then n=3); the running total is
     # the max-n emission per user
     emissions = [tuple(r) for r in res.filter("user_id = 1").collect()]
@@ -736,3 +738,51 @@ def test_scratch_checkpoint_base_env_override(tmp_path, monkeypatch):
     d1 = _scratch_checkpoint("ckpt_test_")
     d2 = _scratch_checkpoint("ckpt_test_")
     assert d1.startswith("s3a://bucket/ckpts/ckpt_test_") and d1 != d2
+
+
+def test_default_checkpoint_is_deleted_after_every_drain(
+    spark, tmp_path, monkeypatch
+):
+    """A drain given no ``checkpoint=`` runs on a fresh scratch checkpoint
+    that no later drain can find; the drain deletes it once the query has
+    stopped — after success, after a timeout and after a failed batch —
+    and the results read as before."""
+    from postgres_etl_pipeline_spark.streaming.runner import (
+        STREAM_CHECKPOINT_BASE_ENV,
+        run_upsert_sink,
+    )
+
+    base = tmp_path / "ckpts"
+    base.mkdir()
+    monkeypatch.setenv(STREAM_CHECKPOINT_BASE_ENV, str(base))
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_ndjson(
+        str(src / "a.ndjson"),
+        [_txn("r1", "t-1", "2024-01-01T10:00:00Z", qty=1),
+         _txn("r1", "t-2", "2024-01-01T10:05:00Z", qty=2)],
+    )
+
+    def txns():
+        return stream_ndjson_txns(spark, str(src))
+
+    res = run_to_memory(txns(), "t_scratch_ckpt", "append")
+    assert sorted(r.txn_id for r in res.collect()) == ["t-1", "t-2"]
+    assert list(base.iterdir()) == []
+
+    target = str(tmp_path / "stg")
+    run_upsert_sink(txns(), target, ["run_id", "txn_id"], ["event_time"])
+    got = {r.txn_id: r.quantity for r in spark.read.parquet(target).collect()}
+    assert got == {"t-1": 1, "t-2": 2}
+    assert list(base.iterdir()) == []
+
+    # PySpark rejects a timeout of 0; no drain finishes within 1 ms
+    with pytest.raises(TimeoutError):
+        run_to_memory(txns(), "t_scratch_timeout", "append", timeout_s=0.001)
+    assert spark.streams.active == []
+    assert list(base.iterdir()) == []
+
+    with pytest.raises(Exception, match="no_such_key"):
+        run_upsert_sink(txns(), target, ["no_such_key"], ["event_time"])
+    assert spark.streams.active == []
+    assert list(base.iterdir()) == []
